@@ -41,7 +41,11 @@ from curatorhadoopinterface_spark.operators.dedup import (
     _MINHASH_AGG_ORACLE,
     _SHINGLES_ORACLE,
     _band_explode,
+    _band_pairs,
+    _jaccard,
     _minhash_doc_agg,
+    _near_dup,
+    _overlap,
     _shingles,
     BAND_SIZE,
     N_HASHES,
@@ -175,29 +179,16 @@ def contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     doc_agg = _minhash_doc_agg(spark, sf_dir)
     bands = _band_explode(doc_agg)
-    eval_b = bands.filter(F.col("doc_id") % EVAL_MOD == 0).alias("e")
-    train_b = bands.filter(F.col("doc_id") % EVAL_MOD != 0).alias("t")
-    cands = (
-        train_b.join(
-            eval_b,
-            (F.col("t.band_id") == F.col("e.band_id"))
-            & (F.col("t.band_key") == F.col("e.band_key")),
-        )
-        .select(
-            F.col("t.doc_id").alias("train_id"),
-            F.col("e.doc_id").alias("eval_id"),
-        )
-        .distinct()
-    )
-    sets = doc_agg.select("doc_id", "s")
-    jac = F.size(F.array_intersect(F.col("st.s"), F.col("se.s"))) / F.size(
-        F.array_union(F.col("st.s"), F.col("se.s"))
+    cands = _band_pairs(
+        bands.filter(F.col("doc_id") % EVAL_MOD != 0),
+        bands.filter(F.col("doc_id") % EVAL_MOD == 0),
+        ("train_id", "eval_id"),
+        ordered=False,
     )
     return (
-        cands.join(sets.alias("st"), F.col("st.doc_id") == F.col("train_id"))
-        .join(sets.alias("se"), F.col("se.doc_id") == F.col("eval_id"))
-        .filter(jac >= VERIFY_J)
-        .select("train_id", "eval_id", jac.alias("jaccard"))
+        _overlap(cands, doc_agg.select("doc_id", "s"), "train_id", "eval_id")
+        .where(_near_dup())
+        .select("train_id", "eval_id", _jaccard().alias("jaccard"))
     )
 
 

@@ -9,7 +9,17 @@ LLM-pipeline rows; exact dedup lives in relational.py).
 - dedup_simhash: 16-bit SimHash signatures from per-word md5 bits;
   identical signatures = near-dup buckets.
 - dedup_ngram_jaccard: exact n-gram Jaccard on adjacent-id pairs
-  (the verify primitive in isolation).
+  (the verify arithmetic in isolation).
+
+The whole MinHash family shares two primitives: ``_band_pairs`` (the
+distinct LSH candidates of an equi-join on (band_id, band_key)) and
+``_overlap`` (the shingle-overlap verify that adds ``n_common``,
+``n_a`` and ``n_b`` to any candidate relation). Both rest on one
+invariant: ``shingle_explode`` emits DISTINCT shingles per doc, so a
+collected set never repeats an element and |A u B| = n_a + n_b -
+n_common exactly — every Jaccard and containment is integer arithmetic
+on those three counts, with one array_intersect per pair and no union
+array ever built.
 
 Determinism contract: every hash is md5 over an explicit string, and
 MinHash takes the lexicographic MIN of hex digests — reproducible in
@@ -20,7 +30,7 @@ hard part #3).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from curatorhadoopinterface_spark.operators import query
 from curatorhadoopinterface_spark.session import ensure_min_partitions, load_table
@@ -194,24 +204,17 @@ def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the exact-Jaccard verify) — exposed so the scale harness
     (tools/stress_dedup.py, SCALE.md) can measure candidate growth
     against the all-pairs quadratic baseline."""
-    cands, _ = _minhash_core(spark, sf_dir)
+    cands, _ = _minhash_core(_minhash_doc_agg(spark, sf_dir))
     return cands
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs `(doc_a, doc_b, jaccard)`, doc_a < doc_b."""
-    cands, sets = _minhash_core(spark, sf_dir)
-    jac = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s"))) / F.size(
-        F.array_union(F.col("sa.s"), F.col("sb.s"))
-    )
+    cands, sets = _minhash_core(_minhash_doc_agg(spark, sf_dir))
     return (
-        cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .filter(jac >= VERIFY_J)
-        # int/int division of identical ints is bit-identical across
-        # engines — no rounding needed (rounding could HALF_UP/HALF_EVEN
-        # diverge on power-of-two denominators)
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        _overlap(cands, sets)
+        .where(_near_dup())
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
     )
 
 
@@ -380,34 +383,11 @@ def _minhash_class_core(
     )
     if checkpoint:
         doc_agg = doc_agg.localCheckpoint(eager=True)
-    bands = _band_explode(doc_agg)
-    a, b = bands.alias("a"), bands.alias("b").hint("shuffle_hash")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("rep_a"), F.col("b.doc_id").alias("rep_b")
-        )
-        .distinct()
-    )
-    sets = doc_agg.select("doc_id", "s").hint("shuffle_hash")
-    inter = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s")))
-    uni = F.size(F.array_union(F.col("sa.s"), F.col("sb.s")))
+    cands, sets = _minhash_core(doc_agg, ("rep_a", "rep_b"))
     ver = (
-        cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("rep_a"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("rep_b"))
-        .select(
-            "rep_a",
-            "rep_b",
-            (inter * 1000).alias("i1000"),
-            uni.alias("u"),
-        )
-        .select("rep_a", "rep_b", F.expr("i1000 div u").alias("jac_permille"))
-        .where(F.col("jac_permille") >= VERIFY_J_PERMILLE)
+        _overlap(cands, sets, "rep_a", "rep_b")
+        .where(_near_dup())
+        .select("rep_a", "rep_b", _jac_permille().alias("jac_permille"))
     )
     return classes, doc_agg, ver
 
@@ -440,15 +420,15 @@ def _minhash_doc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_doc_agg_over(_shingles(spark, sf_dir))
 
 
-def _band_explode(sigs: DataFrame) -> DataFrame:
+def _band_explode(
+    sigs: DataFrame, n_bands: int = N_HASHES // BAND_SIZE, r: int = BAND_SIZE
+) -> DataFrame:
     """LSH banding: (doc_id, band_id, band_key) — one posexplode of the
-    in-row band-key array, no extra shuffle."""
-    n_bands = N_HASHES // BAND_SIZE
+    in-row band-key array (``n_bands`` bands of ``r`` minhashes), no
+    extra shuffle."""
     band_keys = F.array(
         *[
-            F.concat_ws(
-                "_", *[F.col(f"h{BAND_SIZE * b + j}") for j in range(BAND_SIZE)]
-            )
+            F.concat_ws("_", *[F.col(f"h{r * b + j}") for j in range(r)])
             for b in range(n_bands)
         ]
     )
@@ -457,9 +437,84 @@ def _band_explode(sigs: DataFrame) -> DataFrame:
     )
 
 
-def _minhash_core(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Shared signature+LSH stages: returns (candidate pairs, shingle
-    sets keyed by doc_id).
+def _band_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    out: tuple[str, str] = ("doc_a", "doc_b"),
+    by: tuple[str, ...] = (),
+    ordered: bool = True,
+) -> DataFrame:
+    """Distinct LSH candidates ``(*by, out[0], out[1])``: the equi-join
+    of two band tables on ``(*by, band_id, band_key)`` — collisions
+    only, never the cross product. ``ordered`` keeps ``a.doc_id <
+    b.doc_id`` for self-joins; an unordered join pairs two disjoint
+    slices (batch x store, train x eval). Join hints ride on the
+    inputs, so every caller keeps its own strategy."""
+    keys = (*by, "band_id", "band_key")
+    cond = F.col(f"a.{keys[0]}") == F.col(f"b.{keys[0]}")
+    for k in keys[1:]:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    if ordered:
+        cond = cond & (F.col("a.doc_id") < F.col("b.doc_id"))
+    return (
+        a.alias("a")
+        .join(b.alias("b"), cond)
+        .select(
+            *[F.col(f"a.{k}").alias(k) for k in by],
+            F.col("a.doc_id").alias(out[0]),
+            F.col("b.doc_id").alias(out[1]),
+        )
+        .distinct()
+    )
+
+
+def _overlap(
+    cands: DataFrame, sets: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """Shingle-overlap verify: joins both sides of a candidate relation
+    to their ``(doc_id, s)`` sets and replaces the arrays by
+    ``n_common``, ``n_a`` and ``n_b``. A doc without shingles (under 3
+    words) has no set, so its candidates drop out. Hints on ``sets``
+    are the caller's."""
+    return (
+        cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col(a))
+        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col(b))
+        .select(
+            *cands.columns,
+            F.size(F.array_intersect("sa.s", "sb.s")).alias("n_common"),
+            F.size("sa.s").alias("n_a"),
+            F.size("sb.s").alias("n_b"),
+        )
+    )
+
+
+def _jaccard() -> Column:
+    """Exact Jaccard over ``_overlap``'s counts: int/int division of
+    identical ints is bit-identical across engines, so no rounding (which
+    could HALF_UP/HALF_EVEN diverge on power-of-two denominators)."""
+    return F.expr("n_common / (n_a + n_b - n_common)")
+
+
+def _jac_permille() -> Column:
+    """Jaccard in exact integer permille over ``_overlap``'s counts."""
+    return F.expr("n_common * 1000 div (n_a + n_b - n_common)")
+
+
+def _near_dup() -> Column:
+    """Jaccard >= VERIFY_J in integers: n_common / (n_a + n_b -
+    n_common) >= J  <=>  n_common * (1 + J) >= J * (n_a + n_b). n_common
+    appears once, so the filter pushed into the verify join computes one
+    array_intersect per pair."""
+    return F.expr(
+        f"n_common * {1000 + VERIFY_J_PERMILLE} >= {VERIFY_J_PERMILLE} * (n_a + n_b)"
+    )
+
+
+def _minhash_core(
+    doc_agg: DataFrame, out: tuple[str, str] = ("doc_a", "doc_b")
+) -> tuple[DataFrame, DataFrame]:
+    """Shared LSH stages over a signature+set aggregate: returns
+    (candidate pairs, shingle sets keyed by doc_id).
 
     Both the band table and the shingle-set table are POST-EXPLODE /
     array-carrying relations the planner sizes from pre-explosion scan
@@ -470,21 +525,8 @@ def _minhash_core(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     band self-join and every candidate-pair -> sets verify join are
     big-x-big EQUI joins; per-partition hash tables after an exchange
     are the plan a 1000-executor cluster wants at any SF."""
-    doc_agg = _minhash_doc_agg(spark, sf_dir)
     bands = _band_explode(doc_agg)
-    # LSH self-join: shuffle keyed by (band_id, band_key) — collisions
-    # only, never the full cross product.
-    a, b = bands.alias("a"), bands.alias("b").hint("shuffle_hash")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cands = _band_pairs(bands, bands.hint("shuffle_hash"), out)
     sets = doc_agg.select("doc_id", "s").hint("shuffle_hash")
     return cands, sets
 
@@ -633,18 +675,19 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard on adjacent-id pairs — the verify primitive
-    of dedup_minhash in isolation (O(n) pairs, no LSH)."""
+    of dedup_minhash in isolation (O(n) pairs, no LSH): one adjacent
+    self-join instead of _overlap's two set lookups, then the same
+    ``_jaccard`` arithmetic."""
     sets = _shingles(spark, sf_dir).groupBy("doc_id").agg(F.collect_list("shingle").alias("s"))
-    # array-carrying self-join: never broadcast (the _minhash_core trap)
+    # array-carrying self-join: pinned shuffled (see _minhash_core)
     a, b = sets.alias("a"), sets.alias("b").hint("shuffle_hash")
-    jac = F.size(F.array_intersect(F.col("a.s"), F.col("b.s"))) / F.size(
-        F.array_union(F.col("a.s"), F.col("b.s"))
-    )
     return a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        jac.alias("jaccard"),
-    )
+        F.size(F.array_intersect("a.s", "b.s")).alias("n_common"),
+        F.size("a.s").alias("n_a"),
+        F.size("b.s").alias("n_b"),
+    ).select("doc_a", "doc_b", _jaccard().alias("jaccard"))
 
 
 # Hamming search uses a WIDER 32-bit signature than dedup_simhash's 16
@@ -1102,9 +1145,6 @@ def dedup_minhash_tuning(
     """
     classes, doc_agg, _ver = _minhash_class_core(spark, sf_dir, checkpoint)
     sets = doc_agg.select("doc_id", "s").hint("shuffle_hash")
-    jac = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s"))) / F.size(
-        F.array_union(F.col("sa.s"), F.col("sb.s"))
-    )
     mem = classes.select("rep", "n_mem")
     # config-independent within-class pair count (shingled classes only)
     within = (
@@ -1132,49 +1172,25 @@ def dedup_minhash_tuning(
     # coalesce to 0, exactly the empty-input aggregate row the
     # per-config form produced). Measured sf0.1: 5.2 s -> ~2.5 s,
     # 146 -> ~60 stages; values row-identical (oracle-verified).
-    btabs = []
-    for cfg, (n_bands, r) in enumerate(TUNE_CONFIGS):
-        band_keys = F.array(
-            *[
-                F.concat_ws("_", *[F.col(f"h{r * b + j}") for j in range(r)])
-                for b in range(n_bands)
-            ]
+    btabs = [
+        _band_explode(doc_agg, n_bands, r).select(
+            F.lit(cfg).alias("cfg"), "doc_id", "band_id", "band_key"
         )
-        btabs.append(
-            doc_agg.select(
-                F.lit(cfg).alias("cfg"),
-                "doc_id",
-                F.posexplode(band_keys).alias("band_id", "band_key"),
-            )
-        )
+        for cfg, (n_bands, r) in enumerate(TUNE_CONFIGS)
+    ]
     bands = btabs[0]
     for t in btabs[1:]:
         bands = bands.unionByName(t)
-    # post-explode sides never broadcast (the _minhash_core trap)
-    a, b = bands.alias("a"), bands.alias("b").hint("shuffle_hash")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.cfg") == F.col("b.cfg"))
-            & (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.cfg").alias("cfg"),
-            F.col("a.doc_id").alias("rep_a"),
-            F.col("b.doc_id").alias("rep_b"),
-        )
-        .distinct()
+    cands = _band_pairs(
+        bands, bands.hint("shuffle_hash"), ("rep_a", "rep_b"), by=("cfg",)
     )
     percfg = (
-        cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("rep_a"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("rep_b"))
+        _overlap(cands, sets, "rep_a", "rep_b")
         .select(
             "cfg",
             "rep_a",
             "rep_b",
-            F.when(jac >= VERIFY_J, 1).otherwise(0).alias("ok"),
+            F.when(_near_dup(), 1).otherwise(0).alias("ok"),
         )
         .join(
             mem.select(
@@ -1369,52 +1385,14 @@ def dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # minhash stage over the survivors only (the same signature chain as
     # dedup_minhash, restricted via a semi join)
-    sh = _shingles(spark, sf_dir).join(
-        bow_kept.select("doc_id"), "doc_id", "left_semi"
-    ).withColumn(
-        "v", F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("bigint")
-    )
-    doc_agg = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("v") + F.lit(MINHASH_B[i])) % MINHASH_P
-            ).alias(f"h{i}")
-            for i in range(N_HASHES)
-        ],
-        F.collect_list("shingle").alias("s"),
-    )
-    n_bands = N_HASHES // BAND_SIZE
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                "_", *[F.col(f"h{BAND_SIZE * b + j}") for j in range(BAND_SIZE)]
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = doc_agg.select(
-        "doc_id", F.posexplode(band_keys).alias("band_id", "band_key")
-    )
-    # post-explode sides never broadcast (the _minhash_core trap)
-    a, b = bands.alias("a"), bands.alias("b").hint("shuffle_hash")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    doc_agg = _minhash_doc_agg_over(
+        _shingles(spark, sf_dir).join(
+            bow_kept.select("doc_id"), "doc_id", "left_semi"
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sets = doc_agg.select("doc_id", "s").hint("shuffle_hash")
-    jac = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s"))) / F.size(
-        F.array_union(F.col("sa.s"), F.col("sb.s"))
     )
     mh_dropped = (
-        cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .filter(jac >= VERIFY_J)
+        _overlap(*_minhash_core(doc_agg))
+        .where(_near_dup())
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -1847,23 +1825,19 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_common * 5 >= 4 * min(|A|,|B|)) — no float ratio; the reported
     containments are int/int divisions of identical ints (bit-identical
     across engines, the dedup_minhash jaccard note)."""
-    cands, sets = _minhash_core(spark, sf_dir)
-    n_common = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s")))
-    n_a, n_b = F.size(F.col("sa.s")), F.size(F.col("sb.s"))
+    cands, sets = _minhash_core(_minhash_doc_agg(spark, sf_dir))
+    n_common = F.col("n_common")
     return (
-        cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .filter(
-            n_common * CONTAIN_T_DEN >= CONTAIN_T_NUM * F.least(n_a, n_b)
-        )
+        _overlap(cands, sets)
+        .where(n_common * CONTAIN_T_DEN >= CONTAIN_T_NUM * F.least("n_a", "n_b"))
         .select(
             "doc_a",
             "doc_b",
-            n_common.alias("n_common"),
-            n_a.alias("n_a"),
-            n_b.alias("n_b"),
-            (n_common / n_a).alias("contain_a"),
-            (n_common / n_b).alias("contain_b"),
+            "n_common",
+            "n_a",
+            "n_b",
+            (n_common / F.col("n_a")).alias("contain_a"),
+            (n_common / F.col("n_b")).alias("contain_b"),
         )
     )
 
@@ -1905,35 +1879,18 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash (one scan, one doc_id exchange for sig+set)."""
     doc_agg = _minhash_doc_agg(spark, sf_dir)
     bands = _band_explode(doc_agg)
-    # post-explode band tables must never broadcast (the _minhash_core
-    # sizing trap); build the BATCH side per-partition — it's the small
-    # side (days of data vs the whole store) at any real scale
+    # build the BATCH side per-partition — it's the small side (days of
+    # data vs the whole store) at any real scale
     batch = bands.filter(F.col("doc_id") % INGEST_MOD != 0).hint(
         "shuffle_hash"
     )
     store = bands.filter(F.col("doc_id") % INGEST_MOD == 0)
-    cands = (
-        batch.alias("b")
-        .join(
-            store.alias("s"),
-            (F.col("b.band_id") == F.col("s.band_id"))
-            & (F.col("b.band_key") == F.col("s.band_key")),
-        )
-        .select(
-            F.col("b.doc_id").alias("batch_doc"),
-            F.col("s.doc_id").alias("store_doc"),
-        )
-        .distinct()
-    )
+    cands = _band_pairs(batch, store, ("batch_doc", "store_doc"), ordered=False)
     sets = doc_agg.select("doc_id", "s").hint("shuffle_hash")
-    jac = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s"))) / F.size(
-        F.array_union(F.col("sa.s"), F.col("sb.s"))
-    )
     return (
-        cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("batch_doc"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("store_doc"))
-        .filter(jac >= VERIFY_J)
-        .select("batch_doc", "store_doc", jac.alias("jaccard"))
+        _overlap(cands, sets, "batch_doc", "store_doc")
+        .where(_near_dup())
+        .select("batch_doc", "store_doc", _jaccard().alias("jaccard"))
     )
 
 
@@ -1977,20 +1934,7 @@ def dedup_containment_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash on that corpus. All counts exact integers; same
     bounded LSH candidate set, aggregates crossed as 1-row scalar
     subqueries (graph_triangles pattern)."""
-    cands, sets = _minhash_core(spark, sf_dir)
-    n_common = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s")))
-    n_a, n_b = F.size(F.col("sa.s")), F.size(F.col("sb.s"))
-    scored = (
-        cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            n_common.alias("n_common"),
-            n_a.alias("n_a"),
-            n_b.alias("n_b"),
-        )
-    )
+    scored = _overlap(*_minhash_core(_minhash_doc_agg(spark, sf_dir)))
     # r9: ONE aggregate pass instead of two branches crossed — the old
     # scored.agg x kept.agg crossJoin re-executed the whole
     # minhash-core + verify-join subtree once per branch (no exchange
@@ -2105,8 +2049,8 @@ def dedup_minhash_recall(
     sample-member x other-members combinations over each cold list —
     at most cap-per-posting fan-out, the standard bounded-posting
     trade, honest because the cap and the dropped-shingle count ship
-    in the output row. Jaccard is n_inter / (|q| + |c| - n_inter)
-    over the capped shingle space, exact integers in both engines.
+    in the output row. The truth cut is _near_dup over the co-count
+    n_common and the capped set sizes, exact integers in both engines.
     The LSH side reuses the exact _minhash_core candidates. Counts
     crossed as 1-row aggregates; recall is exact integer per-mille.
 
@@ -2121,17 +2065,7 @@ def dedup_minhash_recall(
     if checkpoint:
         doc_agg = doc_agg.localCheckpoint(eager=True)
     bands = _band_explode(doc_agg)
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cands = _band_pairs(bands, bands)
     sh = doc_agg.select("doc_id", F.explode("s").alias("shingle"))
     # r9 second pass: ground-truth pairs come from a MAP-SIDE
     # combination explode over each cold posting list (sample member x
@@ -2174,21 +2108,18 @@ def dedup_minhash_recall(
             ).alias("p")
         )
         .groupBy(F.col("p.q_id").alias("q_id"), F.col("p.c_id").alias("c_id"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
     )
     truth = (
         inter.join(
-            sizes.select(F.col("doc_id").alias("q_id"), F.col("n_sh").alias("nq")),
+            sizes.select(F.col("doc_id").alias("q_id"), F.col("n_sh").alias("n_a")),
             "q_id",
         )
         .join(
-            sizes.select(F.col("doc_id").alias("c_id"), F.col("n_sh").alias("nc")),
+            sizes.select(F.col("doc_id").alias("c_id"), F.col("n_sh").alias("n_b")),
             "c_id",
         )
-        .filter(
-            F.col("n_inter") / (F.col("nq") + F.col("nc") - F.col("n_inter"))
-            >= VERIFY_J
-        )
+        .filter(_near_dup())
         .select("q_id", "c_id")
     )
     found = (
@@ -2321,44 +2252,25 @@ def dedup_containment_classes(
     member counts join rep-keyed (never broadcast — classes scale with
     the corpus); the report is 1-row scalar aggregates crossed
     broadcast (graph_triangles pattern)."""
-    # r9: the signature aggregate (rep_agg) fed FIVE consumers (both
-    # band self-join sides, both verify-set lookups, within_stats) and
-    # was an inline copy of _minhash_class_core's doc_agg — each
-    # consumer re-derived the scan+shingle+signature chain. Reuse the
-    # shared core (whose doc_agg is eagerly checkpointed, batch-10
-    # discipline; its lazy `ver` branch is unused here and costs
-    # nothing), and checkpoint the narrow classes relation for its
-    # three remaining consumers (mem x2, within_stats).
+    # the signature aggregate (rep_agg) feeds FIVE consumers (both band
+    # self-join sides, both verify-set lookups, within_stats): the
+    # shared core checkpoints it eagerly (its lazy `ver` branch is
+    # unused here and costs nothing); the narrow classes relation is
+    # checkpointed for its three remaining consumers (mem x2,
+    # within_stats).
     classes, rep_agg, _ver = _minhash_class_core(spark, sf_dir, checkpoint)
     if checkpoint:
         classes = classes.localCheckpoint(eager=True)
-    bands = _band_explode(rep_agg)
-    a, b = bands.alias("a"), bands.alias("b").hint("shuffle_hash")
-    ccands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("rep_a"), F.col("b.doc_id").alias("rep_b")
-        )
-        .distinct()
-    )
-    sets = rep_agg.select("doc_id", "s").hint("shuffle_hash")
+    ccands, sets = _minhash_core(rep_agg, ("rep_a", "rep_b"))
     mem = classes.select("rep", "n_mem").hint("shuffle_hash")
     scored = (
-        ccands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("rep_a"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("rep_b"))
+        _overlap(ccands, sets, "rep_a", "rep_b")
         .join(mem.alias("ma"), F.col("ma.rep") == F.col("rep_a"))
         .join(mem.alias("mb"), F.col("mb.rep") == F.col("rep_b"))
         .select(
-            F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s"))).alias(
-                "n_common"
-            ),
-            F.size(F.col("sa.s")).alias("n_a"),
-            F.size(F.col("sb.s")).alias("n_b"),
+            "n_common",
+            "n_a",
+            "n_b",
             F.col("ma.n_mem").alias("m_a"),
             F.col("mb.n_mem").alias("m_b"),
         )
@@ -2586,17 +2498,8 @@ def dedup_allpairs_prefix(
     sets = sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("s")).hint(
         "shuffle_hash"
     )
-    inter = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s")))
-    ver = (
-        cand.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("rep_a"))
-        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("rep_b"))
-        .select(
-            "rep_a",
-            "rep_b",
-            (inter * 1000).alias("i1000"),
-            (F.col("sz_a") + F.col("sz_b") - inter).alias("u"),
-        )
-        .select("rep_a", "rep_b", F.expr("i1000 div u").alias("jac_permille"))
+    ver = _overlap(cand, sets, "rep_a", "rep_b").select(
+        "rep_a", "rep_b", _jac_permille().alias("jac_permille")
     )
     # class sizes join rep-keyed and stay shuffled: |classes| scales
     # with distinct content, never broadcast-size by assumption.

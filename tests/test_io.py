@@ -66,3 +66,27 @@ def test_serialized_records_roundtrip(spark, corpus, tmp_path):
     orig = {(r.identifier, r.raw_text) for r in corpus.collect()}
     got = {(r.identifier, r.raw_text) for r in back.collect()}
     assert got == orig
+
+
+def test_load_table_rewritten_file_replaces_cache_entry(spark, tmp_path):
+    """A parquet file rewritten at the same path is re-read with its new
+    schema, and the session cache keeps ONE entry for that path; a
+    directory dataset is never cached."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from curatorhadoopinterface_spark.session import _TABLE_CACHE, load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    n_entries = len(_TABLE_CACHE[spark])
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a", "b"]
+    assert len(_TABLE_CACHE[spark]) == n_entries
+    assert _TABLE_CACHE[spark][path][2].columns == ["a", "b"]
+    ddir = tmp_path / "d.parquet"
+    ddir.mkdir()
+    pq.write_table(pa.table({"a": [1]}), str(ddir / "part-0.parquet"))
+    assert load_table(spark, str(tmp_path), "d").count() == 1
+    assert str(ddir) not in _TABLE_CACHE[spark]

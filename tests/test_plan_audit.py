@@ -57,6 +57,7 @@ CRITICAL = [
     "dedup_embed_cosine_census",
     "dedup_cascade",
     "dedup_containment",
+    "dedup_containment_census",
     "dedup_containment_classes",
     "dedup_incremental_minhash",
     "dedup_source_overlap",

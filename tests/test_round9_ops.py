@@ -113,3 +113,66 @@ def test_tuning_class_form_equals_docpair_form(spark, tmp_path):
     # the 3x duplication guarantees within-class pairs in every config:
     # every emitted config must carry at least the within-class floor
     assert all(nc >= 3 for _, _, nc, _, _ in got)
+
+
+def test_overlap_counts_match_array_reference(spark):
+    """dedup._overlap's (n_common, n_a, n_b) and the Jaccard derived from
+    them equal the size(array_intersect) / size(array_union) reference
+    on hand-built shingle sets: disjoint, identical, a strict subset
+    (containment 1.0), a single shared shingle, and a doc under 3 words
+    (no set, so its candidate pair is dropped)."""
+    from curatorhadoopinterface_spark.operators.dedup import (
+        _jaccard,
+        _overlap,
+        shingle_explode,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d e"),  # {abc, bcd, cde}
+            (2, "f g h i"),  # disjoint from 1
+            (3, "a b c d e"),  # identical to 1
+            (4, "a b c d"),  # strict subset of 1
+            (5, "c d e x y"),  # shares only "c d e" with 1
+            (6, "a b"),  # under 3 words: no shingles
+        ],
+        "doc_id long, text string",
+    )
+    sets = shingle_explode(docs).groupBy("doc_id").agg(
+        F.collect_list("shingle").alias("s")
+    )
+    cands = spark.createDataFrame(
+        [(1, b) for b in (2, 3, 4, 5, 6)], "doc_a long, doc_b long"
+    )
+    got = {
+        (r.doc_a, r.doc_b): (r.n_common, r.n_a, r.n_b, r.jaccard)
+        for r in _overlap(cands, sets)
+        .select("*", _jaccard().alias("jaccard"))
+        .collect()
+    }
+    jac = F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s"))) / F.size(
+        F.array_union(F.col("sa.s"), F.col("sb.s"))
+    )
+    want = {
+        (r.doc_a, r.doc_b): (r.i, r.na, r.nb, r.jaccard)
+        for r in cands.join(sets.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
+        .join(sets.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect(F.col("sa.s"), F.col("sb.s"))).alias("i"),
+            F.size(F.col("sa.s")).alias("na"),
+            F.size(F.col("sb.s")).alias("nb"),
+            jac.alias("jaccard"),
+        )
+        .collect()
+    }
+    assert got == want
+    assert got == {
+        (1, 2): (0, 3, 2, 0.0),
+        (1, 3): (3, 3, 3, 1.0),
+        (1, 4): (2, 3, 2, 2 / 3),
+        (1, 5): (1, 3, 3, 1 / 5),
+    }
+    n_common, _, n_b, _ = got[(1, 4)]
+    assert n_common == n_b  # containment of doc 4 in doc 1 is 1.0

@@ -1221,6 +1221,18 @@ AUDITS["ts_anomaly_residual"] = {
     "no_bnlj": False,
     "prune": ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"],
 }
+# the MinHash family verifies through dedup._overlap's distinct-set
+# counts (|A u B| = n_a + n_b - n_common): no per-pair union array
+for _name in (
+    "dedup_minhash", "dedup_minhash_classes", "dedup_clusters",
+    "dedup_clusters_classes", "dedup_keep_best", "dedup_keep_best_classes",
+    "dedup_minhash_tuning", "dedup_cascade", "dedup_containment",
+    "dedup_containment_census", "dedup_containment_classes",
+    "dedup_incremental_minhash", "dedup_minhash_recall",
+    "dedup_allpairs_prefix", "dedup_ngram_jaccard", "dedup_method_agreement",
+    "contamination_minhash",
+):
+    AUDITS[_name].setdefault("forbid", []).append(r"array_union")
 
 # Explicit exemptions: queries whose registered callable executes a
 # Structured Streaming pipeline to completion (availableNow trigger) and

@@ -15,14 +15,14 @@ window can no longer own all samples of one query, the r7 false-breach
 mode); ``queries`` reports the MIN across the time-separated samples,
 and ``detail`` adds min/median/max, a ``load_suspect`` flag when
 median/min exceeds 3x (one pass sat in a contention window), plus the
-stage count and shuffle read/write bytes of the final pass, taken from
-the Spark AppStatusStore. Three fixed calibration probes (scan /
-shuffle / agg) run at suite start+end and their ratio to a committed
-quiet-machine reference is recorded as ``env_factor`` — divide
-round-over-round walls by it before calling anything a regression.
-Unchanged code whose min moves <20% round-over-round with identical
-stage/shuffle counts is load; a shuffle-byte or stage-count delta is a
-plan change.
+final pass's ``profile()`` record (build/plan/exec split, stages,
+tasks, CPU, shuffle read/write, spill, micro-batches). Three fixed
+calibration probes (scan / shuffle / agg) run at suite start+end and
+their ratio to a committed quiet-machine reference is recorded as
+``env_factor`` — divide round-over-round walls by it before calling
+anything a regression. Unchanged code whose min moves <20%
+round-over-round with identical stage/shuffle counts is load; a
+shuffle-byte or stage-count delta is a plan change.
 """
 
 from __future__ import annotations
@@ -31,9 +31,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from curatorhadoopinterface_spark.profile import profile, warm  # noqa: E402
 
 HEADLINE = [
     "flagship_pricing_summary",
@@ -268,72 +269,6 @@ N_RUNS = 3
 ORCHESTRATION = {n for n in OPTIONAL if n.startswith("stream_")}
 
 
-def _stage_snapshot(spark) -> dict:
-    """(stageId, attempt) -> (shuffle_read_bytes, shuffle_write_bytes)
-    for every stage the AppStatusStore currently retains."""
-    try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        gw = spark.sparkContext._gateway
-        # Scala defaults are invisible to py4j: pass all five args
-        # (statuses=[] means ALL, details=False, withSummaries=False,
-        # quantiles=[], taskStatus=[])
-        seq = store.stageList(
-            gw.jvm.java.util.ArrayList(),
-            False,
-            False,
-            gw.new_array(gw.jvm.double, 0),
-            gw.jvm.java.util.ArrayList(),
-        )
-        out = {}
-        for i in range(seq.size()):
-            s = seq.apply(i)
-            out[(s.stageId(), s.attemptId())] = (
-                s.shuffleReadBytes(),
-                s.shuffleWriteBytes(),
-            )
-        return out
-    except Exception:
-        return {}
-
-
-def _run_once(qfn, spark, sf_dir: str, capture_fp: bool):
-    """ONE end-to-end execution. Returns (seconds, fingerprint-or-None,
-    batch_ms-or-None). The stage/shuffle fingerprint and streaming
-    micro-batch log are captured only when ``capture_fp`` (the final
-    interleaved pass) to keep the other passes' timed windows clean."""
-    from curatorhadoopinterface_spark.streaming import ops as stream_ops
-
-    before = _stage_snapshot(spark) if capture_fp else None
-    stream_ops.BATCH_LOG.clear()
-    t0 = time.time()
-    df = qfn(spark, sf_dir)
-    df.write.mode("overwrite").format("noop").save()
-    sec = time.time() - t0
-    fp = None
-    if before is not None:
-        # listener bus is async; let the final events land (outside
-        # the timed window)
-        time.sleep(0.4)
-        after = _stage_snapshot(spark)
-        new = {k: v for k, v in after.items() if k not in before}
-        fp = {
-            "stages": len(new),
-            "shuffle_read_mb": round(sum(v[0] for v in new.values()) / 1e6, 2),
-            "shuffle_write_mb": round(sum(v[1] for v in new.values()) / 1e6, 2),
-        }
-    batch_ms = None
-    batches = [b for b in stream_ops.BATCH_LOG if b.get("trigger_ms") is not None]
-    if capture_fp and batches:
-        ms = [b["trigger_ms"] for b in batches]
-        batch_ms = {
-            "n_batches": len(ms),
-            "sum": sum(ms),
-            "max": max(ms),
-            "per_batch": ms,
-        }
-    return sec, fp, batch_ms
-
-
 # ---- environment calibration --------------------------------------------
 # Three fixed probes (pure scan / pure shuffle / pure agg) run at suite
 # START and END; their ratio against the committed quiet-machine
@@ -352,21 +287,15 @@ def _cal_probes(spark, sf_dir: str) -> dict:
     from curatorhadoopinterface_spark.session import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
-    out = {}
-    t0 = time.time()
-    li.write.mode("overwrite").format("noop").save()
-    out["scan"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    li.repartition(32, "l_orderkey").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    out["shuffle"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    li.groupBy("l_orderkey").agg(
-        F.sum("l_quantity"), F.count(F.lit(1))
-    ).write.mode("overwrite").format("noop").save()
-    out["agg"] = round(time.time() - t0, 3)
-    return out
+    probes = {
+        "scan": li,
+        "shuffle": li.repartition(32, "l_orderkey"),
+        "agg": li.groupBy("l_orderkey").agg(F.sum("l_quantity"), F.count(F.lit(1))),
+    }
+    return {
+        k: profile(lambda s, d, df=df: df, spark, sf_dir)["sec"]
+        for k, df in probes.items()
+    }
 
 
 # quiet-machine reference for the probes at sf0.1 / local[32]
@@ -393,13 +322,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
-    # warm the JVM/codegen paths outside the measured window
-    qs["flagship_pricing_summary"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # ... and the Python-worker/Arrow path (daemon + worker fork per core
-    # is a one-time session cost, not an operator cost)
-    spark.range(64).repartition(64).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).write.mode("overwrite").format("noop").save()
+    warm(spark, sf_dir)
 
     names = [n for n in HEADLINE + OPTIONAL if n in qs]
 
@@ -411,17 +334,11 @@ def main() -> None:
     # transient contention window can no longer own all of them; min is
     # taken across time-separated samples.
     samples: dict[str, list] = {n: [] for n in names}
-    fps: dict[str, dict] = {}
-    batch: dict[str, dict] = {}
-    for p in range(N_RUNS):
-        final = p == N_RUNS - 1
+    last: dict[str, dict] = {}  # each query's final-pass record
+    for _ in range(N_RUNS):
         for name in names:
-            sec, fp, bms = _run_once(qs[name], spark, sf_dir, final)
-            samples[name].append(sec)
-            if fp is not None:
-                fps[name] = fp
-            if bms is not None:
-                batch[name] = bms
+            last[name] = profile(qs[name], spark, sf_dir)
+            samples[name].append(last[name]["sec"])
 
     cal_end = _cal_probes(spark, sf_dir)
     env_factor = None
@@ -439,7 +356,7 @@ def main() -> None:
             "min": round(min(ss), 3),
             "median": round(statistics.median(ss), 3),
             "max": round(max(ss), 3),
-            **fps.get(name, {}),
+            **{k: v for k, v in last[name].items() if k not in ("sec", "top_stages")},
         }
         # spread across time-separated passes: a >LOAD_SPREAD gap means
         # at least one pass ran inside a contention window — the MIN is
@@ -447,8 +364,6 @@ def main() -> None:
         d["load_suspect"] = (
             d["median"] / d["min"] > LOAD_SPREAD if d["min"] > 0 else False
         )
-        if name in batch:
-            d["batch_ms"] = batch[name]
         times[name] = d["min"]
         detail[name] = d
 

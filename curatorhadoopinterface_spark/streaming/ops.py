@@ -88,8 +88,8 @@ def stream_width(spark: SparkSession):
 # micro-batch, from StreamingQueryProgress. Wall time of a drain is
 # mostly trigger/watermark ORCHESTRATION latency; per-batch
 # triggerExecution is the number that regresses when an operator inside
-# the stream regresses — bench.py snapshots this around each
-# orchestration-tagged query and versions it in BENCH_DETAIL.json.
+# the stream regresses — profile.profile() reads it around each query
+# and bench.py versions it in BENCH_DETAIL.json.
 BATCH_LOG: list[dict] = []
 
 

@@ -1,122 +1,114 @@
-"""Isolated per-query timing + plan capture (optimization rounds).
+"""Time declared queries end to end: one ``profile()`` record per rung.
 
 Usage:
-  python tools/qtime.py [--runs N] [--plan-dir DIR] [--sf-dir DIR] name [name ...]
+  python tools/qtime.py [--runs N] [--plan-dir DIR] [--sf-dir DIR ...]
+                        [--fork] [name ...]
 
-Times each named declared query end-to-end with the noop sink (guide
-1.4), min over N runs (default 3), after one untimed warm-up of the
-session's JVM/Arrow paths. Optionally writes .explain("formatted") to
-<plan-dir>/<name>.txt. Prints one JSON line per query:
-  {"name": ..., "min": s, "runs": [s, ...], "stages": n,
-   "shuffle_read_mb": x, "shuffle_write_mb": x}
+With no names every declared query is timed. Each query first gets one
+untimed warm-up at ``session.DEFAULT_SF_DIR`` (generated code is the same
+at every sf, so compile cost stays out of the first rung), then N
+profiled runs (default 3) at each ``--sf-dir`` (default
+DEFAULT_SF_DIR). A query's rungs run back to back in one session, so
+machine load hits them alike and the ``ratio`` (last rung's best over
+the first's, on the last rung's row) is the growth signal.
+
+Prints one JSON line per query and rung: the fastest run's record
+(``sec`` = ``build_s`` + ``exec_s``, ``plan_s``, stage totals,
+``top_stages``, micro-batches) plus ``runs``, every run's ``sec``. An
+unknown name, a failed query or a dead rung prints an error row and the
+run goes on.
+
+--plan-dir DIR  write each query's .explain("formatted") to DIR/<name>.txt
+--fork          one process (one Spark session) per query: a long session
+                piles up shuffle files and localCheckpoint blocks across
+                queries, and at sf30 that filled the disk
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import subprocess
 import sys
-import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entrymod  # noqa: E402
+from curatorhadoopinterface_spark.profile import profile, warm  # noqa: E402
+from curatorhadoopinterface_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
 
-def _stage_snapshot(spark) -> dict:
+
+def _emit(row: dict) -> None:
+    print(json.dumps(row), flush=True)
+
+
+def _fail(row: dict, exc: Exception) -> None:
+    """Report a failed query or rung and let the run go on."""
+    traceback.print_exc()
+    _emit({**row, "error": (str(exc).strip().splitlines() or [type(exc).__name__])[0][:200]})
+
+
+def _time_query(spark, qfn, name: str, args, sf_dirs: list[str]) -> None:
     try:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        gw = spark.sparkContext._gateway
-        seq = store.stageList(
-            gw.jvm.java.util.ArrayList(),
-            False,
-            False,
-            gw.new_array(gw.jvm.double, 0),
-            gw.jvm.java.util.ArrayList(),
-        )
-        out = {}
-        for i in range(seq.size()):
-            s = seq.apply(i)
-            out[(s.stageId(), s.attemptId())] = (
-                s.shuffleReadBytes(),
-                s.shuffleWriteBytes(),
-            )
-        return out
-    except Exception:
-        return {}
+        profile(qfn, spark, DEFAULT_SF_DIR)
+        if args.plan_dir:
+            df = qfn(spark, sf_dirs[0])
+            with open(os.path.join(args.plan_dir, f"{name}.txt"), "w") as fh:
+                fh.write(df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"))
+    except Exception as exc:
+        _fail({"name": name}, exc)
+        return
+    best = {}
+    for sf_dir in sf_dirs:
+        try:
+            recs = [profile(qfn, spark, sf_dir) for _ in range(args.runs)]
+        except Exception as exc:
+            _fail({"name": name, "sf_dir": sf_dir}, exc)
+            continue
+        best[sf_dir] = min(recs, key=lambda r: r["sec"])
+        row = {"name": name, "sf_dir": sf_dir, "runs": [r["sec"] for r in recs]}
+        if len(sf_dirs) > 1 and sf_dir == sf_dirs[-1] and sf_dirs[0] in best:
+            row["ratio"] = round(best[sf_dir]["sec"] / max(best[sf_dirs[0]]["sec"], 1e-3), 2)
+        _emit({**row, **best[sf_dir]})
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    runs = 3
-    plan_dir = None
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--runs":
-            runs = int(args[i + 1]); i += 2
-        elif args[i] == "--plan-dir":
-            plan_dir = args[i + 1]; i += 2
-        elif args[i] == "--sf-dir":
-            sf_dir = args[i + 1]; i += 2
-        else:
-            names.append(args[i]); i += 1
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--plan-dir")
+    ap.add_argument("--sf-dir", action="append", dest="sf_dirs")
+    ap.add_argument("--fork", action="store_true")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
 
-    from curatorhadoopinterface_spark.session import get_spark
-    import __spark_entry__ as entrymod
+    sf_dirs = args.sf_dirs or [DEFAULT_SF_DIR]
+    names = args.names or list(entrymod.queries())
+    if args.plan_dir:
+        os.makedirs(args.plan_dir, exist_ok=True)
+
+    if args.fork:
+        cmd = [sys.executable, "-u", os.path.abspath(__file__), "--runs", str(args.runs)]
+        cmd += [a for d in sf_dirs for a in ("--sf-dir", d)]
+        if args.plan_dir:
+            cmd += ["--plan-dir", args.plan_dir]
+        for name in names:
+            rc = subprocess.run(cmd + [name]).returncode
+            if rc:
+                _emit({"name": name, "error": f"subprocess exited {rc}"})
+        return
 
     spark = get_spark("qtime")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-
-    # warm JVM + Python worker pool outside any timed window
-    qs["flagship_pricing_summary"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    spark.range(64).repartition(64).mapInPandas(
-        lambda it: (pdf for pdf in it), "id long"
-    ).write.mode("overwrite").format("noop").save()
-
-    if plan_dir:
-        os.makedirs(plan_dir, exist_ok=True)
-
+    warm(spark, DEFAULT_SF_DIR)
     for name in names:
-        if name not in qs:
-            print(json.dumps({"name": name, "error": "unknown query"}))
-            continue
-        if plan_dir:
-            df = qs[name](spark, sf_dir)
-            with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
-                fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
-        samples = []
-        plan_s = []
-        fp = None
-        for r in range(runs):
-            spark.sparkContext.setJobDescription(f"qtime:{name}#{r}")
-            before = _stage_snapshot(spark) if r == runs - 1 else None
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            tb = time.time()
-            # force analysis+optimization+physical planning (driver-side,
-            # per-run cost) separately from execution
-            df._jdf.queryExecution().executedPlan()
-            t1 = time.time()
-            df.write.mode("overwrite").format("noop").save()
-            samples.append(round(time.time() - t0, 3))
-            plan_s.append((round(tb - t0, 3), round(t1 - tb, 3)))
-            if before is not None:
-                time.sleep(0.4)
-                after = _stage_snapshot(spark)
-                new = {k: v for k, v in after.items() if k not in before}
-                fp = {
-                    "stages": len(new),
-                    "shuffle_read_mb": round(sum(v[0] for v in new.values()) / 1e6, 2),
-                    "shuffle_write_mb": round(sum(v[1] for v in new.values()) / 1e6, 2),
-                }
-            spark.sparkContext.setJobDescription(None)
-        row = {"name": name, "min": min(samples), "runs": samples,
-               "build_plan_s": plan_s}
-        if fp:
-            row.update(fp)
-        print(json.dumps(row), flush=True)
+        if name in qs:
+            _time_query(spark, qs[name], name, args, sf_dirs)
+        else:
+            _emit({"name": name, "error": "unknown query"})
 
 
 if __name__ == "__main__":

@@ -5,8 +5,7 @@ and Kx document volume (Kx dirs built by tools/make_stress_sf.py, which
 replicates every text K times -> K-sized exact-duplicate clusters on top
 of the base corpus), and records MEASURED (not asserted):
 
-  - wall time (best of 2)
-  - stage count + total shuffle read bytes (AppStatusStore delta)
+  - wall time, stage count and shuffle read (best of 2 profile() runs)
   - LSH candidate-pair count vs the all-pairs quadratic baseline
   - verified output rows
 
@@ -23,39 +22,21 @@ Usage: python tools/stress_dedup.py [base_sf_dir] [K]
 
 from __future__ import annotations
 
+import argparse
 import json
 import math
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def stage_snapshot(spark):
-    from bench import _stage_snapshot
-
-    return _stage_snapshot(spark)
+from curatorhadoopinterface_spark.profile import profile  # noqa: E402
+from curatorhadoopinterface_spark.session import DEFAULT_SF_DIR  # noqa: E402
 
 
-def run_measured(spark, fn, sf_dir):
-    best, stages, shuffle_read = float("inf"), 0, 0
-    n_rows = 0
-    for i in range(2):
-        before = stage_snapshot(spark)
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.mode("overwrite").format("noop").save()
-        dt = time.time() - t0
-        time.sleep(0.4)
-        after = stage_snapshot(spark)
-        if dt < best:
-            best = dt
-            new = {k: v for k, v in after.items() if k not in before}
-            stages = len(new)
-            shuffle_read = sum(v[0] for v in new.values())
-    return {"sec": round(best, 2), "stages": stages, "shuffle_mb": round(shuffle_read / 1e6, 2)}
+def best_of_2(spark, fn, sf_dir) -> dict:
+    return min((profile(fn, spark, sf_dir) for _ in range(2)), key=lambda r: r["sec"])
 
 
 def make_jittered(base: str, out: str, k: int, step: int = 5) -> None:
@@ -91,12 +72,16 @@ def make_jittered(base: str, out: str, k: int, step: int = 5) -> None:
 
 
 def main() -> None:
-    base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    jitter = "--jitter" in sys.argv
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("base", nargs="?", default=DEFAULT_SF_DIR)
+    ap.add_argument("k", nargs="?", type=int, default=10)
+    ap.add_argument("--jitter", action="store_true")
+    ap.add_argument("--heavy", action="store_true")
+    args = ap.parse_args()
+    base, k = args.base, args.k
 
-    if jitter:
-        step = 2 if "--heavy" in sys.argv else 5
+    if args.jitter:
+        step = 2 if args.heavy else 5
         dirs = [("1x", base)]
         for kk in sorted({max(2, k // 2), k}):
             out = f"/tmp/sf_jitter{step}_{kk}x"
@@ -137,9 +122,9 @@ def run_suite(dirs) -> None:
         allpairs = n_docs * (n_docs - 1) // 2
         cands = minhash_candidates(spark, d).count()
         out_pairs = dedup_minhash(spark, d).count()
-        mh = run_measured(spark, dedup_minhash, d)
-        sh = run_measured(spark, dedup_simhash_hamming, d)
-        cl = run_measured(spark, dedup_clusters, d)
+        mh = best_of_2(spark, dedup_minhash, d)
+        sh = best_of_2(spark, dedup_simhash_hamming, d)
+        cl = best_of_2(spark, dedup_clusters, d)
         rows.append(
             {
                 "scale": label,
@@ -162,7 +147,7 @@ def run_suite(dirs) -> None:
         print(
             f"| {r['scale']} | {r['n_docs']:,} | {r['allpairs']:.2e} | "
             f"{r['candidates']:,} | {r['cand_frac']:.2e} | {r['verified_pairs']:,} | "
-            f"{m['sec']} / {m['stages']} / {m['shuffle_mb']} | {s['sec']} | {c['sec']} |"
+            f"{m['sec']} / {m['stages']} / {m['shuffle_read_mb']} | {s['sec']} | {c['sec']} |"
         )
     # growth exponent: candidates ~ n^a  (a < 2 == sub-quadratic, measured)
     if len(rows) >= 2:

@@ -12,8 +12,9 @@ difference:
     stays constant, pair volume grows Kx (the production contract:
     kmeans k scales with the corpus, SemDedup paper's k=11k for LAION).
 
-Records wall time (best of 2), stage count, shuffle read bytes, and the
-exact within-cluster pair count vs the all-pairs baseline.
+Records wall time, stage count and shuffle read (best of 2 profile()
+runs), and the exact within-cluster pair count vs the all-pairs
+baseline.
 
 Usage: python tools/stress_semdedup.py [base_sf_dir] [K]
        (defaults /root/testdata/sf0.1 5; prints a markdown table)
@@ -21,13 +22,16 @@ Usage: python tools/stress_semdedup.py [base_sf_dir] [K]
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
-import time
 
 import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from curatorhadoopinterface_spark.profile import profile  # noqa: E402
+from curatorhadoopinterface_spark.session import DEFAULT_SF_DIR  # noqa: E402
 
 
 def build(src: str, out: str, k: int, shift_labels: bool) -> None:
@@ -46,23 +50,10 @@ def build(src: str, out: str, k: int, shift_labels: bool) -> None:
 
 
 def measure(spark, sf_dir: str) -> dict:
-    from bench import _stage_snapshot
     from curatorhadoopinterface_spark.operators import all_queries
 
     fn = all_queries()["dedup_semantic"]
-    best, stages, shuffle_mb = float("inf"), 0, 0.0
-    for _ in range(2):
-        before = _stage_snapshot(spark)
-        t0 = time.time()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        dt = time.time() - t0
-        time.sleep(0.4)
-        after = _stage_snapshot(spark)
-        if dt < best:
-            best = dt
-            new = {kk: v for kk, v in after.items() if kk not in before}
-            stages = len(new)
-            shuffle_mb = sum(v[0] for v in new.values()) / 1e6
+    best = min((profile(fn, spark, sf_dir) for _ in range(2)), key=lambda r: r["sec"])
     con = duckdb.connect()
     n, pairs = con.sql(
         f"""
@@ -72,9 +63,9 @@ def measure(spark, sf_dir: str) -> dict:
         """
     ).fetchone()
     return {
-        "sec": round(best, 2),
-        "stages": stages,
-        "shuffle_mb": round(shuffle_mb, 2),
+        "sec": best["sec"],
+        "stages": best["stages"],
+        "shuffle_mb": best["shuffle_read_mb"],
         "n_vecs": n,
         "cluster_pairs": pairs,
         "all_pairs": n * (n - 1) // 2,
@@ -82,8 +73,11 @@ def measure(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    k = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("src", nargs="?", default=DEFAULT_SF_DIR)
+    ap.add_argument("k", nargs="?", type=int, default=5)
+    args = ap.parse_args()
+    src, k = args.src, args.k
     fixed = "/tmp/semdedup_fixed_k"
     scaled = "/tmp/semdedup_scaled_k"
     build(src, fixed, k, shift_labels=False)

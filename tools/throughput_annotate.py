@@ -15,16 +15,22 @@ Usage: python tools/throughput_annotate.py [sf_dir] [n_runs]
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from curatorhadoopinterface_spark.profile import profile  # noqa: E402
+from curatorhadoopinterface_spark.session import DEFAULT_SF_DIR  # noqa: E402
+
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default=DEFAULT_SF_DIR)
+    ap.add_argument("n_runs", nargs="?", type=int, default=3)
+    args = ap.parse_args()
+    sf_dir, n_runs = args.sf_dir, args.n_runs
 
     import pyspark.sql.functions as F
 
@@ -44,11 +50,7 @@ def main() -> None:
     n_chars = docs.agg(F.sum(F.length("raw_text"))).collect()[0][0]
 
     def timed(label, build):
-        best = float("inf")
-        for _ in range(n_runs):
-            t0 = time.time()
-            build().write.mode("overwrite").format("noop").save()
-            best = min(best, time.time() - t0)
+        best = min(profile(lambda s, d: build(), spark, sf_dir)["sec"] for _ in range(n_runs))
         print(
             f"| {label} | {n_docs} | {best:.2f} | {n_docs / best:,.0f} |"
             f" {n_chars / best / 1e6:.1f} |"

@@ -3,7 +3,7 @@ cascading invalidation, view-count upsert (SURVEY.md A18-A23).
 
 Reference semantics being reproduced:
 - archive keyed by ``Identifier.getId(text)``; cache hit skips
-  annotation (CuratorHandler.getRecord, :468-527)            -> anti-join
+  annotation (CuratorHandler.getRecord, :468-527)            -> left join
 - a view is stale iff its ``source`` version is older than the live
   annotator's (updateRequired, :816-896)                     -> version expr
 - removing a stale view removes all transitive dependents
@@ -17,12 +17,19 @@ from the static mode registry — no Python round-trip.
 
 Scale: the store is Parquet partitioned by the first hex char of the
 SHA-1 identifier (16 uniform buckets; raise to 2 chars = 256 at real
-scale). Upserts use dynamic partition overwrite so only touched buckets
-rewrite — the non-ACID-safe but deterministic batch equivalent of the
-reference's DB upsert.
+scale), one file per bucket. An update loads the store once: the
+batch's stored copies join onto the batch with their view count, so
+hits, misses and the merge decision come from one scan, and
+``provide`` runs once. The merge rewrites only the buckets that hold a
+winner, in place, by a dynamic partition overwrite; a batch with no
+winner (all cache hits) writes nothing. This is the non-ACID but
+deterministic batch equivalent of the reference's DB upsert.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -33,75 +40,69 @@ from curatorhadoopinterface_spark.plans.registry import MODES, VIEW_TO_MODE, inv
 _BUCKET_COL = "id_bucket"
 
 
-def _registry_version_map() -> Column:
-    """MAP<view, version-string> literal from the registry."""
-    pairs: list[Column] = []
-    for m in MODES.values():
-        for v in (m.view, *m.extra_views):
-            pairs.extend([F.lit(v), F.lit(m.version)])
-    return F.create_map(*pairs)
+def _sql_map(pairs: dict[str, str]) -> str:
+    return "map(" + ", ".join(f"'{k}', {v}" for k, v in pairs.items()) + ")"
 
 
-def _closure_map() -> Column:
-    """MAP<view, ARRAY<view>> literal: view -> its invalidation closure."""
-    pairs: list[Column] = []
-    for view in VIEW_TO_MODE:
-        closure = sorted(invalidation_closure({view}))
-        pairs.extend([F.lit(view), F.array(*[F.lit(c) for c in closure])])
-    return F.create_map(*pairs)
+#: MAP<view, version-string> literal from the registry
+_REGISTRY_VERSIONS = _sql_map(
+    {v: f"'{m.version}'" for m in MODES.values() for v in (m.view, *m.extra_views)}
+)
+#: MAP<view, ARRAY<view>> literal: view -> its invalidation closure
+_CLOSURES = _sql_map(
+    {
+        view: "array(" + ", ".join(f"'{c}'" for c in sorted(invalidation_closure({view}))) + ")"
+        for view in VIEW_TO_MODE
+    }
+)
 
 
-def _version_lt(a: Column, b: Column) -> Column:
+def _version_lt(a: str, b: str) -> str:
     """version('name-X.Y') < version('name-X.Y') as (major, minor) ints
     (CuratorHandler.updateRequired's compare, :848-890)."""
 
-    def major(c: Column) -> Column:
-        return F.split(F.substring_index(c, "-", -1), r"\.").getItem(0).cast("int")
+    def part(c: str, i: int) -> str:
+        return f"cast(split(substring_index({c}, '-', -1), '[.]')[{i}] as int)"
 
-    def minor(c: Column) -> Column:
-        return F.coalesce(F.split(F.substring_index(c, "-", -1), r"\.").getItem(1).cast("int"), F.lit(0))
+    def minor(c: str) -> str:
+        return f"coalesce({part(c, 1)}, 0)"
 
-    return (major(a) < major(b)) | ((major(a) == major(b)) & (minor(a) < minor(b)))
+    return (
+        f"({part(a, 0)} < {part(b, 0)} OR ({part(a, 0)} = {part(b, 0)}"
+        f" AND {minor(a)} < {minor(b)}))"
+    )
+
+
+def _stale_views_sql(df: DataFrame) -> str:
+    # one SQL text parsed JVM-side: building the same expression from
+    # py4j lambdas took ~0.15 s per call (4-core host)
+    arrays = [
+        f"transform(filter(map_entries({col}), e -> map_contains_key({_REGISTRY_VERSIONS}, e.key)"
+        f" AND {_version_lt('e.value.source', f'{_REGISTRY_VERSIONS}[e.key]')}), e -> e.key)"
+        for col in VIEW_COLS
+        if col in df.columns
+    ]
+    return f"concat({', '.join(arrays)})" if arrays else "cast(array() as array<string>)"
 
 
 def stale_views_col(df: DataFrame) -> Column:
     """ARRAY<view> of views on each record whose source version is older
     than the registry's annotator (A22)."""
-    regmap = _registry_version_map()
-    arrays = []
-    for col in VIEW_COLS:
-        if col not in df.columns:
-            continue
-        entries = F.map_entries(F.col(col))
-        stale = F.filter(
-            entries,
-            lambda e: F.map_contains_key(regmap, e.getField("key"))
-            & _version_lt(e.getField("value").getField("source"), regmap[e.getField("key")]),
-        )
-        arrays.append(F.transform(stale, lambda e: e.getField("key")))
-    if not arrays:
-        return F.array().cast("array<string>")
-    out = arrays[0]
-    for a in arrays[1:]:
-        out = F.concat(out, a)
-    return out
+    return F.expr(_stale_views_sql(df))
 
 
 def remove_stale_views(df: DataFrame) -> DataFrame:
     """Drop stale views AND their transitive dependents per record
     (A22+A23), entirely with map_filter column expressions."""
-    closure = _closure_map()
-    drop = F.array_distinct(
-        F.flatten(F.transform(stale_views_col(df), lambda v: closure[v]))
-    )
-    out = df.withColumn("__drop", drop)
-    for col in VIEW_COLS:
-        if col in df.columns:
-            out = out.withColumn(
-                col,
-                F.map_filter(F.col(col), lambda k, _v: ~F.array_contains(F.col("__drop"), k)),
-            )
-    return out.drop("__drop")
+    drop = f"array_distinct(flatten(transform({_stale_views_sql(df)}, v -> {_CLOSURES}[v])))"
+    out = df.withColumn("__drop", F.expr(drop))
+    return out.withColumns(
+        {
+            col: F.expr(f"map_filter({col}, (k, v) -> NOT array_contains(__drop, k))")
+            for col in VIEW_COLS
+            if col in df.columns
+        }
+    ).drop("__drop")
 
 
 def view_count_col(df: DataFrame) -> Column:
@@ -125,8 +126,6 @@ class RecordStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # only touched buckets rewrite on upsert
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def load(self) -> DataFrame | None:
         try:
@@ -135,96 +134,78 @@ class RecordStore:
             return None
         return df.drop(_BUCKET_COL)
 
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(_BUCKET_COL, F.substring("identifier", 1, 1))
+    def _write(self, df: DataFrame, overwrite_mode: str) -> None:
+        """Write ``df`` one file per bucket: each bucket's rows shuffle
+        to one writer task."""
+        df.withColumn(_BUCKET_COL, F.substring("identifier", 1, 1)).repartition(
+            _BUCKET_COL
+        ).write.mode("overwrite").option("partitionOverwriteMode", overwrite_mode).partitionBy(
+            _BUCKET_COL
+        ).parquet(self.path)
 
     def write_full(self, df: DataFrame) -> None:
-        self._bucketed(df).write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(self.path)
+        self._write(df, "static")
+
+    def _dedup(self, records: DataFrame) -> DataFrame:
+        """One row per identifier. AQE does not coalesce an explicit
+        width, so the rows to annotate stay spread over every core."""
+        n = self.spark.sparkContext.defaultParallelism
+        return records.repartition(n, "identifier").dropDuplicates(["identifier"])
 
     def upsert(self, records: DataFrame, force: bool = False) -> None:
         """A18: replace a stored record only if the new copy has MORE
-        views; insert unseen records. Only touched hash buckets rewrite
-        (dynamic partition overwrite).
+        views; insert unseen records.
 
         ``force=True`` (the forceUpdate path): a freshly recomputed record
         has the SAME view count as its cached copy, so the count rule
         would keep the stale one — prefer the new copy whenever present.
         """
+        records = self._dedup(records)
         stored = self.load()
         if stored is None:
             self.write_full(records)
             return
-        new = records.withColumn("__n_new", view_count_col(records))
-        # restrict the rewrite to buckets that contain new records
-        touched = new.select(F.substring("identifier", 1, 1).alias(_BUCKET_COL)).distinct()
-        old = self._bucketed(stored).join(F.broadcast(touched), _BUCKET_COL, "inner").drop(
-            _BUCKET_COL
+        n_old = stored.select("identifier", view_count_col(stored).alias("__n_old"))
+        records = records.join(n_old, "identifier", "left").select(
+            *records.columns, F.coalesce("__n_old", F.lit(-1)).alias("__n_old")
         )
-        old = old.withColumn("__n_old", view_count_col(stored))
-        # decide winners on a NARROW (identifier, count) relation, then
-        # move the WIDE records once via semi-joins. The previous plan
-        # full-outer-joined the wide records themselves, holding BOTH
-        # copies of every annotation-view payload in the join buffers —
-        # at sf10 (500k wide records x 32 concurrent tasks in one 8g
-        # JVM) that exhausted execution memory (UNABLE_TO_ACQUIRE_MEMORY)
-        # mid-overwrite; at 100 TB it is also just the wrong shape: the
-        # decision needs 16 bytes per record, not the record.
-        dec = (
-            old.select("identifier", "__n_old")
-            .join(new.select("identifier", "__n_new"), "identifier", "full_outer")
-            .select(
-                "identifier",
-                (
-                    F.col("__n_new").isNotNull()
-                    & (
-                        F.lit(force)
-                        | F.col("__n_old").isNull()
-                        | (F.col("__n_new") > F.col("__n_old"))
-                    )
-                ).alias("__take_new"),
-            )
-        )
-        win_new = dec.where("__take_new").select("identifier")
-        win_old = dec.where("not __take_new").select("identifier")
-        picked = (
-            new.drop("__n_new")
-            .join(win_new, "identifier", "left_semi")
-            .unionByName(old.drop("__n_old").join(win_old, "identifier", "left_semi"))
-        )
-        # the merge plan READS the store files this write deletes:
-        # materialize to a STAGING dir and cut lineage by reading it
-        # back (read-before-overwrite). This replaced an eager
-        # localCheckpoint in r8: checkpoint blocks pin the full wide
-        # store in JVM block memory and OOM'd the 8g driver at sf10
-        # (500k annotation-view records); the staging parquet streams
-        # through the writers instead — the reliable-checkpoint/staging
-        # swap a real cluster would use, at any scale.
-        import shutil as _shutil
+        self._merge(records, stored, force)
 
-        # Scoped heap guard for the merge's actions: annotated Records
-        # are WIDE (every token a span struct), and the default
-        # 4096-row vectorized reader batch x 32 concurrent local tasks
+    def _merge(self, records: DataFrame, stored: DataFrame, force: bool) -> None:
+        """Store the winners of ``records``, which carry their stored
+        copy's view count as ``__n_old`` (-1 when unseen).
+
+        Only buckets holding a winner are rewritten, as their old rows
+        minus the winners plus the winners. The overwrite reads the files
+        it replaces: the commit protocol stages task output and swaps the
+        partitions at job commit, after every task has read.
+        """
+        winners = records.where(
+            F.lit(force) | (view_count_col(records) > F.col("__n_old"))
+        ).drop("__n_old")
+        # one bucket char per winner: a narrow collect, no exchange
+        buckets = {r[0] for r in winners.select(F.substring("identifier", 1, 1)).collect()}
+        if not buckets:
+            return
+        # startswith pushes down to the parquet reader, which skips the
+        # untouched buckets' row groups on their min/max statistics
+        touched = reduce(operator.or_, [F.col("identifier").startswith(b) for b in sorted(buckets)])
+        kept = stored.where(touched).join(winners.select("identifier"), "identifier", "left_anti")
+        # Scoped heap guard for the write: annotated Records are WIDE
+        # (every token a span struct), and the default 4096-row
+        # vectorized reader batch x 32 concurrent local tasks
         # intermittently heap-OOMs an 8g JVM at sf10 (500k records).
         # 512-row batches bound the in-flight columnar buffers ~8x;
         # restored after the merge so narrow scans elsewhere keep the
         # default. On a real cluster each executor holds a slice and
         # the default is fine — this is the local[32] single-JVM knob.
-        _bs_key = "spark.sql.parquet.columnarReaderBatchSize"
-        _bs_old = self.spark.conf.get(_bs_key, "4096")
-        self.spark.conf.set(_bs_key, "512")
-        staging = self.path.rstrip("/") + "_staging"
+        bs_key = "spark.sql.parquet.columnarReaderBatchSize"
+        bs_old = self.spark.conf.get(bs_key, "4096")
+        self.spark.conf.set(bs_key, "512")
         try:
-            _shutil.rmtree(staging, ignore_errors=True)
-            picked.write.parquet(staging)
-            picked = self.spark.read.parquet(staging)
-            self._bucketed(picked).write.mode("overwrite").partitionBy(
-                _BUCKET_COL
-            ).parquet(self.path)
+            self._write(winners.unionByName(kept), "dynamic")
         finally:
-            # remove staging on failure too — a failed final overwrite
-            # must not leak a full wide copy of the store (r8 ADVICE)
-            _shutil.rmtree(staging, ignore_errors=True)
-            self.spark.conf.set(_bs_key, _bs_old)
+            self.spark.conf.set(bs_key, bs_old)
 
     def provide_incremental(
         self,
@@ -237,7 +218,7 @@ class RecordStore:
         """The full memoized pipeline (A20+A21): stale-invalidate cached
         copies, reuse them for cache hits, annotate only what's missing
         (per-row), upsert enriched records back. Returns the annotated
-        corpus for ``new_records``.
+        corpus for ``new_records``, one record per identifier.
 
         ``force=True`` is the per-call forceUpdate of the reference's
         provide (curator.thrift:66): cached TARGET views are recomputed
@@ -249,29 +230,34 @@ class RecordStore:
         A forced record has the same view count as its cached copy, so
         the upsert must prefer-new whenever any recompute was requested.
         """
-        any_force = force or force_start is not None
+        kw = dict(force=force, force_start=force_start, best_effort=best_effort)
+        batch = self._dedup(new_records)
         stored = self.load()
         if stored is None:
-            annotated = provide(
-                new_records,
-                target,
-                force=force,
-                force_start=force_start,
-                best_effort=best_effort,
-            )
-            self.upsert(annotated, force=any_force)
+            annotated = provide(batch, target, **kw)
+            self.write_full(annotated)
             return annotated
-        stored = remove_stale_views(stored)
-        ids = new_records.select("identifier").distinct()
-        hits = stored.join(ids, "identifier", "left_semi")
-        misses = new_records.join(stored, "identifier", "left_anti")
-        # provide() is per-row memoized: hits recompute only dropped/missing
-        # views, misses compute everything — in ONE fused pass each.
-        kw = dict(force=force, force_start=force_start, best_effort=best_effort)
-        annotated = provide(misses, target, **kw).unionByName(
-            provide(hits, target, **kw), allowMissingColumns=True
+        # the batch's stored copies (the semi-join streams the store),
+        # with the raw copy's view count and stale views invalidated
+        copies = stored.join(new_records.select("identifier"), "identifier", "left_semi")
+        old = remove_stale_views(copies.withColumn("__n_old", view_count_col(copies)))
+        hit = F.col("s.identifier").isNotNull()
+
+        def pick(c: str) -> Column:
+            """Hits take the stored value, misses the batch value; NULL
+            where the column is missing on that side."""
+            s = F.col(f"s.{c}") if c in stored.columns else F.lit(None)
+            b = F.col(f"b.{c}") if c in batch.columns else F.lit(None)
+            return F.when(hit, s).otherwise(b).alias(c)
+
+        names = batch.columns + [c for c in stored.columns if c not in batch.columns]
+        fused = batch.alias("b").join(
+            old.alias("s"), F.col("b.identifier") == F.col("s.identifier"), "left"
+        ).select(
+            "b.identifier",
+            *[pick(c) for c in names if c != "identifier"],
+            F.coalesce("s.__n_old", F.lit(-1)).alias("__n_old"),
         )
-        # materialize before upsert rewrites the store this plan reads
-        annotated = annotated.localCheckpoint(eager=True)
-        self.upsert(annotated, force=any_force)
-        return annotated
+        annotated = provide(fused, target, **kw).localCheckpoint(eager=True)
+        self._merge(annotated, stored, force or force_start is not None)
+        return annotated.drop("__n_old")

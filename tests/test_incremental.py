@@ -120,3 +120,117 @@ def test_store_compaction_reduces_files_and_preserves_content(spark, sf_dir):
     }
     post = {(r["bucket"], r["n_records"], r["total_tokens"]) for r in out}
     assert pre == post
+
+
+def _store_files(path):
+    import os
+
+    out = {}
+    for base, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(base, f)
+            out[os.path.relpath(p, path)] = os.stat(p).st_mtime_ns
+    return out
+
+
+def _age_pos(df):
+    """The pos views rewritten to an older source version."""
+    return df.withColumn(
+        "label_views",
+        F.transform_values(
+            "label_views",
+            lambda k, v: F.when(k == "pos", v.withField("source", F.lit("enginepos-0.9"))).otherwise(v),
+        ),
+    )
+
+
+def test_record_store_leaves_session_overwrite_mode(spark, corpus, tmp_path):
+    """The store's dynamic overwrite is a per-write option: a later
+    partitioned overwrite elsewhere still replaces the whole output."""
+    import os
+
+    from curatorhadoopinterface_spark.io import write_corpus
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    store = RecordStore(spark, str(tmp_path / "store"))
+    store.provide_incremental(corpus, "TOKEN")
+    store.provide_incremental(
+        records_from_texts(spark, ["Another new document."]), "TOKEN"
+    )
+    assert spark.conf.get(key) == mode
+    out = str(tmp_path / "parts")
+    write_corpus(spark.range(4).withColumn("b", F.col("id")), out, partition_by=["b"])
+    write_corpus(spark.range(2).withColumn("b", F.col("id")), out, partition_by=["b"])
+    assert sorted(d for d in os.listdir(out) if d.startswith("b=")) == ["b=0", "b=1"]
+
+
+def test_duplicate_identifiers_store_one_row_on_empty_store(spark, corpus, store_path):
+    store = RecordStore(spark, store_path)
+    twice = corpus.unionByName(corpus.limit(1))
+    out = store.provide_incremental(twice, "TOKEN").collect()
+    n_ids = corpus.count()
+    assert len(out) == len({r.identifier for r in out}) == n_ids
+    stored = store.load()
+    assert stored.count() == stored.select("identifier").distinct().count() == n_ids
+
+
+def test_duplicate_identifiers_store_one_row_on_merge(spark, corpus, store_path):
+    store = RecordStore(spark, store_path)
+    store.provide_incremental(corpus.limit(2), "TOKEN")
+    new = records_from_texts(spark, ["A document submitted twice."])
+    twice = new.unionByName(new).unionByName(corpus).unionByName(corpus.limit(1))
+    out = store.provide_incremental(twice, "TOKEN").collect()
+    n_ids = corpus.count() + 1
+    assert len(out) == len({r.identifier for r in out}) == n_ids
+    stored = store.load()
+    assert stored.count() == stored.select("identifier").distinct().count() == n_ids
+
+
+def test_upsert_deduplicates_identifiers(spark, corpus, store_path):
+    store = RecordStore(spark, store_path)
+    store.write_full(provide(corpus.limit(1), "TOKEN"))
+    ann = provide(corpus, "POS")
+    store.upsert(ann.unionByName(ann))
+    stored = store.load()
+    assert stored.count() == stored.select("identifier").distinct().count() == corpus.count()
+    assert all("pos" in r.label_views for r in stored.collect())
+
+
+def test_all_hit_update_writes_nothing(spark, corpus, store_path):
+    store = RecordStore(spark, store_path)
+    store.provide_incremental(corpus, "POS")
+    before = _store_files(store_path)
+    out = store.provide_incremental(corpus, "POS")
+    assert out.count() == corpus.count()
+    assert _store_files(store_path) == before
+
+
+def test_update_leaves_one_parquet_file_per_bucket(spark, corpus, store_path):
+    import os
+
+    store = RecordStore(spark, store_path)
+    store.provide_incremental(corpus.limit(2), "TOKEN")
+    store.provide_incremental(corpus, "POS")
+    buckets = [d for d in os.listdir(store_path) if d.startswith("id_bucket=")]
+    assert buckets
+    for d in buckets:
+        files = [f for f in os.listdir(os.path.join(store_path, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+
+
+def test_stale_stored_view_recomputed_but_equal_count_copy_kept(spark, corpus, store_path):
+    """The reference stores a record only if it has MORE views: a stale
+    pos is recomputed for the caller, while the stored copy, whose
+    re-annotation has the same view count, stays as it was."""
+    store = RecordStore(spark, store_path)
+    store.write_full(_age_pos(provide(corpus, "POS")))
+    out = {r.identifier: r for r in store.provide_incremental(corpus, "POS").collect()}
+    direct = {r.identifier: r for r in provide(corpus, "POS").collect()}
+    assert out.keys() == direct.keys()
+    for ident, r in out.items():
+        assert r.label_views["pos"].source == "enginepos-1.0"
+        assert r.label_views["pos"] == direct[ident].label_views["pos"]
+    stored = store.load().collect()
+    assert len(stored) == len(direct)
+    assert all(r.label_views["pos"].source == "enginepos-0.9" for r in stored)

@@ -258,18 +258,19 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_provide_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's WHOLE memoized loop (A18-A21) as one checked run:
     batch 1 annotates half the corpus into a fresh record store; batch 2
-    submits the FULL corpus — the first half anti-joins into cache hits
-    (their stored views are reused, per CuratorHandler.getRecord
-    :468-527 semantics), only the new half pays the annotation UDF; the
+    submits the FULL corpus — the first half are cache hits (their
+    stored views are reused, per CuratorHandler.getRecord :468-527
+    semantics), only the new half pays the annotation UDF; the
     enriched records upsert back by view count (A18). The census the
     oracle checks is read BACK from the store, so hit reuse, miss
     annotation, and the upsert all had to compose correctly for the
     token totals to match the SQL twin.
 
-    Scale shape: the cache path is an identifier-keyed anti/semi join
-    against the bucketed store (SURVEY §1.4 record-store row); only
-    misses enter the fused mapInPandas stage, so incremental cost
-    tracks NEW data — the entire point of the reference's architecture.
+    Scale shape: the cache path is an identifier-keyed semi join plus
+    left join against the bucketed store (SURVEY §1.4 record-store
+    row); only rows whose views do not yet cover the request enter the
+    fused mapInPandas stage, so incremental cost tracks NEW data — the
+    entire point of the reference's architecture.
     """
     import os
     import shutil

@@ -19,10 +19,12 @@ Scale: the store is Parquet partitioned by the first hex char of the
 SHA-1 identifier (16 uniform buckets; raise to 2 chars = 256 at real
 scale), one file per bucket. An update loads the store once: the
 batch's stored copies join onto the batch with their view count, so
-hits, misses and the merge decision come from one scan, and
-``provide`` runs once. The merge rewrites only the buckets that hold a
-winner, in place, by a dynamic partition overwrite; a batch with no
-winner (all cache hits) writes nothing. This is the non-ACID but
+hits, misses and the merge decision come from one scan. That lookup is
+checkpointed once; rows whose views already cover the request (cache
+hits) skip the Python worker, and only the rest go through
+``provide``. The merge rewrites only the buckets that hold a winner, in
+place, by a dynamic partition overwrite; a batch with no winner (all
+cache hits) runs no worker and writes nothing. This is the non-ACID but
 deterministic batch equivalent of the reference's DB upsert.
 """
 
@@ -32,9 +34,10 @@ import operator
 from functools import reduce
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
-from curatorhadoopinterface_spark.plans.provide import VIEW_COLS, provide
+from curatorhadoopinterface_spark.plans.provide import VIEW_COLS, as_provided, complete_col, provide
 from curatorhadoopinterface_spark.plans.registry import MODES, VIEW_TO_MODE, invalidation_closure
 
 _BUCKET_COL = "id_bucket"
@@ -119,6 +122,29 @@ def view_count_col(df: DataFrame) -> Column:
     return out
 
 
+def _columns(schema: StructType) -> set[tuple[str, str]]:
+    """(name, type) of each stored column, nullability aside: parquet
+    reads every column back as nullable, and resolves columns by name."""
+    return {(f.name, f.dataType.simpleString()) for f in schema.fields if f.name != _BUCKET_COL}
+
+
+def _wins(records: DataFrame, force: bool) -> Column:
+    """A record replaces its stored copy iff it has MORE views, or the
+    update was forced (``__n_old`` is -1 for an unseen record)."""
+    return F.lit(force) | (view_count_col(records) > F.col("__n_old"))
+
+
+def _winner_stats(records: DataFrame, force: bool) -> list[Column]:
+    """Aggregates over ``records`` that ``_merge`` needs: the winners'
+    bucket chars (at most 16) and their largest ``__n_old`` (-1 when
+    every winner is an insert; NULL when nothing wins)."""
+    win = _wins(records, force)
+    return [
+        F.collect_set(F.when(win, F.substring("identifier", 1, 1))).alias("buckets"),
+        F.max(F.when(win, F.col("__n_old"))).alias("n_old_max"),
+    ]
+
+
 class RecordStore:
     """Content-hash-keyed Parquet archive of annotated Records (the
     Curator archive, A21), with hash-bucket partitioning."""
@@ -126,17 +152,33 @@ class RecordStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        #: the store's schema (bucket column included) as this handle
+        #: last read it; None until the first read and after a write
+        #: that changed the columns
+        self._schema: StructType | None = None
 
     def load(self) -> DataFrame | None:
+        """The stored records. With the schema this handle last read,
+        the read skips parquet schema inference (a job per load). A
+        fresh inference merges every file's footer, so a column that
+        only the rewritten buckets carry is not lost."""
+        reader = self.spark.read
+        if self._schema is None:
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(self._schema)
         try:
-            df = self.spark.read.parquet(self.path)
+            df = reader.parquet(self.path)
         except Exception:
             return None
+        self._schema = df.schema
         return df.drop(_BUCKET_COL)
 
     def _write(self, df: DataFrame, overwrite_mode: str) -> None:
         """Write ``df`` one file per bucket: each bucket's rows shuffle
-        to one writer task."""
+        to one writer task. Forgets the schema if the columns changed."""
+        if self._schema is not None and _columns(self._schema) != _columns(df.schema):
+            self._schema = None
         df.withColumn(_BUCKET_COL, F.substring("identifier", 1, 1)).repartition(
             _BUCKET_COL
         ).write.mode("overwrite").option("partitionOverwriteMode", overwrite_mode).partitionBy(
@@ -169,28 +211,37 @@ class RecordStore:
         records = records.join(n_old, "identifier", "left").select(
             *records.columns, F.coalesce("__n_old", F.lit(-1)).alias("__n_old")
         )
-        self._merge(records, stored, force)
+        stats = records.agg(*_winner_stats(records, force)).first()
+        self._merge(records, stored, force, stats["buckets"], stats["n_old_max"])
 
-    def _merge(self, records: DataFrame, stored: DataFrame, force: bool) -> None:
+    def _merge(
+        self,
+        records: DataFrame,
+        stored: DataFrame,
+        force: bool,
+        buckets: list[str],
+        n_old_max: int | None,
+    ) -> None:
         """Store the winners of ``records``, which carry their stored
         copy's view count as ``__n_old`` (-1 when unseen).
+        ``buckets``/``n_old_max`` are ``_winner_stats`` over ``records``;
+        ``provide_incremental`` gathers them in its annotate job.
 
         Only buckets holding a winner are rewritten, as their old rows
-        minus the winners plus the winners. The overwrite reads the files
-        it replaces: the commit protocol stages task output and swaps the
-        partitions at job commit, after every task has read.
+        minus the winners plus the winners; when every winner is an
+        insert there is nothing to subtract. The overwrite reads the
+        files it replaces: the commit protocol stages task output and
+        swaps the partitions at job commit, after every task has read.
         """
-        winners = records.where(
-            F.lit(force) | (view_count_col(records) > F.col("__n_old"))
-        ).drop("__n_old")
-        # one bucket char per winner: a narrow collect, no exchange
-        buckets = {r[0] for r in winners.select(F.substring("identifier", 1, 1)).collect()}
         if not buckets:
             return
+        winners = records.where(_wins(records, force)).drop("__n_old")
         # startswith pushes down to the parquet reader, which skips the
         # untouched buckets' row groups on their min/max statistics
         touched = reduce(operator.or_, [F.col("identifier").startswith(b) for b in sorted(buckets)])
-        kept = stored.where(touched).join(winners.select("identifier"), "identifier", "left_anti")
+        kept = stored.where(touched)
+        if n_old_max >= 0:
+            kept = kept.join(winners.select("identifier"), "identifier", "left_anti")
         # Scoped heap guard for the write: annotated Records are WIDE
         # (every token a span struct), and the default 4096-row
         # vectorized reader batch x 32 concurrent local tasks
@@ -203,7 +254,7 @@ class RecordStore:
         bs_old = self.spark.conf.get(bs_key, "4096")
         self.spark.conf.set(bs_key, "512")
         try:
-            self._write(winners.unionByName(kept), "dynamic")
+            self._write(winners.unionByName(kept, allowMissingColumns=True), "dynamic")
         finally:
             self.spark.conf.set(bs_key, bs_old)
 
@@ -258,6 +309,30 @@ class RecordStore:
             *[pick(c) for c in names if c != "identifier"],
             F.coalesce("s.__n_old", F.lit(-1)).alias("__n_old"),
         )
-        annotated = provide(fused, target, **kw).localCheckpoint(eager=True)
-        self._merge(annotated, stored, force or force_start is not None)
+        forced = force or force_start is not None
+        if forced:
+            # a forced view is in the closure: no row is complete
+            annotated = provide(fused, target, **kw)
+        else:
+            # Completeness is decided JVM-side over the lookup, which is
+            # checkpointed once so both halves of the split reuse it. A
+            # complete row cannot win: after stale removal its view count
+            # is at most its stored copy's __n_old.
+            n_todo = Observation()
+            looked_up = (
+                fused.withColumn("__complete", complete_col(fused, target))
+                .observe(n_todo, F.count_if(~F.col("__complete")).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            done = as_provided(looked_up.where("__complete").drop("__complete"), best_effort)
+            if n_todo.get["n"] == 0:
+                return done.drop("__n_old")
+            todo = looked_up.where(~F.col("__complete")).drop("__complete")
+            annotated = provide(todo, target, **kw).unionByName(done)
+        # the winners' buckets ride the annotate job
+        stats = Observation()
+        annotated = annotated.observe(stats, *_winner_stats(annotated, forced)).localCheckpoint(
+            eager=True
+        )
+        self._merge(annotated, stored, forced, stats.get["buckets"], stats.get["n_old_max"])
         return annotated.drop("__n_old")

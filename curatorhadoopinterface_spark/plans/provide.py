@@ -6,12 +6,15 @@ by document hash and RPC-ing every document to a local Curator
 (CuratorReducer.java:74-202, process boundary per view per document).
 
 Spark-first collapse: the dependency closure is computed once
-(plans/registry.dependency_closure), and ALL requested modes run in ONE
-``mapInPandas`` pass — one Arrow batch boundary total, no shuffle at all
-(annotation is embarrassingly per-row). Per-row memoization: views
-already present in a record's maps are reused, not recomputed
+(plans/registry.dependency_closure), and all requested modes run in one
+``mapInPandas`` pass per ``provide()`` call — one Arrow batch boundary,
+no shuffle (annotation is embarrassingly per-row). Per-row memoization:
+views already present in a record's maps are reused, not recomputed
 (CuratorHandler.provide, :1029-1052). Stage fusion (A10) is therefore
-universal, not a TOKEN/POS/CHUNK special case.
+universal, not a TOKEN/POS/CHUNK special case. A caller that can tell
+JVM-side which rows already hold the whole closure (``complete_col``)
+can keep those rows out of the worker and put them in the output shape
+with ``as_provided``; the record store does this for its cache hits.
 
 Scale: per-partition cost is pure Python over Arrow batches; heavy
 models would be loaded as module-level singletons per worker
@@ -22,10 +25,13 @@ file count — fixing the reference's task-per-document granularity.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Iterator
+from functools import reduce
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import StructField, StructType
 
 from curatorhadoopinterface_spark.plans.registry import (
@@ -50,6 +56,14 @@ VIEW_COLS: dict[str, MapType] = {
     "parse_views": MapType(StringType(), FOREST),
 }
 
+#: view name -> the VIEW_COLS column that holds it
+VIEW_FAMILY: dict[str, str] = {
+    view: {ViewType.LABEL: "label_views", ViewType.CLUSTER: "cluster_views"}.get(
+        MODES[mode].view_type, "parse_views"
+    )
+    for view, mode in VIEW_TO_MODE.items()
+}
+
 
 def _parse_views_json(raw: str | None, family: str) -> dict:
     """Decode a to_json()'d view map back to plain dicts.
@@ -72,6 +86,75 @@ def _parse_views_json(raw: str | None, family: str) -> dict:
                     if node.get("children"):
                         node["children"] = {int(k): v for k, v in node["children"].items()}
     return views
+
+
+def _request(
+    target: str | list[str], force: bool, force_start: str | None
+) -> tuple[list[str], set[str]]:
+    """The modes ``target`` needs, in annotation order, and the views to
+    discard per row before the memoized annotate pass: the forced
+    targets (and their dependents) and/or everything at-or-after the
+    forced start. Plain Python set baked into the UDF closure — zero
+    plan-side cost."""
+    targets = [target] if isinstance(target, str) else list(target)
+    modes: list[str] = []
+    for t in targets:
+        for m in dependency_closure(t):
+            if m not in modes:
+                modes.append(m)
+    drop_views: set[str] = set()
+    if force:
+        forced_views = set()
+        for t in targets:
+            forced_views.update({MODES[t].view, *MODES[t].extra_views})
+        drop_views |= invalidation_closure(forced_views)
+    if force_start is not None:
+        hit = False
+        for t in targets:
+            if force_start not in dependency_closure(t):
+                continue  # multi-target: override only the paths through it
+            hit = True
+            _, forced_modes = forced_start_plan(t, force_start)
+            for m in forced_modes:
+                drop_views.update({MODES[m].view, *MODES[m].extra_views})
+        if not hit:
+            raise ValueError(
+                f"forced start {force_start!r} is not in the dependency "
+                f"closure of any target in {targets}"
+            )
+    return modes, drop_views
+
+
+def complete_col(df: DataFrame, target: str | list[str]) -> Column:
+    """TRUE where a row already holds the view of every mode in
+    ``target``'s closure: the rows an unforced :func:`provide` returns
+    unchanged (the worker skips a mode whose view is present). A JVM
+    expression over the map keys; a NULL map counts as missing."""
+    modes, _ = _request(target, False, None)
+
+    def has(view: str) -> Column:
+        col = VIEW_FAMILY[view]
+        if col not in df.columns:
+            return F.lit(False)
+        return F.coalesce(F.map_contains_key(col, view), F.lit(False))
+
+    return reduce(operator.and_, [has(MODES[m].view) for m in modes])
+
+
+def as_provided(df: DataFrame, best_effort: bool = False) -> DataFrame:
+    """``df`` in :func:`provide`'s output shape with its views as they
+    are: the form of rows for which ``complete_col`` holds. A missing or
+    NULL view map becomes an empty one, as the worker returns it."""
+
+    def views(c: str) -> Column:
+        empty = F.create_map().cast(VIEW_COLS[c])
+        return (F.coalesce(F.col(c), empty) if c in df.columns else empty).alias(c)
+
+    return df.select(
+        *[c for c in df.columns if c not in VIEW_COLS],
+        *[views(c) for c in VIEW_COLS],
+        *([F.lit(None).cast(StringType()).alias("annotation_error")] if best_effort else []),
+    )
 
 
 def provide(
@@ -108,40 +191,7 @@ def provide(
     policy, where one malformed document must not kill a stage. Strict
     mode (default) propagates the exception so tests fail loud.
     """
-    import pyspark.sql.functions as F
-
-    targets = [target] if isinstance(target, str) else list(target)
-    modes: list[str] = []
-    for t in targets:
-        for m in dependency_closure(t):
-            if m not in modes:
-                modes.append(m)
-
-    # views to discard per row before the memoized annotate pass: the
-    # forced targets (and their dependents) and/or everything at-or-
-    # after the forced start. Plain Python set baked into the UDF
-    # closure — zero plan-side cost.
-    drop_views: set[str] = set()
-    if force:
-        forced_views = set()
-        for t in targets:
-            forced_views.update({MODES[t].view, *MODES[t].extra_views})
-        drop_views |= invalidation_closure(forced_views)
-    if force_start is not None:
-        hit = False
-        for t in targets:
-            if force_start not in dependency_closure(t):
-                continue  # multi-target: override only the paths through it
-            hit = True
-            _, forced_modes = forced_start_plan(t, force_start)
-            for m in forced_modes:
-                drop_views.update({MODES[m].view, *MODES[m].extra_views})
-        if not hit:
-            raise ValueError(
-                f"forced start {force_start!r} is not in the dependency "
-                f"closure of any target in {targets}"
-            )
-
+    modes, drop_views = _request(target, force, force_start)
     fields = [f for f in df.schema.fields if f.name not in VIEW_COLS]
     passthrough = [f.name for f in fields]
     # label/cluster views leave the worker as JSON strings and are parsed
@@ -170,7 +220,7 @@ def provide(
     # annotation is CPU-bound in the Python worker: a small corpus that
     # parquet packed into fewer splits than there are cores would leave
     # most executors idle (the 1-partition/1-core trap). Plan-side split
-    # estimate — no RDD materialization; no-op at 100 TB.
+    # estimate, no job; no-op at 100 TB and over a spread checkpoint.
     udf_input = ensure_min_partitions(udf_input)
 
     def annotate_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -203,20 +253,14 @@ def provide(
                         out_err.append(f"{type(exc).__name__}: {exc}")
                 else:
                     annotate_record(texts[i], views, modes)
-                label, cluster, parse = {}, {}, {}
+                out = {c: {} for c in VIEW_COLS}
                 for vname, payload in views.items():
-                    vt = MODES[VIEW_TO_MODE[vname]].view_type
-                    if vt is ViewType.LABEL:
-                        label[vname] = payload
-                    elif vt is ViewType.CLUSTER:
-                        cluster[vname] = payload
-                    else:
-                        parse[vname] = payload
+                    out[VIEW_FAMILY[vname]][vname] = payload
                 # always dump (even "{}") so from_json yields an empty
                 # map, not NULL — view-count exprs rely on map semantics
-                out_label.append(json.dumps(label))
-                out_cluster.append(json.dumps(cluster))
-                out_parse.append(parse)
+                out_label.append(json.dumps(out["label_views"]))
+                out_cluster.append(json.dumps(out["cluster_views"]))
+                out_parse.append(out["parse_views"])
             res = pdf[passthrough].copy()
             res["__label_views_json"] = out_label
             res["__cluster_views_json"] = out_cluster

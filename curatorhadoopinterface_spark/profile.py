@@ -12,7 +12,9 @@ disables the Spark UI, so this record is how a run explains itself:
   QueryExecution, run after the window so planning is never counted
   twice (the noop write plans the query again on its own).
 - Stage totals over the query's own stages: ``stages`` (skipped ones
-  included), ``tasks``, executor ``run_ms``/``cpu_ms``, shuffle read
+  included), ``python_stages`` (stages that run a Python worker
+  operator such as ``MapInPandas``, read from each stage's operator
+  graph), ``tasks``, executor ``run_ms``/``cpu_ms``, shuffle read
   and write, ``spill_mb`` (memory + disk), and ``peak_mem_mb`` (the
   largest stage's peakExecutionMemory); ``top_stages`` lists the
   ``TOP_STAGES`` stages with the most executor run time.
@@ -30,9 +32,16 @@ retains 1000 stages, against ~40 ms for a 6-stage range read (Spark
 
 from __future__ import annotations
 
+import re
 import time
 
+from py4j.protocol import Py4JJavaError
+
 TOP_STAGES = 6
+
+#: physical operators that hand rows to a Python worker (MapInPandas,
+#: MapInArrow, ArrowEvalPython, BatchEvalPython, FlatMapGroupsInPandas, …)
+_PYTHON_OPS = re.compile(r"Python|Pandas|InArrow")
 
 _METRICS = (
     "numCompleteTasks",
@@ -72,8 +81,24 @@ def warm(spark, sf_dir: str) -> None:
     )
 
 
+def _stage_ops(store, sid: int) -> list[str]:
+    """Names of the operator scopes in stage ``sid``'s RDD graph."""
+    try:
+        todo = [store.operationGraphForStage(sid).rootCluster()]
+    except Py4JJavaError:  # the graph was already evicted
+        return []
+    names = []
+    while todo:
+        cluster = todo.pop()
+        names.append(cluster.name())
+        children = cluster.childClusters()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
 def _stages(spark, first: int, end: int) -> list[dict]:
-    """Metrics of every attempt of stages ``first``..``end - 1``."""
+    """Metrics of every attempt of stages ``first``..``end - 1``, with
+    whether the stage runs a Python worker operator."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
@@ -85,9 +110,10 @@ def _stages(spark, first: int, end: int) -> list[dict]:
     rows = []
     for sid in range(first, end):
         seq = store.stageData(sid, False, no_status, False, no_quantiles)
+        python = seq.size() > 0 and any(_PYTHON_OPS.search(n) for n in _stage_ops(store, sid))
         for i in range(seq.size()):
             s = seq.apply(i)
-            rows.append({"name": s.name(), **{m: getattr(s, m)() for m in _METRICS}})
+            rows.append({"name": s.name(), "python": python, **{m: getattr(s, m)() for m in _METRICS}})
     return rows
 
 
@@ -117,6 +143,7 @@ def profile(qfn, spark, sf_dir: str) -> dict:
         "plan_s": round(t3 - t2, 3),
         "exec_s": exec_s,
         "stages": len(rows),
+        "python_stages": sum(r["python"] for r in rows),
         "tasks": tot["numCompleteTasks"],
         "run_ms": tot["executorRunTime"],
         "cpu_ms": tot["executorCpuTime"] // 1_000_000,

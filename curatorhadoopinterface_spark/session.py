@@ -35,6 +35,9 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: the directory that holds this package, for the Python workers' path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "curatorhadoopinterface-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -105,6 +108,11 @@ def get_spark(app_name: str = "curatorhadoopinterface-spark", cpus: int | None =
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers import the engine from any working directory, and are
+        # forked by a daemon whose tasks skip re-reading unchanged zips
+        # (see _worker_daemon)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.python.daemon.module", "curatorhadoopinterface_spark._worker_daemon")
     )
     return builder.getOrCreate()
 
@@ -179,23 +187,36 @@ def ensure_min_partitions(df: DataFrame) -> DataFrame:
 
     A corpus that parquet packs into fewer splits than there are cores
     leaves most executors idle (the 1-partition/1-core trap). Detection
-    is PLAN-side — no RDD conversion, no job: the expected split count
-    is bounded below by max(#input files, scan bytes / maxPartitionBytes)
+    runs no job: for a file scan the expected split count is bounded
+    below by max(#input files, scan bytes / maxPartitionBytes)
     from Catalyst's plan statistics. At 100 TB either bound vastly
     exceeds core count and this is a no-op; repartition fires only when
     the whole scan provably packs under ``defaultParallelism`` splits.
+
+    A plan that reads no files (a checkpoint, a local relation) has no
+    split estimate. When it runs no exchange (its physical plan is not
+    adaptive), its RDD is built without a job, and that RDD's partition
+    count is the split count: a checkpoint already spread over every
+    core passes through with no shuffle.
     """
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
     try:
-        size_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        qe = df._jdf.queryExecution()
         n_files = len(df.inputFiles())
+        if n_files:
+            size_bytes = int(qe.optimizedPlan().stats().sizeInBytes())
+            # 128 MiB: spark.sql.files.maxPartitionBytes default; a
+            # conservative (over-)estimate of split granularity is fine
+            # — we only need a lower bound on split count to prove the
+            # scan is small
+            est_splits = max(n_files, size_bytes // (128 * 1024 * 1024))
+        else:
+            plan = qe.executedPlan()
+            adaptive = plan.nodeName() == "AdaptiveSparkPlan"
+            est_splits = 0 if adaptive else plan.execute().getNumPartitions()
     except Exception:
         return df.repartition(parallelism)
-    # 128 MiB: spark.sql.files.maxPartitionBytes default; a conservative
-    # (over-)estimate of split granularity is fine — we only need a
-    # lower bound on split count to prove the scan is small
-    est_splits = max(n_files, size_bytes // (128 * 1024 * 1024))
     if est_splits < parallelism:
         return df.repartition(parallelism)
     return df

@@ -198,9 +198,16 @@ def test_upsert_deduplicates_identifiers(spark, corpus, store_path):
 
 
 def test_all_hit_update_writes_nothing(spark, corpus, store_path):
+    """A memoized hit is a JVM-only job: no Python worker, no write."""
+    from curatorhadoopinterface_spark.profile import profile
+
     store = RecordStore(spark, store_path)
-    store.provide_incremental(corpus, "POS")
+    miss = profile(lambda s, d: store.provide_incremental(corpus, "POS"), spark, None)
+    assert miss["python_stages"] > 0
     before = _store_files(store_path)
+    hit = profile(lambda s, d: store.provide_incremental(corpus, "POS"), spark, None)
+    assert hit["python_stages"] == 0
+    assert _store_files(store_path) == before
     out = store.provide_incremental(corpus, "POS")
     assert out.count() == corpus.count()
     assert _store_files(store_path) == before
@@ -234,3 +241,60 @@ def test_stale_stored_view_recomputed_but_equal_count_copy_kept(spark, corpus, s
     stored = store.load().collect()
     assert len(stored) == len(direct)
     assert all(r.label_views["pos"].source == "enginepos-0.9" for r in stored)
+
+
+def test_best_effort_complete_rows_carry_null_error(spark, corpus, store_path):
+    store = RecordStore(spark, store_path)
+    store.provide_incremental(corpus, "POS")
+    out = store.provide_incremental(corpus, "POS", best_effort=True).collect()
+    assert len(out) == corpus.count()
+    assert all(r.annotation_error is None for r in out)
+    assert all("pos" in r.label_views for r in out)
+
+
+def test_mixed_batch_matches_one_provide_over_the_lookup(spark, corpus, store_path):
+    """Complete, stale and unseen rows in one batch: the split returns
+    what one provide() over the batch's stored copies (stale views
+    removed) and its new rows returns."""
+    store = RecordStore(spark, store_path)
+    aged = _age_pos(provide(corpus.limit(1), "CHUNK"))
+    store.write_full(aged.unionByName(provide(corpus.limit(3).subtract(corpus.limit(1)), "CHUNK")))
+    new = records_from_texts(spark, ["A fresh document arrives.", "Another one!"])
+    batch = corpus.unionByName(new)
+    stored = store.load()
+    ids = [r.identifier for r in stored.select("identifier").collect()]
+    lookup = remove_stale_views(stored).unionByName(
+        batch.where(~F.col("identifier").isin(ids)), allowMissingColumns=True
+    )
+    want = {r.identifier: r.asDict(recursive=True) for r in provide(lookup, "CHUNK").collect()}
+    got = {
+        r.identifier: r.asDict(recursive=True)
+        for r in store.provide_incremental(batch, "CHUNK").collect()
+    }
+    assert got.keys() == want.keys() and len(got) == corpus.count() + 2
+    assert got == want
+
+
+def test_load_reads_back_a_column_an_upsert_added(spark, corpus, store_path):
+    """The store schema a handle reuses is dropped when a write changes
+    the columns; the fresh read merges every bucket's footer."""
+    store = RecordStore(spark, store_path)
+    store.write_full(provide(corpus, "TOKEN"))
+    assert "lang" not in store.load().columns
+    one = provide(corpus.limit(1), "POS").withColumn("lang", F.lit("en"))
+    store.upsert(one)
+    loaded = store.load()
+    assert "lang" in loaded.columns
+    langs = {r.identifier: r.lang for r in loaded.collect()}
+    (ident,) = [r.identifier for r in one.collect()]
+    assert langs.pop(ident) == "en"
+    assert len(langs) == corpus.count() - 1 and set(langs.values()) == {None}
+
+
+def test_empty_batch_update_returns_nothing_and_writes_nothing(spark, corpus, store_path):
+    store = RecordStore(spark, store_path)
+    store.provide_incremental(corpus, "POS")
+    before = _store_files(store_path)
+    assert store.provide_incremental(corpus.limit(0), "POS").count() == 0
+    assert store.provide_incremental(corpus.limit(0), "POS", force=True).count() == 0
+    assert _store_files(store_path) == before

@@ -88,3 +88,15 @@ def test_qtime_smoke(sf_dir):
     assert [r["name"] for r in records] == ["agg_groupby"]
     assert {"build_s", "plan_s", "exec_s", "stages", "top_stages"} <= set(records[0])
     assert [r["name"] for r in errors] == ["no_such_query"]
+
+
+def test_python_stages_counts_worker_stages(spark):
+    def jvm(s, d):
+        return s.range(40).repartition(4)
+
+    def python(s, d):
+        return jvm(s, d).mapInPandas(lambda it: (pdf for pdf in it), "id long")
+
+    assert profile(jvm, spark, None)["python_stages"] == 0
+    rec = profile(python, spark, None)
+    assert 1 <= rec["python_stages"] < rec["stages"]

@@ -59,3 +59,30 @@ def test_determinism_same_input_same_output(spark, corpus):
     a = provide(corpus, "NER").select("identifier", "label_views").collect()
     b = provide(corpus, "NER").select("identifier", "label_views").collect()
     assert sorted(map(str, a)) == sorted(map(str, b))
+
+
+def test_spread_checkpoint_passes_through_without_exchange(spark):
+    from curatorhadoopinterface_spark.session import ensure_min_partitions
+
+    n = spark.sparkContext.defaultParallelism
+    ck = spark.range(100).repartition(n).localCheckpoint(eager=True)
+    assert ck.rdd.getNumPartitions() == n
+    out = ensure_min_partitions(ck.where("id % 2 = 0"))
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    one = spark.range(100).coalesce(1).localCheckpoint(eager=True)
+    assert "Exchange" in ensure_min_partitions(one)._jdf.queryExecution().executedPlan().toString()
+
+
+def test_complete_rows_keep_their_views_in_provide_shape(spark, corpus):
+    from curatorhadoopinterface_spark.plans.provide import as_provided, complete_col
+
+    ann = provide(corpus, "POS")
+    assert all(r.c for r in ann.select(complete_col(ann, "POS").alias("c")).collect())
+    assert not any(r.c for r in ann.select(complete_col(ann, "CHUNK").alias("c")).collect())
+    assert not any(r.c for r in corpus.select(complete_col(corpus, "TOKEN").alias("c")).collect())
+    shaped = as_provided(ann.drop("cluster_views"), best_effort=True)
+    assert shaped.columns == provide(corpus, "POS", best_effort=True).columns
+    direct = {r.identifier: r for r in ann.collect()}
+    for r in shaped.collect():
+        assert r.label_views == direct[r.identifier].label_views
+        assert r.cluster_views == {} and r.annotation_error is None

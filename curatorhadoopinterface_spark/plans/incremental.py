@@ -134,15 +134,11 @@ def _wins(records: DataFrame, force: bool) -> Column:
     return F.lit(force) | (view_count_col(records) > F.col("__n_old"))
 
 
-def _winner_stats(records: DataFrame, force: bool) -> list[Column]:
-    """Aggregates over ``records`` that ``_merge`` needs: the winners'
-    bucket chars (at most 16) and their largest ``__n_old`` (-1 when
-    every winner is an insert; NULL when nothing wins)."""
+def _winner_buckets(records: DataFrame, force: bool) -> Column:
+    """The aggregate over ``records`` that ``_merge`` needs: the set of
+    the winners' bucket chars (at most 16)."""
     win = _wins(records, force)
-    return [
-        F.collect_set(F.when(win, F.substring("identifier", 1, 1))).alias("buckets"),
-        F.max(F.when(win, F.col("__n_old"))).alias("n_old_max"),
-    ]
+    return F.collect_set(F.when(win, F.substring("identifier", 1, 1))).alias("buckets")
 
 
 class RecordStore:
@@ -153,37 +149,56 @@ class RecordStore:
         self.spark = spark
         self.path = path
         #: the store's schema (bucket column included) as this handle
-        #: last read it; None until the first read and after a write
-        #: that changed the columns
+        #: last read or wrote it, and the data files it held then; the
+        #: schema is None until the first read and after a write that
+        #: changed the columns
         self._schema: StructType | None = None
+        self._files_seen: frozenset = frozenset()
+
+    def _files(self) -> frozenset:
+        """(path, mtime, size) of each data file in the store: one glob,
+        no Spark job. Spark names every file it writes uniquely, so a
+        rewrite by any handle or process changes this set."""
+        glob = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.path}/*/*.parquet")
+        fs = glob.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        return frozenset(
+            (s.getPath().toString(), s.getModificationTime(), s.getLen())
+            for s in fs.globStatus(glob) or []
+        )
 
     def load(self) -> DataFrame | None:
-        """The stored records. With the schema this handle last read,
-        the read skips parquet schema inference (a job per load). A
-        fresh inference merges every file's footer, so a column that
-        only the rewritten buckets carry is not lost."""
+        """The stored records. While the store holds the files this
+        handle last saw, the read reuses their schema and skips parquet
+        schema inference (a job per load). Otherwise, as after another
+        handle's write, inference merges every file's footer, so a
+        column that only some buckets carry is not lost."""
+        files = self._files()
         reader = self.spark.read
-        if self._schema is None:
-            reader = reader.option("mergeSchema", "true")
-        else:
+        if self._schema is not None and files == self._files_seen:
             reader = reader.schema(self._schema)
+        else:
+            reader = reader.option("mergeSchema", "true")
         try:
             df = reader.parquet(self.path)
         except Exception:
             return None
-        self._schema = df.schema
+        self._schema, self._files_seen = df.schema, files
         return df.drop(_BUCKET_COL)
 
     def _write(self, df: DataFrame, overwrite_mode: str) -> None:
         """Write ``df`` one file per bucket: each bucket's rows shuffle
-        to one writer task. Forgets the schema if the columns changed."""
-        if self._schema is not None and _columns(self._schema) != _columns(df.schema):
-            self._schema = None
+        to one writer task. The known schema survives a write with the
+        same columns; the files it is valid for are listed again."""
+        keep = self._schema is not None and _columns(self._schema) == _columns(df.schema)
         df.withColumn(_BUCKET_COL, F.substring("identifier", 1, 1)).repartition(
             _BUCKET_COL
         ).write.mode("overwrite").option("partitionOverwriteMode", overwrite_mode).partitionBy(
             _BUCKET_COL
         ).parquet(self.path)
+        if keep:
+            self._files_seen = self._files()
+        else:
+            self._schema = None
 
     def write_full(self, df: DataFrame) -> None:
         self._write(df, "static")
@@ -211,27 +226,19 @@ class RecordStore:
         records = records.join(n_old, "identifier", "left").select(
             *records.columns, F.coalesce("__n_old", F.lit(-1)).alias("__n_old")
         )
-        stats = records.agg(*_winner_stats(records, force)).first()
-        self._merge(records, stored, force, stats["buckets"], stats["n_old_max"])
+        buckets = records.agg(_winner_buckets(records, force)).first()["buckets"]
+        self._merge(records, stored, force, buckets)
 
-    def _merge(
-        self,
-        records: DataFrame,
-        stored: DataFrame,
-        force: bool,
-        buckets: list[str],
-        n_old_max: int | None,
-    ) -> None:
+    def _merge(self, records: DataFrame, stored: DataFrame, force: bool, buckets: list[str]) -> None:
         """Store the winners of ``records``, which carry their stored
-        copy's view count as ``__n_old`` (-1 when unseen).
-        ``buckets``/``n_old_max`` are ``_winner_stats`` over ``records``;
-        ``provide_incremental`` gathers them in its annotate job.
+        copy's view count as ``__n_old`` (-1 when unseen). ``buckets``
+        is ``_winner_buckets`` over ``records``; ``provide_incremental``
+        gathers it in its annotate job.
 
         Only buckets holding a winner are rewritten, as their old rows
-        minus the winners plus the winners; when every winner is an
-        insert there is nothing to subtract. The overwrite reads the
-        files it replaces: the commit protocol stages task output and
-        swaps the partitions at job commit, after every task has read.
+        minus the winners plus the winners. The overwrite reads the files
+        it replaces: the commit protocol stages task output and swaps the
+        partitions at job commit, after every task has read.
         """
         if not buckets:
             return
@@ -239,9 +246,7 @@ class RecordStore:
         # startswith pushes down to the parquet reader, which skips the
         # untouched buckets' row groups on their min/max statistics
         touched = reduce(operator.or_, [F.col("identifier").startswith(b) for b in sorted(buckets)])
-        kept = stored.where(touched)
-        if n_old_max >= 0:
-            kept = kept.join(winners.select("identifier"), "identifier", "left_anti")
+        kept = stored.where(touched).join(winners.select("identifier"), "identifier", "left_anti")
         # Scoped heap guard for the write: annotated Records are WIDE
         # (every token a span struct), and the default 4096-row
         # vectorized reader batch x 32 concurrent local tasks
@@ -316,23 +321,30 @@ class RecordStore:
         else:
             # Completeness is decided JVM-side over the lookup, which is
             # checkpointed once so both halves of the split reuse it. A
-            # complete row cannot win: after stale removal its view count
-            # is at most its stored copy's __n_old.
-            n_todo = Observation()
+            # complete hit cannot win: after stale removal its view count
+            # is at most its stored copy's __n_old. A complete miss (a
+            # record annotated before it reached the store) is an insert.
+            seen = Observation()
             looked_up = (
                 fused.withColumn("__complete", complete_col(fused, target))
-                .observe(n_todo, F.count_if(~F.col("__complete")).alias("n"))
+                .observe(
+                    seen,
+                    F.count_if(~F.col("__complete")).alias("todo"),
+                    F.count_if(F.col("__n_old") < 0).alias("new"),
+                )
                 .localCheckpoint(eager=True)
             )
-            done = as_provided(looked_up.where("__complete").drop("__complete"), best_effort)
-            if n_todo.get["n"] == 0:
-                return done.drop("__n_old")
-            todo = looked_up.where(~F.col("__complete")).drop("__complete")
-            annotated = provide(todo, target, **kw).unionByName(done)
+            counts = seen.get
+            annotated = as_provided(looked_up.where("__complete").drop("__complete"), best_effort)
+            if counts["todo"] == 0 and counts["new"] == 0:
+                return annotated.drop("__n_old")
+            if counts["todo"] > 0:
+                todo = looked_up.where(~F.col("__complete")).drop("__complete")
+                annotated = provide(todo, target, **kw).unionByName(annotated)
         # the winners' buckets ride the annotate job
         stats = Observation()
-        annotated = annotated.observe(stats, *_winner_stats(annotated, forced)).localCheckpoint(
+        annotated = annotated.observe(stats, _winner_buckets(annotated, forced)).localCheckpoint(
             eager=True
         )
-        self._merge(annotated, stored, forced, stats.get["buckets"], stats.get["n_old_max"])
+        self._merge(annotated, stored, forced, stats.get["buckets"])
         return annotated.drop("__n_old")

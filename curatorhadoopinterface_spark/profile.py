@@ -12,12 +12,14 @@ disables the Spark UI, so this record is how a run explains itself:
   QueryExecution, run after the window so planning is never counted
   twice (the noop write plans the query again on its own).
 - Stage totals over the query's own stages: ``stages`` (skipped ones
-  included), ``python_stages`` (stages that run a Python worker
-  operator such as ``MapInPandas``, read from each stage's operator
-  graph), ``tasks``, executor ``run_ms``/``cpu_ms``, shuffle read
+  included), ``tasks``, executor ``run_ms``/``cpu_ms``, shuffle read
   and write, ``spill_mb`` (memory + disk), and ``peak_mem_mb`` (the
   largest stage's peakExecutionMemory); ``top_stages`` lists the
   ``TOP_STAGES`` stages with the most executor run time.
+- ``python_stages``, only with ``python=True``: stages that run a
+  Python worker operator such as ``MapInPandas``, read from each
+  stage's operator graph (stage names are call sites and do not show
+  it). The walk costs py4j round trips per stage, so it is opt-in.
 - Structured Streaming micro-batches (``streaming.ops.BATCH_LOG``):
   ``n_batches`` and, when there are any, ``batch_ms`` with the sum, max
   and per-batch ``triggerExecution`` ms.
@@ -96,9 +98,9 @@ def _stage_ops(store, sid: int) -> list[str]:
     return names
 
 
-def _stages(spark, first: int, end: int) -> list[dict]:
-    """Metrics of every attempt of stages ``first``..``end - 1``, with
-    whether the stage runs a Python worker operator."""
+def _stages(spark, first: int, end: int, python: bool) -> list[dict]:
+    """Metrics of every attempt of stages ``first``..``end - 1``; with
+    ``python``, also whether the stage runs a Python worker operator."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
@@ -110,16 +112,19 @@ def _stages(spark, first: int, end: int) -> list[dict]:
     rows = []
     for sid in range(first, end):
         seq = store.stageData(sid, False, no_status, False, no_quantiles)
-        python = seq.size() > 0 and any(_PYTHON_OPS.search(n) for n in _stage_ops(store, sid))
+        worker = python and seq.size() > 0 and any(
+            _PYTHON_OPS.search(n) for n in _stage_ops(store, sid)
+        )
         for i in range(seq.size()):
             s = seq.apply(i)
-            rows.append({"name": s.name(), "python": python, **{m: getattr(s, m)() for m in _METRICS}})
+            rows.append({"name": s.name(), "python": worker, **{m: getattr(s, m)() for m in _METRICS}})
     return rows
 
 
-def profile(qfn, spark, sf_dir: str) -> dict:
+def profile(qfn, spark, sf_dir: str, python: bool = False) -> dict:
     """Build ``qfn(spark, sf_dir)``, write it to the noop sink and
-    return the query's record (see the module docstring)."""
+    return the query's record (see the module docstring); ``python``
+    adds ``python_stages``."""
     from curatorhadoopinterface_spark.streaming import ops as stream_ops
 
     dag = spark.sparkContext._jsc.sc().dagScheduler()
@@ -135,7 +140,7 @@ def profile(qfn, spark, sf_dir: str) -> dict:
     t3 = time.perf_counter()
 
     build_s, exec_s = round(t1 - t0, 3), round(t2 - t1, 3)
-    rows = _stages(spark, first, end)
+    rows = _stages(spark, first, end, python)
     tot = {m: sum(r[m] for r in rows) for m in _METRICS}
     rec = {
         "sec": round(build_s + exec_s, 3),
@@ -143,7 +148,6 @@ def profile(qfn, spark, sf_dir: str) -> dict:
         "plan_s": round(t3 - t2, 3),
         "exec_s": exec_s,
         "stages": len(rows),
-        "python_stages": sum(r["python"] for r in rows),
         "tasks": tot["numCompleteTasks"],
         "run_ms": tot["executorRunTime"],
         "cpu_ms": tot["executorCpuTime"] // 1_000_000,
@@ -163,6 +167,8 @@ def profile(qfn, spark, sf_dir: str) -> dict:
             for r in sorted(rows, key=lambda r: -r["executorRunTime"])[:TOP_STAGES]
         ],
     }
+    if python:
+        rec["python_stages"] = sum(r["python"] for r in rows)
     ms = [b["trigger_ms"] for b in stream_ops.BATCH_LOG if b.get("trigger_ms") is not None]
     rec["n_batches"] = len(ms)
     if ms:

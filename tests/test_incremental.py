@@ -202,10 +202,10 @@ def test_all_hit_update_writes_nothing(spark, corpus, store_path):
     from curatorhadoopinterface_spark.profile import profile
 
     store = RecordStore(spark, store_path)
-    miss = profile(lambda s, d: store.provide_incremental(corpus, "POS"), spark, None)
+    miss = profile(lambda s, d: store.provide_incremental(corpus, "POS"), spark, None, python=True)
     assert miss["python_stages"] > 0
     before = _store_files(store_path)
-    hit = profile(lambda s, d: store.provide_incremental(corpus, "POS"), spark, None)
+    hit = profile(lambda s, d: store.provide_incremental(corpus, "POS"), spark, None, python=True)
     assert hit["python_stages"] == 0
     assert _store_files(store_path) == before
     out = store.provide_incremental(corpus, "POS")
@@ -273,6 +273,36 @@ def test_mixed_batch_matches_one_provide_over_the_lookup(spark, corpus, store_pa
     }
     assert got.keys() == want.keys() and len(got) == corpus.count() + 2
     assert got == want
+
+
+def test_complete_misses_are_inserted(spark, corpus, store_path):
+    """A pre-annotated batch over an existing store: every row is
+    complete, and the ones the store lacks are still inserted."""
+    store = RecordStore(spark, store_path)
+    store.write_full(provide(corpus.limit(1), "POS"))
+    out = store.provide_incremental(provide(corpus, "POS"), "POS")
+    ids = {r.identifier for r in corpus.select("identifier").collect()}
+    assert {r.identifier for r in out.collect()} == ids
+    assert {r.identifier for r in store.load().collect()} == ids
+    assert store.load().count() == len(ids)
+
+
+def test_load_sees_a_column_another_handle_added(spark, corpus, store_path):
+    """A handle's reused schema is checked against the store's files: a
+    column another handle wrote is read, and kept through this handle's
+    own later merge of the same bucket."""
+    a = RecordStore(spark, store_path)
+    a.write_full(provide(corpus, "TOKEN"))
+    assert "lang" not in a.load().columns
+    one = provide(corpus.limit(1), "POS").withColumn("lang", F.lit("en"))
+    (ident,) = [r.identifier for r in one.collect()]
+    RecordStore(spark, store_path).upsert(one)
+    assert "lang" in a.load().columns
+    extra = records_from_texts(spark, [f"Another document, number {i}." for i in range(64)])
+    neighbour = extra.where(F.col("identifier").startswith(ident[0])).limit(1)
+    a.upsert(provide(neighbour, "POS"))
+    langs = {r.identifier: r.lang for r in a.load().collect()}
+    assert langs[ident] == "en" and len(langs) == corpus.count() + 1
 
 
 def test_load_reads_back_a_column_an_upsert_added(spark, corpus, store_path):

@@ -97,6 +97,7 @@ def test_python_stages_counts_worker_stages(spark):
     def python(s, d):
         return jvm(s, d).mapInPandas(lambda it: (pdf for pdf in it), "id long")
 
-    assert profile(jvm, spark, None)["python_stages"] == 0
-    rec = profile(python, spark, None)
+    assert "python_stages" not in profile(python, spark, None)
+    assert profile(jvm, spark, None, python=True)["python_stages"] == 0
+    rec = profile(python, spark, None, python=True)
     assert 1 <= rec["python_stages"] < rec["stages"]

@@ -15,8 +15,10 @@ import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType
 
 from curatorhadoopinterface_spark.functions.hashing import record_identifier
+from curatorhadoopinterface_spark.schema import RECORD, SPAN
 
 
 def proc_scratch(name: str) -> str:
@@ -63,7 +65,7 @@ def read_text_corpus(spark: SparkSession, path: str, whitespaced: bool = False) 
         raw.filter(F.length(F.col("raw_text")) > 0)
         .withColumn("whitespaced", F.lit(whitespaced))
         .withColumn("identifier", record_identifier(F.col("raw_text"), F.col("whitespaced")))
-        .withColumn("label_views", F.lit(None).cast("map<string,struct<labels:array<struct<start:int,ending:int,label:string,score:double,source:string,attributes:map<string,string>>>,source:string,score:double>>"))
+        .withColumn("label_views", F.lit(None).cast(RECORD["label_views"].dataType))
         .select("identifier", "raw_text", "whitespaced", "label_views")
     )
 
@@ -84,13 +86,10 @@ def records_from_texts(spark: SparkSession, texts: list[str], whitespaced: bool 
 #: higher-order ``aggregate`` accumulates (cursor, spans) — each element's
 #: span starts where the cursor is and advances it by len+1 (the single
 #: joining space). Pure JVM Catalyst expression: NO explode, NO shuffle.
-_WS_SPANS_EXPR = """
+_WS_SPANS_EXPR = f"""
     aggregate(
-        {items},
-        struct(cast(0 as int) as pos,
-               cast(array() as array<struct<start:int,ending:int,label:string,
-                    score:double,source:string,attributes:map<string,string>>>)
-                   as spans),
+        {{items}},
+        struct(cast(0 as int) as pos, cast(array() as {ArrayType(SPAN).simpleString()}) as spans),
         (acc, s) -> struct(
             cast(acc.pos + length(s) + 1 as int) as pos,
             array_append(acc.spans, struct(
@@ -98,8 +97,8 @@ _WS_SPANS_EXPR = """
                 cast(acc.pos + length(s) as int) as ending,
                 s as label,
                 cast(1.0 as double) as score,
-                '{source}' as source,
-                cast(null as map<string,string>) as attributes))),
+                '{{source}}' as source,
+                cast(null as {SPAN['attributes'].dataType.simpleString()}) as attributes))),
         acc -> acc.spans)
 """
 
@@ -190,124 +189,6 @@ def write_corpus(df: DataFrame, path: str, mode: str = "overwrite", partition_by
     writer.parquet(path)
 
 
-#: Serialized-record container format (the engine's analogue of the
-#: reference's one-Thrift-binary-file-per-document layout,
-#: SerializationHandler.java:39-117): magic, version, then two
-#: length-prefixed UTF-8 fields (identifier, raw_text).
-_REC_MAGIC = b"CHIR"
-_REC_VERSION = 1
-
-
-def _encode_record(identifier: str, raw_text: str) -> bytes:
-    import struct
-
-    ib = identifier.encode("utf-8")
-    tb = raw_text.encode("utf-8")
-    return b"".join(
-        [
-            _REC_MAGIC,
-            bytes([_REC_VERSION]),
-            struct.pack("<I", len(ib)),
-            ib,
-            struct.pack("<I", len(tb)),
-            tb,
-        ]
-    )
-
-
-def _decode_record(blob: bytes) -> tuple[str, str]:
-    import struct
-
-    if blob[:4] != _REC_MAGIC:
-        raise ValueError("not a CHIR record (bad magic)")
-    if blob[4] != _REC_VERSION:
-        raise ValueError(f"unsupported record version {blob[4]}")
-    off = 5
-    (ilen,) = struct.unpack_from("<I", blob, off)
-    off += 4
-    identifier = blob[off : off + ilen].decode("utf-8")
-    off += ilen
-    (tlen,) = struct.unpack_from("<I", blob, off)
-    off += 4
-    raw_text = blob[off : off + tlen].decode("utf-8")
-    return identifier, raw_text
-
-
-def write_serialized_records(df: DataFrame, path: str) -> None:
-    """A5 binary sink: one ``<identifier>.rec`` file per record, written
-    EXECUTOR-side via ``foreachPartition`` (no driver collect) — the
-    distributed twin of SerializationHandler.java:39-117, which writes
-    ``<hash>.txt`` Thrift blobs one doc at a time on a single node.
-
-    Needs ``identifier`` (string) and ``raw_text`` columns. At 100 TB the
-    file-per-doc layout is only for interop/resume parity with the
-    reference (A4); parquet remains the engine's native format.
-    """
-    import os as _os
-
-    _os.makedirs(path, exist_ok=True)
-
-    def write_partition(rows) -> None:
-        import os
-
-        for row in rows:
-            blob = _encode_record(row["identifier"], row["raw_text"])
-            dest = os.path.join(path, f"{row['identifier']}.rec")
-            with open(dest, "wb") as fh:
-                fh.write(blob)
-
-    df.select("identifier", "raw_text").foreachPartition(write_partition)
-
-
-def read_serialized_records(spark: SparkSession, path: str) -> DataFrame:
-    """A2/A4 serialized-record ingestion: ``binaryFile`` scan (one row
-    per file, non-splittable — matching the reference's one-split-per-
-    record-file DirectoryInputFormat.java:33-65) + an Arrow-batched
-    decoder replacing CuratorRecordReader.java:24-57's Thrift
-    deserialization."""
-    src = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.rec")
-        .load(path)
-        .select("content")
-    )
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, texts = [], []
-            for blob in pdf["content"]:
-                identifier, raw_text = _decode_record(bytes(blob))
-                ids.append(identifier)
-                texts.append(raw_text)
-            yield pd.DataFrame({"identifier": ids, "raw_text": texts})
-
-    return src.mapInPandas(decode, "identifier string, raw_text string")
-
-
-#: Engine RECORD schema in DDL form, for the thrift reader's mapInPandas
-#: output (mirrors schema.RECORD; kept as DDL so the Arrow path gets an
-#: explicit schema without importing pyspark types worker-side).
-_RECORD_DDL = (
-    "identifier string, raw_text string, whitespaced boolean, "
-    "label_views map<string,struct<labels:array<struct<start:int,ending:int,"
-    "label:string,score:double,source:string,attributes:map<string,string>>>,"
-    "source:string,score:double>>, "
-    "cluster_views map<string,struct<clusters:array<struct<labels:array<struct<"
-    "start:int,ending:int,label:string,score:double,source:string,"
-    "attributes:map<string,string>>>>>,source:string,score:double>>, "
-    "parse_views map<string,struct<trees:array<struct<top:int,nodes:array<struct<"
-    "label:string,span:struct<start:int,ending:int,label:string,score:double,"
-    "source:string,attributes:map<string,string>>,children:map<int,string>>>,"
-    "score:double>>,source:string>>, "
-    "views map<string,struct<spans:array<struct<start:int,ending:int,"
-    "label:string,score:double,source:string,attributes:map<string,string>>>,"
-    "relations:array<struct<start:int,ending:int,label:string,score:double,"
-    "source:string>>,source:string,score:double>>"
-)
-
-
 def read_thrift_records(spark: SparkSession, path: str, glob: str = "*.txt") -> DataFrame:
     """Ingest a corpus the REFERENCE produced: one Thrift-binary Record
     file per document (SerializationHandler.java:39-117 wire format, read
@@ -316,7 +197,7 @@ def read_thrift_records(spark: SparkSession, path: str, glob: str = "*.txt") -> 
 
     ``binaryFile`` scan (one row per file, like the reference's
     one-split-per-record DirectoryInputFormat.java:33-65) + Arrow-batched
-    stdlib decode (thrift_codec.py) into the engine RECORD schema. At
+    decode (thrift_codec.py) into the engine RECORD schema. At
     100 TB the file-per-doc layout itself is the bottleneck (NN pressure,
     no splits) — ingest once, persist as parquet via write_corpus."""
     src = (
@@ -335,32 +216,35 @@ def read_thrift_records(spark: SparkSession, path: str, glob: str = "*.txt") -> 
             recs = [decode_thrift_record(bytes(b)) for b in pdf["content"]]
             yield pd.DataFrame(recs)
 
-    return src.mapInPandas(decode, _RECORD_DDL)
+    return src.mapInPandas(decode, RECORD)
 
 
 def write_thrift_records(df: DataFrame, path: str) -> None:
     """The inverse: emit a reference-READABLE serialized corpus, one
     ``<identifier>.txt`` TBinaryProtocol blob per record, executor-side
     (foreachPartition, no driver collect) — so a user can hand results
-    back to the reference stack (CuratorClient.java:299-339 resume)."""
-    import os as _os
+    back to the reference stack (CuratorClient.java:299-339 resume).
 
-    _os.makedirs(path, exist_ok=True)
-    cols = set(df.columns)
+    Identifiers come from outside the program (a foreign Thrift or
+    parquet corpus), so before anything is written one job over the
+    identifier column raises ``ValueError`` if one is null, empty, ``.``
+    or ``..``, or holds a path separator: it would name a file outside
+    ``path``. Persist an expensive ``df`` first, or it is computed twice."""
+    ident = F.col("identifier")
+    unsafe = ident.isNull() | ident.isin("", ".", "..") | ident.contains("/") | ident.contains(os.sep)
+    for row in df.where(unsafe).select("identifier").limit(1).collect():
+        raise ValueError(f"identifier {row[0]!r} does not name a file inside {path}")
+    os.makedirs(path, exist_ok=True)
 
     def write_partition(rows) -> None:
-        import os
-
         from curatorhadoopinterface_spark.thrift_codec import encode_thrift_record
 
         for row in rows:
             rec = row.asDict(recursive=True)
-            blob = encode_thrift_record(rec)
             with open(os.path.join(path, f"{rec['identifier']}.txt"), "wb") as fh:
-                fh.write(blob)
+                fh.write(encode_thrift_record(rec))
 
-    keep = [c for c in ("identifier", "raw_text", "whitespaced", "label_views", "cluster_views", "parse_views", "views") if c in cols]
-    df.select(*keep).foreachPartition(write_partition)
+    df.select(*[c for c in RECORD.fieldNames() if c in df.columns]).foreachPartition(write_partition)
 
 
 def roundtrip_check(spark: SparkSession, df: DataFrame, path: str) -> bool:

@@ -90,28 +90,26 @@ def write_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scan_binary_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2/A4/A5 serialized-record round trip: write one binary record
-    file per document (executor-side, the reference's <hash>.txt Thrift
-    layout, SerializationHandler.java:39-117), re-ingest via a
-    ``binaryFile`` scan + Arrow-batched decode (CuratorRecordReader.java:
+    """A2/A4/A5 serialized-record round trip: write one Thrift
+    TBinaryProtocol Record file per document (executor-side, the
+    reference's <hash>.txt layout, SerializationHandler.java:39-117) with
+    ``write_thrift_records``, re-ingest it with ``read_thrift_records``
+    (a ``binaryFile`` scan + Arrow-batched decode, CuratorRecordReader.java:
     24-57), and profile the decoded text. The oracle over the original
     table IS the round-trip equality check. One-file-per-doc is interop
     parity only — at 100 TB the native format stays parquet, and the
     binaryFile scan still parallelizes file-per-task like the
     reference's DirectoryInputFormat."""
-    from curatorhadoopinterface_spark.io import (
-        read_serialized_records,
-        write_serialized_records,
-    )
+    from curatorhadoopinterface_spark.io import read_thrift_records, write_thrift_records
 
     out = proc_scratch("binary_records")
     shutil.rmtree(out, ignore_errors=True)
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
-    write_serialized_records(
+    write_thrift_records(
         d.select(F.col("doc_id").cast("string").alias("identifier"), F.col("text").alias("raw_text")),
         out,
     )
-    back = read_serialized_records(spark, out)
+    back = read_thrift_records(spark, out)
     return back.select(
         "identifier",
         F.length("raw_text").alias("n_chars"),
@@ -134,7 +132,7 @@ def scan_thrift_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL reference-corpus interop: ingest the Thrift-binary Records
     the reference itself serialized (samplejob/serialized/<sha1>.txt,
     SerializationHandler.java:39-117 wire format / CuratorRecordReader
-    .java:24-57 read path) via the stdlib TBinaryProtocol decoder
+    .java:24-57 read path) via the TBinaryProtocol decoder
     (thrift_codec.py) and profile identifier + view cardinalities.
 
     The oracle is the literal expected table: these four files are fixed

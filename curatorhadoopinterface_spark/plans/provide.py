@@ -32,7 +32,7 @@ from typing import TYPE_CHECKING
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import MapType, StringType, StructField, StructType
 
 from curatorhadoopinterface_spark.plans.registry import (
     MODES,
@@ -42,18 +42,14 @@ from curatorhadoopinterface_spark.plans.registry import (
     forced_start_plan,
     invalidation_closure,
 )
-from curatorhadoopinterface_spark.schema import CLUSTERING, FOREST, LABELING
+from curatorhadoopinterface_spark.schema import RECORD
 from curatorhadoopinterface_spark.session import ensure_min_partitions
 
 if TYPE_CHECKING:
     import pandas as pd
 
-from pyspark.sql.types import MapType, StringType
-
 VIEW_COLS: dict[str, MapType] = {
-    "label_views": MapType(StringType(), LABELING),
-    "cluster_views": MapType(StringType(), CLUSTERING),
-    "parse_views": MapType(StringType(), FOREST),
+    c: RECORD[c].dataType for c in ("label_views", "cluster_views", "parse_views")
 }
 
 #: view name -> the VIEW_COLS column that holds it
@@ -70,7 +66,7 @@ def _parse_views_json(raw: str | None, family: str) -> dict:
 
     Existing view maps enter the UDF as JSON strings rather than Arrow
     maps: pyarrow's map->pandas conversion segfaults on this depth of
-    nesting (map<string,struct<array<struct<...map<int,string>>>>>), and
+    nesting (a parse_views map down to each Node's int-keyed children), and
     JSON round-trip is JVM-side + cheap relative to annotation. JSON
     stringifies the int keys of Node.children, so restore them here.
     """

@@ -4,7 +4,10 @@ Mirrors the reference's Thrift ``Record`` struct
 (modified_files_in_curator/curator-interfaces/curator.thrift:29-44) as a
 Spark ``StructType``: one row per document, open-keyed MAP columns for the
 annotation view families. Span/Labeling/Clustering/Forest payloads follow
-the generated Thrift base classes (SURVEY.md section 1.2).
+the generated Thrift base classes (SURVEY.md section 1.2). This module is
+the one statement of the layout: the Thrift codec (thrift_codec.py), the
+Record readers and writers in io.py and provide()'s view columns all take
+their types from it.
 
 Scale note: MapType view columns keep the reference's open keying, but
 nested maps defeat Parquet column pruning — the incremental layer promotes
@@ -47,14 +50,13 @@ LABELING = StructType(
     ]
 )
 
+# One cluster: a Labeling on the wire, of which the engine keeps the spans.
+CLUSTER = StructType([StructField("labels", ArrayType(SPAN), True)])
+
 # Clustering: list of span-groups, e.g. coref chains (Clustering.java:51-63).
 CLUSTERING = StructType(
     [
-        StructField(
-            "clusters",
-            ArrayType(StructType([StructField("labels", ArrayType(SPAN), True)])),
-            True,
-        ),
+        StructField("clusters", ArrayType(CLUSTER), True),
         StructField("source", StringType(), True),
         StructField("score", DoubleType(), True),
     ]
@@ -120,5 +122,18 @@ RECORD = StructType(
         StructField("cluster_views", MapType(StringType(), CLUSTERING), True),
         StructField("parse_views", MapType(StringType(), FOREST), True),
         StructField("views", MapType(StringType(), VIEW), True),
+    ]
+)
+
+# MultiRecord (curator.thrift:46-53): the cross-document annotation unit,
+# member record identifiers plus corpus-level views whose spans index the
+# concatenation of the member texts.
+MULTIRECORD = StructType(
+    [
+        StructField("identifier", StringType(), False),
+        StructField("records", ArrayType(StringType()), True),
+        RECORD["label_views"],
+        RECORD["cluster_views"],
+        RECORD["parse_views"],
     ]
 )

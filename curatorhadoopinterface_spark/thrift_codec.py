@@ -1,11 +1,11 @@
-"""Minimal Apache Thrift TBinaryProtocol codec for curator ``Record`` blobs.
+"""Apache Thrift TBinaryProtocol codec for curator ``Record`` blobs.
 
 The reference's live corpus format is one Thrift-binary file per document
 (samplejob/serialized/<sha1>.txt), written by CuratorClient.java:473-496
 via SerializationHandler.java:39-117 (``record.write(new TBinaryProtocol(
 new TIOStreamTransport(out)))``) and read back by
 CuratorRecordReader.java:24-57. This module decodes/encodes that public
-wire format with the stdlib only — no thrift runtime dependency.
+wire format without a thrift runtime.
 
 Wire format (public TBinaryProtocol spec): a struct is a sequence of
 fields ``(1-byte type, 2-byte big-endian id, payload)`` terminated by a
@@ -13,35 +13,29 @@ fields ``(1-byte type, 2-byte big-endian id, payload)`` terminated by a
 strict-mode flag affects RPC messages only), so a serialized Record file
 is exactly one struct body.
 
-Field ids below come from the reference's generated base classes
-(curator-interfaces.jar: Span.java / Labeling.java / Clustering.java /
-Forest.java / Tree.java / Node.java / View.java TField constants) and
-curator.thrift:29-44 for Record itself:
-
-  Record:    1 identifier(str) 2 rawText(str) 3 labelViews(map<str,Labeling>)
-             4 clusterViews(map<str,Clustering>) 5 parseViews(map<str,Forest>)
-             6 views(map<str,View>) 7 whitespaced(bool)
-  Labeling:  1 labels(list<Span>) 2 source(str) 3 score(dbl) 4 rawText(str)
-  Clustering:1 clusters(list<Labeling>) 2 source(str) 3 score(dbl) 4 rawText(str)
-  Forest:    1 trees(list<Tree>) 2 rawText(str) 3 source(str)
-  Tree:      1 nodes(list<Node>) 2 top(i32) 3 source(str) 4 score(dbl)
-  Node:      1 label(str) 2 span(Span) 3 children(map<i32,str>) 4 source(str) 5 score(dbl)
-  Span:      1 start(i32) 2 ending(i32) 3 label(str) 4 score(dbl)
-             5 source(str) 6 attributes(map<str,str>) 7 multiIndex(i32)
-
-Decoding is GENERIC (the wire format is self-describing up to
-string-vs-binary), then shaped onto the engine's RECORD schema
-(schema.py). All four view families round-trip losslessly, including the
-general ``views`` map (field 6, View = spans + relations graph,
-View.java:42-46 / Relation.java:42-46). Only per-view ``rawText``
-duplicates and Span.multiIndex are parsed-then-dropped (the engine keys
-everything off the Record-level raw_text; multiIndex is a MultiRecord-
-only positional hint the reference itself never sets on single records).
+The layout is schema.py's: this module holds only the wire facts (type
+codes and ``FIELD_IDS``) and builds one reader and one writer per struct
+from the schema types. The reader emits the RECORD-shaped dict in one
+pass and skips any field whose id or wire type the schema does not hold
+(per-view ``rawText``, Span.multiIndex, Node.source/score, Tree.source): the
+engine keys everything off the Record-level raw_text, and multiIndex is
+a MultiRecord-only positional hint the reference never sets on single
+records. The writer emits fields in id order; a field is always written
+when it is non-nullable, a list, or one of the view maps a Record or
+MultiRecord always carries, and otherwise skipped when None or an empty
+map.
 """
 
 from __future__ import annotations
 
+import functools
 import struct as _s
+
+from pyspark.sql.types import ArrayType, BooleanType, DoubleType, IntegerType, MapType, StringType, StructType
+
+from curatorhadoopinterface_spark.schema import (
+    CLUSTER, CLUSTERING, FOREST, LABELING, MULTIRECORD, NODE, RECORD, RELATION, SPAN, TREE, VIEW,
+)
 
 # TBinaryProtocol type codes
 T_STOP, T_BOOL, T_BYTE, T_DOUBLE, T_I16, T_I32, T_I64, T_STRING = (
@@ -49,361 +43,262 @@ T_STOP, T_BOOL, T_BYTE, T_DOUBLE, T_I16, T_I32, T_I64, T_STRING = (
 )
 T_STRUCT, T_MAP, T_SET, T_LIST = 12, 13, 14, 15
 
+#: schema struct -> {field name: thrift id}, from the TField constants of
+#: the reference's generated classes (Span.java, Labeling.java,
+#: Clustering.java, Forest.java, Tree.java, Node.java, View.java,
+#: Relation.java) and curator.thrift:29-53. Ids missing here are read
+#: and dropped: Span 7 multiIndex; Labeling/Clustering 4, Forest 2 and
+#: View 3 rawText; Tree 3 source; Node 4 source, 5 score.
+FIELD_IDS = {
+    SPAN: {"start": 1, "ending": 2, "label": 3, "score": 4, "source": 5, "attributes": 6},
+    LABELING: {"labels": 1, "source": 2, "score": 3},
+    CLUSTER: {"labels": 1},
+    CLUSTERING: {"clusters": 1, "source": 2, "score": 3},
+    NODE: {"label": 1, "span": 2, "children": 3},
+    TREE: {"nodes": 1, "top": 2, "score": 4},
+    FOREST: {"trees": 1, "source": 3},
+    RELATION: {"start": 1, "ending": 2, "label": 3, "source": 4, "score": 5},
+    VIEW: {"spans": 1, "relations": 2, "source": 4, "score": 5},
+    RECORD: {
+        "identifier": 1, "raw_text": 2, "label_views": 3, "cluster_views": 4,
+        "parse_views": 5, "views": 6, "whitespaced": 7,
+    },
+    MULTIRECORD: {
+        "identifier": 1, "records": 2, "label_views": 3, "cluster_views": 4,
+        "parse_views": 5, "views": 6,
+    },
+}
 
-# --------------------------------------------------------------------------
-# generic decoder: bytes -> {field_id: value} trees
-# --------------------------------------------------------------------------
-class _Reader:
-    __slots__ = ("b", "o")
+#: the view maps a Record or MultiRecord always carries: written empty
+#: for None, read back as None when empty
+_WIRE_MAPS = frozenset(("label_views", "cluster_views", "parse_views", "views"))
 
-    def __init__(self, blob: bytes) -> None:
-        self.b = blob
-        self.o = 0
-
-    def _take(self, n: int) -> bytes:
-        v = self.b[self.o : self.o + n]
-        if len(v) != n:
-            raise ValueError("truncated thrift blob")
-        self.o += n
-        return v
-
-    def value(self, ttype: int):
-        if ttype == T_BOOL:
-            return self._take(1)[0] != 0
-        if ttype == T_BYTE:
-            return _s.unpack(">b", self._take(1))[0]
-        if ttype == T_DOUBLE:
-            return _s.unpack(">d", self._take(8))[0]
-        if ttype == T_I16:
-            return _s.unpack(">h", self._take(2))[0]
-        if ttype == T_I32:
-            return _s.unpack(">i", self._take(4))[0]
-        if ttype == T_I64:
-            return _s.unpack(">q", self._take(8))[0]
-        if ttype == T_STRING:
-            n = _s.unpack(">i", self._take(4))[0]
-            return self._take(n).decode("utf-8")
-        if ttype == T_STRUCT:
-            return self.struct()
-        if ttype == T_MAP:
-            kt, vt = self._take(1)[0], self._take(1)[0]
-            n = _s.unpack(">i", self._take(4))[0]
-            return {self.value(kt): self.value(vt) for _ in range(n)}
-        if ttype in (T_SET, T_LIST):
-            et = self._take(1)[0]
-            n = _s.unpack(">i", self._take(4))[0]
-            return [self.value(et) for _ in range(n)]
-        raise ValueError(f"unknown thrift type {ttype}")
-
-    def struct(self) -> dict:
-        out = {}
-        while True:
-            ftype = self._take(1)[0]
-            if ftype == T_STOP:
-                return out
-            (fid,) = _s.unpack(">h", self._take(2))
-            out[fid] = self.value(ftype)
+_HEAD = _s.Struct(">Bh")
+_I32 = _s.Struct(">i")
+_DBL = _s.Struct(">d")
+_LIST = _s.Struct(">Bi")
+_MAP = _s.Struct(">BBi")
+_WIDTH = {T_BOOL: 1, T_BYTE: 1, T_DOUBLE: 8, T_I16: 2, T_I32: 4, T_I64: 8}
+_TRUNCATED = "truncated thrift blob"
 
 
-# --------------------------------------------------------------------------
-# shape the generic field-id tree onto the engine RECORD schema (schema.py)
-# --------------------------------------------------------------------------
-def _span(d: dict) -> dict:
-    return {
-        "start": d.get(1),
-        "ending": d.get(2),
-        "label": d.get(3),
-        "score": d.get(4),
-        "source": d.get(5),
-        "attributes": d.get(6),
-    }
+def _skip(b: bytes, o: int, t: int) -> int:
+    """Offset past one value of wire type ``t`` that the schema does not hold."""
+    if t in _WIDTH:
+        o += _WIDTH[t]
+    elif t == T_STRING:
+        n = _I32.unpack_from(b, o)[0]
+        if n < 0:
+            raise ValueError(_TRUNCATED)
+        o += 4 + n
+    elif t == T_STRUCT:
+        while ft := b[o]:
+            o = _skip(b, o + 3, ft)
+        o += 1
+    elif t == T_MAP:
+        kt, vt, n = _MAP.unpack_from(b, o)
+        o += 6
+        for _ in range(n):
+            o = _skip(b, _skip(b, o, kt), vt)
+    elif t in (T_SET, T_LIST):
+        et, n = _LIST.unpack_from(b, o)
+        o += 5
+        for _ in range(n):
+            o = _skip(b, o, et)
+    else:
+        raise ValueError(f"unknown thrift type {t}")
+    if o > len(b):
+        raise ValueError(_TRUNCATED)
+    return o
 
 
-def _labeling(d: dict) -> dict:
-    return {
-        "labels": [_span(x) for x in d.get(1, [])],
-        "source": d.get(2),
-        "score": d.get(3),
-    }
+def _read_i32(b, o):
+    return _I32.unpack_from(b, o)[0], o + 4
 
 
-def _clustering(d: dict) -> dict:
-    return {
-        "clusters": [{"labels": [_span(x) for x in c.get(1, [])]} for c in d.get(1, [])],
-        "source": d.get(2),
-        "score": d.get(3),
-    }
+def _read_double(b, o):
+    return _DBL.unpack_from(b, o)[0], o + 8
 
 
-def _node(d: dict) -> dict:
-    return {
-        "label": d.get(1),
-        "span": _span(d[2]) if 2 in d else None,
-        "children": d.get(3),
-    }
+def _read_bool(b, o):
+    return b[o] != 0, o + 1
 
 
-def _tree(d: dict) -> dict:
-    return {
-        "top": d.get(2),
-        "nodes": [_node(x) for x in d.get(1, [])],
-        "score": d.get(4),
-    }
+def _read_str(b, o):
+    n = _I32.unpack_from(b, o)[0]
+    e = o + 4 + n
+    if n < 0 or e > len(b):
+        raise ValueError(_TRUNCATED)
+    return b[o + 4 : e].decode("utf-8"), e
 
 
-def _forest(d: dict) -> dict:
-    return {
-        "trees": [_tree(x) for x in d.get(1, [])],
-        "source": d.get(3),
-    }
+def _write_i32(buf, v):
+    buf += _I32.pack(v)
 
 
-def _relation(d: dict) -> dict:
-    # Relation.java:42-46: start/ending are INDICES into View.spans
-    return {
-        "start": d.get(1),
-        "ending": d.get(2),
-        "label": d.get(3),
-        "source": d.get(4),
-        "score": d.get(5),
-    }
+def _write_double(buf, v):
+    buf += _DBL.pack(v)
 
 
-def _view(d: dict) -> dict:
-    # View.java:42-46 (1 spans, 2 relations, 3 rawText, 4 source,
-    # 5 score); per-view rawText duplicates Record.rawText and is
-    # dropped, matching the Labeling/Forest treatment.
-    return {
-        "spans": [_span(x) for x in d.get(1, [])],
-        "relations": [_relation(x) for x in d.get(2, [])],
-        "source": d.get(4),
-        "score": d.get(5),
-    }
+def _write_bool(buf, v):
+    buf.append(1 if v else 0)
+
+
+def _write_str(buf, v):
+    e = v.encode("utf-8")
+    buf += _I32.pack(len(e))
+    buf += e
+
+
+_PRIMITIVES = {
+    IntegerType: (T_I32, _read_i32, _write_i32),
+    DoubleType: (T_DOUBLE, _read_double, _write_double),
+    BooleanType: (T_BOOL, _read_bool, _write_bool),
+    StringType: (T_STRING, _read_str, _write_str),
+}
+#: what an always-written field carries when its value is None
+_ZERO = {T_I32: 0, T_BOOL: False}
+
+
+@functools.cache
+def _walkers(dt):
+    """(wire type, reader, writer) for one schema type, built once. A
+    reader maps ``(blob, offset)`` to ``(value, next offset)``; a writer
+    appends a value to a bytearray."""
+    if isinstance(dt, ArrayType):
+        et, er, ew = _walkers(dt.elementType)
+
+        def read_list(b, o):
+            t, n = _LIST.unpack_from(b, o)
+            o += 5
+            if t != et:
+                for _ in range(n):
+                    o = _skip(b, o, t)
+                return [], o
+            out = []
+            for _ in range(n):
+                v, o = er(b, o)
+                out.append(v)
+            return out, o
+
+        def write_list(buf, v):
+            buf += _LIST.pack(et, len(v))
+            for x in v:
+                ew(buf, x)
+
+        return T_LIST, read_list, write_list
+    if isinstance(dt, MapType):
+        kt, kr, kw = _walkers(dt.keyType)
+        vt, vr, vw = _walkers(dt.valueType)
+
+        def read_map(b, o):
+            t, u, n = _MAP.unpack_from(b, o)
+            o += 6
+            if (t, u) != (kt, vt):
+                for _ in range(n):
+                    o = _skip(b, _skip(b, o, t), u)
+                return None, o
+            out = {}
+            for _ in range(n):
+                k, o = kr(b, o)
+                out[k], o = vr(b, o)
+            return out, o
+
+        def write_map(buf, v):
+            buf += _MAP.pack(kt, vt, len(v))
+            for k, x in v.items():
+                kw(buf, k)
+                vw(buf, x)
+
+        return T_MAP, read_map, write_map
+    if not isinstance(dt, StructType):
+        return _PRIMITIVES[type(dt)]
+
+    ids = FIELD_IDS[dt]
+    names = dt.fieldNames()
+    fields, spec = {}, []
+    for f in sorted(dt.fields, key=lambda f: ids[f.name]):
+        t, r, w = _walkers(f.dataType)
+        head = _HEAD.pack(t, ids[f.name])
+        fields[head] = (f.name, r)
+        always = not f.nullable or t == T_LIST or f.name in _WIRE_MAPS
+        zero = [] if t == T_LIST else {} if t == T_MAP else _ZERO.get(t)
+        spec.append((f.name, head, w, always, zero, t == T_MAP))
+    lists = [f.name for f in dt.fields if isinstance(f.dataType, ArrayType)]
+    bools = [f.name for f in dt.fields if isinstance(f.dataType, BooleanType)]
+    wire_maps = [n for n in names if n in _WIRE_MAPS]
+
+    def read_struct(b, o):
+        out = dict.fromkeys(names)
+        while t := b[o]:
+            f = fields.get(b[o : o + 3])
+            if f is None:
+                o = _skip(b, o + 3, t)
+            else:
+                out[f[0]], o = f[1](b, o + 3)
+        for n in lists:
+            if out[n] is None:
+                out[n] = []
+        for n in bools:
+            out[n] = bool(out[n])
+        for n in wire_maps:
+            out[n] = out[n] or None
+        return out, o + 1
+
+    def write_struct(buf, v):
+        for name, head, w, always, zero, is_map in spec:
+            x = v.get(name)
+            if x is None or (is_map and not x):
+                if not always:
+                    continue
+                x = zero
+            buf += head
+            w(buf, x)
+        buf.append(T_STOP)
+
+    return T_STRUCT, read_struct, write_struct
+
+
+# MultiRecord's field 6 (views) has no engine column: it is written
+# empty, as the wire requires, and skipped on read.
+_MULTIRECORD_OUT = StructType([*MULTIRECORD.fields, RECORD["views"]])
+FIELD_IDS[_MULTIRECORD_OUT] = FIELD_IDS[MULTIRECORD]
+
+_, _read_record, _write_record = _walkers(RECORD)
+_, _read_multirecord, _ = _walkers(MULTIRECORD)
+_, _, _write_multirecord = _walkers(_MULTIRECORD_OUT)
+
+
+def _decode(read, blob) -> dict:
+    try:
+        return read(bytes(blob), 0)[0]
+    except (_s.error, IndexError) as e:
+        raise ValueError(_TRUNCATED) from e
+
+
+def _encode(write, rec: dict) -> bytes:
+    buf = bytearray()
+    write(buf, rec)
+    return bytes(buf)
 
 
 def decode_thrift_record(blob: bytes) -> dict:
     """One serialized Record file -> engine RECORD-schema dict."""
-    raw = _Reader(blob).struct()
-    return {
-        "identifier": raw.get(1),
-        "raw_text": raw.get(2),
-        "whitespaced": bool(raw.get(7, False)),
-        "label_views": {k: _labeling(v) for k, v in raw.get(3, {}).items()} or None,
-        "cluster_views": {k: _clustering(v) for k, v in raw.get(4, {}).items()} or None,
-        "parse_views": {k: _forest(v) for k, v in raw.get(5, {}).items()} or None,
-        "views": {k: _view(v) for k, v in raw.get(6, {}).items()} or None,
-    }
+    return _decode(_read_record, blob)
 
 
-# --------------------------------------------------------------------------
-# encoder (the inverse, for write-side interop + round-trip tests)
-# --------------------------------------------------------------------------
-class _Writer:
-    __slots__ = ("parts",)
-
-    def __init__(self) -> None:
-        self.parts: list[bytes] = []
-
-    def field(self, ftype: int, fid: int) -> None:
-        self.parts.append(_s.pack(">bh", ftype, fid))
-
-    def stop(self) -> None:
-        self.parts.append(b"\x00")
-
-    def v_bool(self, v: bool) -> None:
-        self.parts.append(b"\x01" if v else b"\x00")
-
-    def v_i32(self, v: int) -> None:
-        self.parts.append(_s.pack(">i", v))
-
-    def v_double(self, v: float) -> None:
-        self.parts.append(_s.pack(">d", v))
-
-    def v_str(self, v: str) -> None:
-        b = v.encode("utf-8")
-        self.parts.append(_s.pack(">i", len(b)) + b)
-
-    def map_header(self, kt: int, vt: int, n: int) -> None:
-        self.parts.append(_s.pack(">bbi", kt, vt, n))
-
-    def list_header(self, et: int, n: int) -> None:
-        self.parts.append(_s.pack(">bi", et, n))
-
-
-def _w_span(w: _Writer, s: dict) -> None:
-    w.field(T_I32, 1); w.v_i32(s.get("start") or 0)
-    w.field(T_I32, 2); w.v_i32(s.get("ending") or 0)
-    if s.get("label") is not None:
-        w.field(T_STRING, 3); w.v_str(s["label"])
-    if s.get("score") is not None:
-        w.field(T_DOUBLE, 4); w.v_double(s["score"])
-    if s.get("source") is not None:
-        w.field(T_STRING, 5); w.v_str(s["source"])
-    if s.get("attributes"):
-        w.field(T_MAP, 6)
-        w.map_header(T_STRING, T_STRING, len(s["attributes"]))
-        for k, v in s["attributes"].items():
-            w.v_str(k); w.v_str(v)
-    w.stop()
-
-
-def _w_labeling(w: _Writer, lab: dict) -> None:
-    w.field(T_LIST, 1)
-    spans = lab.get("labels") or []
-    w.list_header(T_STRUCT, len(spans))
-    for s in spans:
-        _w_span(w, s)
-    if lab.get("source") is not None:
-        w.field(T_STRING, 2); w.v_str(lab["source"])
-    if lab.get("score") is not None:
-        w.field(T_DOUBLE, 3); w.v_double(lab["score"])
-    w.stop()
-
-
-def _w_clustering(w: _Writer, cl: dict) -> None:
-    w.field(T_LIST, 1)
-    clusters = cl.get("clusters") or []
-    w.list_header(T_STRUCT, len(clusters))
-    for c in clusters:
-        _w_labeling(w, {"labels": c.get("labels") or []})
-    if cl.get("source") is not None:
-        w.field(T_STRING, 2); w.v_str(cl["source"])
-    if cl.get("score") is not None:
-        w.field(T_DOUBLE, 3); w.v_double(cl["score"])
-    w.stop()
-
-
-def _w_forest(w: _Writer, fo: dict) -> None:
-    w.field(T_LIST, 1)
-    trees = fo.get("trees") or []
-    w.list_header(T_STRUCT, len(trees))
-    for t in trees:
-        w.field(T_LIST, 1)
-        nodes = t.get("nodes") or []
-        w.list_header(T_STRUCT, len(nodes))
-        for n in nodes:
-            if n.get("label") is not None:
-                w.field(T_STRING, 1); w.v_str(n["label"])
-            if n.get("span") is not None:
-                w.field(T_STRUCT, 2); _w_span(w, n["span"])
-            if n.get("children"):
-                w.field(T_MAP, 3)
-                w.map_header(T_I32, T_STRING, len(n["children"]))
-                for k, v in n["children"].items():
-                    w.v_i32(int(k)); w.v_str(v)
-            w.stop()
-        if t.get("top") is not None:
-            w.field(T_I32, 2); w.v_i32(t["top"])
-        if t.get("score") is not None:
-            w.field(T_DOUBLE, 4); w.v_double(t["score"])
-        w.stop()
-    if fo.get("source") is not None:
-        w.field(T_STRING, 3); w.v_str(fo["source"])
-    w.stop()
-
-
-def _w_relation(w: _Writer, r: dict) -> None:
-    w.field(T_I32, 1); w.v_i32(r.get("start") or 0)
-    w.field(T_I32, 2); w.v_i32(r.get("ending") or 0)
-    if r.get("label") is not None:
-        w.field(T_STRING, 3); w.v_str(r["label"])
-    if r.get("source") is not None:
-        w.field(T_STRING, 4); w.v_str(r["source"])
-    if r.get("score") is not None:
-        w.field(T_DOUBLE, 5); w.v_double(r["score"])
-    w.stop()
-
-
-def _w_view(w: _Writer, v: dict) -> None:
-    w.field(T_LIST, 1)
-    spans = v.get("spans") or []
-    w.list_header(T_STRUCT, len(spans))
-    for s in spans:
-        _w_span(w, s)
-    w.field(T_LIST, 2)
-    rels = v.get("relations") or []
-    w.list_header(T_STRUCT, len(rels))
-    for r in rels:
-        _w_relation(w, r)
-    if v.get("source") is not None:
-        w.field(T_STRING, 4); w.v_str(v["source"])
-    if v.get("score") is not None:
-        w.field(T_DOUBLE, 5); w.v_double(v["score"])
-    w.stop()
+def encode_thrift_record(rec: dict) -> bytes:
+    """Engine RECORD-schema dict -> reference-compatible Record blob."""
+    return _encode(_write_record, rec)
 
 
 def decode_thrift_multirecord(blob: bytes) -> dict:
     """One serialized MultiRecord (curator.thrift:46-53: the cross-doc
     annotation unit — member record identifiers + corpus-level views
     whose spans index into the concatenation of member rawTexts)."""
-    raw = _Reader(blob).struct()
-    return {
-        "identifier": raw.get(1),
-        "records": raw.get(2, []),
-        "label_views": {k: _labeling(v) for k, v in raw.get(3, {}).items()} or None,
-        "cluster_views": {k: _clustering(v) for k, v in raw.get(4, {}).items()} or None,
-        "parse_views": {k: _forest(v) for k, v in raw.get(5, {}).items()} or None,
-    }
+    return _decode(_read_multirecord, blob)
 
 
 def encode_thrift_multirecord(rec: dict) -> bytes:
-    """Engine dict -> reference-compatible MultiRecord blob."""
-    w = _Writer()
-    w.field(T_STRING, 1); w.v_str(rec["identifier"])
-    w.field(T_LIST, 2)
-    members = rec.get("records") or []
-    w.list_header(T_STRING, len(members))
-    for m in members:
-        w.v_str(m)
-    w.field(T_MAP, 3)
-    lv = rec.get("label_views") or {}
-    w.map_header(T_STRING, T_STRUCT, len(lv))
-    for k, v in lv.items():
-        w.v_str(k); _w_labeling(w, v)
-    w.field(T_MAP, 4)
-    cv = rec.get("cluster_views") or {}
-    w.map_header(T_STRING, T_STRUCT, len(cv))
-    for k, v in cv.items():
-        w.v_str(k); _w_clustering(w, v)
-    w.field(T_MAP, 5)
-    pv = rec.get("parse_views") or {}
-    w.map_header(T_STRING, T_STRUCT, len(pv))
-    for k, v in pv.items():
-        w.v_str(k); _w_forest(w, v)
-    w.field(T_MAP, 6)
-    w.map_header(T_STRING, T_STRUCT, 0)
-    w.stop()
-    return b"".join(w.parts)
-
-
-def encode_thrift_record(rec: dict) -> bytes:
-    """Engine RECORD-schema dict -> reference-compatible Record blob.
-
-    Required maps are written even when empty (the generated Java writer
-    does the same for the struct's ``required`` fields)."""
-    w = _Writer()
-    w.field(T_STRING, 1); w.v_str(rec["identifier"])
-    w.field(T_STRING, 2); w.v_str(rec["raw_text"])
-    w.field(T_MAP, 3)
-    lv = rec.get("label_views") or {}
-    w.map_header(T_STRING, T_STRUCT, len(lv))
-    for k, v in lv.items():
-        w.v_str(k); _w_labeling(w, v)
-    w.field(T_MAP, 4)
-    cv = rec.get("cluster_views") or {}
-    w.map_header(T_STRING, T_STRUCT, len(cv))
-    for k, v in cv.items():
-        w.v_str(k); _w_clustering(w, v)
-    w.field(T_MAP, 5)
-    pv = rec.get("parse_views") or {}
-    w.map_header(T_STRING, T_STRUCT, len(pv))
-    for k, v in pv.items():
-        w.v_str(k); _w_forest(w, v)
-    w.field(T_MAP, 6)
-    gv = rec.get("views") or {}
-    w.map_header(T_STRING, T_STRUCT, len(gv))
-    for k, v in gv.items():
-        w.v_str(k); _w_view(w, v)
-    w.field(T_BOOL, 7); w.v_bool(bool(rec.get("whitespaced", False)))
-    w.stop()
-    return b"".join(w.parts)
+    """Engine MULTIRECORD-schema dict -> reference-compatible MultiRecord blob."""
+    return _encode(_write_multirecord, rec)

@@ -2,6 +2,7 @@
 (A3/A5; CuratorClient.java:527-536, HadoopCuratorClient.java:83-104)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from curatorhadoopinterface_spark.io import records_from_texts, roundtrip_check, write_corpus
 from curatorhadoopinterface_spark.plans.provide import provide
@@ -32,40 +33,28 @@ def test_partitioned_write(spark, corpus, tmp_path):
     assert back.count() == corpus.count()
 
 
-def test_record_codec_roundtrip_unicode():
-    from curatorhadoopinterface_spark.io import _decode_record, _encode_record
-
-    for ident, text in [("abc123", "hello world"), ("7", "中文 — naïve\nmulti\tline")]:
-        assert _decode_record(_encode_record(ident, text)) == (ident, text)
-
-
-def test_record_codec_rejects_garbage():
-    import pytest
-
-    from curatorhadoopinterface_spark.io import _decode_record, _encode_record
-
-    with pytest.raises(ValueError, match="magic"):
-        _decode_record(b"NOPE" + b"\x00" * 16)
-    blob = bytearray(_encode_record("x", "y"))
-    blob[4] = 99
-    with pytest.raises(ValueError, match="version"):
-        _decode_record(bytes(blob))
-
-
 def test_serialized_records_roundtrip(spark, corpus, tmp_path):
-    from curatorhadoopinterface_spark.io import (
-        read_serialized_records,
-        write_serialized_records,
-    )
+    from curatorhadoopinterface_spark.io import read_thrift_records, write_thrift_records
 
     out = str(tmp_path / "recs")
-    write_serialized_records(
-        corpus.select("identifier", "raw_text"), out
-    )
-    back = read_serialized_records(spark, out)
+    write_thrift_records(corpus.select("identifier", "raw_text"), out)
+    back = read_thrift_records(spark, out)
     orig = {(r.identifier, r.raw_text) for r in corpus.collect()}
     got = {(r.identifier, r.raw_text) for r in back.collect()}
     assert got == orig
+
+
+@pytest.mark.parametrize("ident", ["../escaped", "a/b", "", ".", "..", None])
+def test_write_thrift_records_rejects_unsafe_identifier(spark, tmp_path, ident):
+    """An identifier that would name a file outside the output directory
+    raises before anything is written."""
+    from curatorhadoopinterface_spark.io import write_thrift_records
+
+    out = tmp_path / "out"
+    df = spark.createDataFrame([("ok", "fine"), (ident, "bad")], "identifier string, raw_text string")
+    with pytest.raises(ValueError, match="does not name a file"):
+        write_thrift_records(df, str(out))
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_load_table_rewritten_file_replaces_cache_entry(spark, tmp_path):

@@ -93,38 +93,25 @@ def test_identifier_reproduces_reference_sha1_on_adversarial_texts(spark):
         assert got[t] == expected, t
 
 
-@settings(max_examples=200, deadline=None)
-@given(TEXTS, TEXTS)
-def test_record_codec_total_roundtrip(identifier, text):
-    # the binary record container (io._encode_record) must be lossless
-    # for ANY identifier/text pair, including empty strings and
-    # full-plane unicode — the A5 serialize + A2 deserialize contract
-    from curatorhadoopinterface_spark.io import _decode_record, _encode_record
-
-    assert _decode_record(_encode_record(identifier, text)) == (identifier, text)
-
-
 # ---- thrift codec: adversarial round-trip (tests/test_thrift_interop
 # pins the 4 real reference files; this pins the wire format on
 # arbitrary records) ----
 
-_SPANS = st.lists(
-    st.builds(
-        lambda a, b, label, attrs: {
-            "start": min(a, b),
-            "ending": max(a, b) + 1,
-            "label": label,
-            "score": None,
-            "source": None,
-            "attributes": attrs or None,
-        },
-        st.integers(0, 300),
-        st.integers(0, 300),
-        st.one_of(st.none(), TEXTS),
-        st.dictionaries(TEXTS, TEXTS, max_size=3),
-    ),
-    max_size=5,
+_SPAN = st.builds(
+    lambda a, b, label, attrs: {
+        "start": min(a, b),
+        "ending": max(a, b) + 1,
+        "label": label,
+        "score": None,
+        "source": None,
+        "attributes": attrs or None,
+    },
+    st.integers(0, 300),
+    st.integers(0, 300),
+    st.one_of(st.none(), TEXTS),
+    st.dictionaries(TEXTS, TEXTS, max_size=3),
 )
+_SPANS = st.lists(_SPAN, max_size=5)
 
 
 _RELATIONS = st.lists(
@@ -144,6 +131,30 @@ _RELATIONS = st.lists(
 )
 
 
+_CLUSTERS = st.lists(st.builds(lambda spans: {"labels": spans}, _SPANS), max_size=3)
+
+
+_NODES = st.lists(
+    st.builds(
+        lambda label, span, children: {"label": label, "span": span, "children": children or None},
+        st.one_of(st.none(), TEXTS),
+        st.one_of(st.none(), _SPAN),
+        st.dictionaries(st.integers(0, 9), TEXTS, max_size=3),
+    ),
+    max_size=4,
+)
+
+_TREES = st.lists(
+    st.builds(
+        lambda top, nodes, score: {"top": top, "nodes": nodes, "score": score},
+        st.one_of(st.none(), st.integers(0, 3)),
+        _NODES,
+        st.one_of(st.none(), st.floats(allow_nan=False)),
+    ),
+    max_size=3,
+)
+
+
 @settings(max_examples=150, deadline=None)
 @given(
     ident=st.text(min_size=1, max_size=64),
@@ -152,8 +163,10 @@ _RELATIONS = st.lists(
     view=st.one_of(st.none(), _SPANS),
     gspans=st.one_of(st.none(), _SPANS),
     grels=_RELATIONS,
+    clusters=st.one_of(st.none(), _CLUSTERS),
+    trees=st.one_of(st.none(), _TREES),
 )
-def test_thrift_record_roundtrip_arbitrary(ident, raw, ws, view, gspans, grels):
+def test_thrift_record_roundtrip_arbitrary(ident, raw, ws, view, gspans, grels, clusters, trees):
     from curatorhadoopinterface_spark.thrift_codec import (
         decode_thrift_record,
         encode_thrift_record,
@@ -168,8 +181,15 @@ def test_thrift_record_roundtrip_arbitrary(ident, raw, ws, view, gspans, grels):
             if view is not None
             else None
         ),
-        "cluster_views": None,
-        "parse_views": None,
+        "cluster_views": (
+            {"coref": {"clusters": clusters, "source": "c-1.0", "score": 0.5}}
+            if clusters is not None
+            else None
+        ),
+        # Forest/Tree/Node with a span and int-keyed children per node
+        "parse_views": (
+            {"parse": {"trees": trees, "source": "p-1.0"}} if trees is not None else None
+        ),
         # general views map (field 6): spans + relations graph
         "views": (
             {

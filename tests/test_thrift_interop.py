@@ -4,14 +4,18 @@ The reference ships 4 raw docs (samplejob/doc1-4.txt), their serialized
 Thrift Records (samplejob/serialized/<sha1>.txt, written by
 SerializationHandler.java:39-117) and annotated outputs
 (samplejob/output/, the CuratorClientTester.java:28-131 artifacts).
-These tests read the ACTUAL reference files — the highest-fidelity
-parity evidence available without running the reference stack.
+The tests marked ``needs_samplejob`` read the ACTUAL reference files —
+the highest-fidelity parity evidence available without running the
+reference stack. The rest pin the codec on hand-built input: golden wire
+bytes, truncated and foreign blobs, and the MultiRecord and general
+``views`` round trips.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import struct
 import tempfile
 
 import pytest
@@ -19,9 +23,75 @@ from curatorhadoopinterface_spark.io import proc_scratch
 
 SAMPLEJOB = "/root/reference/samplejob"
 
-pytestmark = pytest.mark.skipif(
+needs_samplejob = pytest.mark.skipif(
     not os.path.isdir(SAMPLEJOB), reason="reference samplejob fixtures not present"
 )
+
+
+def _span(start, ending, label=None, score=None, source=None, attributes=None):
+    return {"start": start, "ending": ending, "label": label, "score": score,
+            "source": source, "attributes": attributes}
+
+
+# one Record that fills all four view families, with attributes, int-keyed
+# children and None optionals at every level
+_GOLDEN_RECORD = {
+    "identifier": "golden-1",
+    "raw_text": "Alice pays Bob. Ça va?",
+    "whitespaced": True,
+    "label_views": {
+        "tokens": {
+            "labels": [_span(0, 5, "Alice", 1.0, "tok-1", {"case": "upper", "ne": "PER"}),
+                       _span(6, 10, "pays")],
+            "source": "tok-1",
+            "score": None,
+        },
+        "empty": {"labels": [], "source": None, "score": 0.0},
+    },
+    "cluster_views": {
+        "coref": {
+            "clusters": [{"labels": [_span(0, 5, "M"), _span(11, 14, "M", 0.5)]}, {"labels": []}],
+            "source": "coref-1",
+            "score": 0.75,
+        }
+    },
+    "parse_views": {
+        "parse": {
+            "trees": [
+                {"top": 0, "score": 0.25, "nodes": [
+                    {"label": "S", "span": _span(0, 15), "children": {1: "A0", 2: "V"}},
+                    {"label": "NP", "span": None, "children": None},
+                    {"label": None, "span": _span(6, 10, "pays", source="p"), "children": None},
+                ]},
+                {"top": None, "nodes": [], "score": None},
+            ],
+            "source": "parse-1",
+        }
+    },
+    "views": {
+        "semrel": {
+            "spans": [_span(0, 5, "Alice", attributes={"type": "PER"}), _span(11, 14)],
+            "relations": [{"start": 0, "ending": 1, "label": "pays", "source": None, "score": 0.75}],
+            "source": None,
+            "score": 1.0,
+        }
+    },
+}
+
+
+_MULTIRECORD = {
+    "identifier": "corpus-0",
+    "records": ["a" * 40, "b" * 40],
+    "label_views": None,
+    "cluster_views": {
+        "coref": {
+            "clusters": [{"labels": [_span(0, 5, "M"), _span(120, 126, "M")]}],
+            "source": "enginecoref-1.0",
+            "score": None,
+        }
+    },
+    "parse_views": None,
+}
 
 
 def _ref_records(subdir: str) -> dict:
@@ -41,6 +111,7 @@ def _raw_docs() -> dict:
     }
 
 
+@needs_samplejob
 def test_decode_all_reference_serialized_records():
     """Every reference-serialized Record decodes; its filename is its
     identifier, the identifier follows the sha1 rule
@@ -61,6 +132,7 @@ def test_decode_all_reference_serialized_records():
     assert matched == set(raw)  # a bijection, all four docs covered
 
 
+@needs_samplejob
 def test_reference_output_views_wellformed():
     """The annotated outputs carry sentences/tokens/pos label views with
     well-formed half-open spans (0 <= start < ending <= len(rawText)),
@@ -83,6 +155,7 @@ def test_reference_output_views_wellformed():
         ), "sentence spans overlap or out of order"
 
 
+@needs_samplejob
 def test_codec_roundtrip_exact():
     """decode(encode(decode(blob))) == decode(blob) for every reference
     file — our encoder emits the same logical Record our decoder reads."""
@@ -96,6 +169,7 @@ def test_codec_roundtrip_exact():
         assert decode_thrift_record(encode_thrift_record(rec)) == rec
 
 
+@needs_samplejob
 def test_spark_reads_reference_corpus(spark):
     """read_thrift_records ingests the reference-produced corpus as a
     DataFrame in the engine RECORD schema."""
@@ -112,6 +186,7 @@ def test_spark_reads_reference_corpus(spark):
         assert toks and toks[0]["start"] == 0
 
 
+@needs_samplejob
 def test_write_thrift_records_reference_readable(spark):
     """Engine-annotated records serialize back to TBinaryProtocol blobs
     that decode (as the reference would) to the same views."""
@@ -136,6 +211,7 @@ def test_write_thrift_records_reference_readable(spark):
             ]
 
 
+@needs_samplejob
 def test_golden_pipeline_vs_reference_output(spark):
     """The golden samplejob test (SURVEY §5 plan item d): run the engine
     pipeline on the ACTUAL raw docs and compare against the reference's
@@ -185,29 +261,7 @@ def test_multirecord_codec_roundtrip():
         encode_thrift_multirecord,
     )
 
-    mr = {
-        "identifier": "corpus-0",
-        "records": ["a" * 40, "b" * 40],
-        "label_views": None,
-        "cluster_views": {
-            "coref": {
-                "clusters": [
-                    {
-                        "labels": [
-                            {"start": 0, "ending": 5, "label": "M", "score": None,
-                             "source": None, "attributes": None},
-                            {"start": 120, "ending": 126, "label": "M", "score": None,
-                             "source": None, "attributes": None},
-                        ]
-                    }
-                ],
-                "source": "enginecoref-1.0",
-                "score": None,
-            }
-        },
-        "parse_views": None,
-    }
-    assert decode_thrift_multirecord(encode_thrift_multirecord(mr)) == mr
+    assert decode_thrift_multirecord(encode_thrift_multirecord(_MULTIRECORD)) == _MULTIRECORD
 
 
 def test_general_views_survive_codec_and_spark_roundtrip(spark, tmp_path):
@@ -261,3 +315,143 @@ def test_general_views_survive_codec_and_spark_roundtrip(spark, tmp_path):
     write_thrift_records(df, str(out))
     back = decode_thrift_record((out / "deadbeef.txt").read_bytes())
     assert back == rec
+
+
+def test_golden_wire_bytes():
+    """The encoder's bytes are pinned: SHA-256 of one Record that fills
+    all four view families and of the MultiRecord fixture."""
+    import copy
+    import hashlib
+
+    from curatorhadoopinterface_spark.thrift_codec import (
+        decode_thrift_record,
+        encode_thrift_multirecord,
+        encode_thrift_record,
+    )
+
+    blob = encode_thrift_record(_GOLDEN_RECORD)
+    assert hashlib.sha256(blob).hexdigest() == (
+        "8fd3afa82245bb35a214f679c3114cda730393bc5a9bed314b8a5df30c5a17d9"
+    )
+    assert decode_thrift_record(blob) == _GOLDEN_RECORD
+    # an empty optional map is not written ({} encodes like None), and a
+    # None list is written empty
+    empties = copy.deepcopy(_GOLDEN_RECORD)
+    empties["label_views"]["empty"]["labels"] = None
+    empties["label_views"]["tokens"]["labels"][1]["attributes"] = {}
+    empties["parse_views"]["parse"]["trees"][0]["nodes"][1]["children"] = {}
+    assert encode_thrift_record(empties) == blob
+    assert hashlib.sha256(encode_thrift_multirecord(_MULTIRECORD)).hexdigest() == (
+        "12a8696b0efa03b2f78b5f2ebaeab9da20c52334b7b12452a27e8bfabe0ac5e8"
+    )
+
+
+def test_decoder_rejects_truncated_and_unknown_types():
+    """Blobs come from outside the program: every strict prefix of a
+    valid blob, and a field of an unknown type code, raise ValueError."""
+    from curatorhadoopinterface_spark.thrift_codec import decode_thrift_record, encode_thrift_record
+
+    blob = encode_thrift_record(_GOLDEN_RECORD)
+    for n in range(len(blob)):
+        with pytest.raises(ValueError):
+            decode_thrift_record(blob[:n])
+    unknown = blob[:-1] + struct.pack(">bh", 99, 8) + b"\x00"
+    with pytest.raises(ValueError, match="unknown thrift type 99"):
+        decode_thrift_record(unknown)
+
+
+def _field(ttype: int, fid: int, payload: bytes) -> bytes:
+    return struct.pack(">bh", ttype, fid) + payload
+
+
+def _str(v: str) -> bytes:
+    b = v.encode("utf-8")
+    return struct.pack(">i", len(b)) + b
+
+
+def _struct(*fields: bytes) -> bytes:
+    return b"".join(fields) + b"\x00"
+
+
+def _list(etype: int, items: list[bytes]) -> bytes:
+    return struct.pack(">bi", etype, len(items)) + b"".join(items)
+
+
+def _map(ktype: int, vtype: int, items: list[tuple[bytes, bytes]]) -> bytes:
+    return struct.pack(">bbi", ktype, vtype, len(items)) + b"".join(k + v for k, v in items)
+
+
+def _hand_built_record(extra: bool) -> bytes:
+    """A Record written field by field; with ``extra`` it also carries
+    every field the engine schema drops (per-view rawText, Span.multiIndex,
+    Tree.source, Node.source/score), a field id no struct defines and a
+    known id sent with the wrong wire type."""
+    from curatorhadoopinterface_spark.thrift_codec import (
+        T_BOOL, T_DOUBLE, T_I32, T_I64, T_LIST, T_MAP, T_STRING, T_STRUCT,
+    )
+
+    def x(*fields):
+        return fields if extra else ()
+
+    i32 = struct.Struct(">i").pack
+    dbl = struct.Struct(">d").pack
+    raw = _field(T_STRING, 4, _str("Alice pays."))
+    span = _struct(
+        _field(T_I32, 1, i32(0)), _field(T_I32, 2, i32(5)), _field(T_STRING, 3, _str("Alice")),
+        *x(_field(T_I32, 7, i32(3))),
+    )
+    labeling = _struct(
+        _field(T_LIST, 1, _list(T_STRUCT, [span])), _field(T_STRING, 2, _str("tok-1")), *x(raw),
+    )
+    cluster = _struct(_field(T_LIST, 1, _list(T_STRUCT, [span])), *x(raw))
+    clustering = _struct(_field(T_LIST, 1, _list(T_STRUCT, [cluster])), *x(raw))
+    node = _struct(
+        _field(T_STRING, 1, _str("S")), _field(T_STRUCT, 2, span),
+        _field(T_MAP, 3, _map(T_I32, T_STRING, [(i32(1), _str("A0"))])),
+        *x(_field(T_STRING, 4, _str("parser")), _field(T_DOUBLE, 5, dbl(0.5))),
+    )
+    tree = _struct(
+        _field(T_LIST, 1, _list(T_STRUCT, [node])), _field(T_I32, 2, i32(0)),
+        *x(_field(T_STRING, 3, _str("parser"))), _field(T_DOUBLE, 4, dbl(1.0)),
+    )
+    forest = _struct(
+        _field(T_LIST, 1, _list(T_STRUCT, [tree])),
+        *x(_field(T_STRING, 2, _str("Alice pays."))), _field(T_STRING, 3, _str("parse-1")),
+    )
+    relation = _struct(_field(T_I32, 1, i32(0)), _field(T_I32, 2, i32(0)), _field(T_STRING, 3, _str("self")))
+    view = _struct(
+        _field(T_LIST, 1, _list(T_STRUCT, [span])), _field(T_LIST, 2, _list(T_STRUCT, [relation])),
+        *x(_field(T_STRING, 3, _str("Alice pays."))), _field(T_STRING, 4, _str("g-1")),
+    )
+    unknown = _field(T_STRUCT, 99, _struct(
+        _field(T_LIST, 1, _list(T_I64, [struct.pack(">q", 7)])),
+        _field(T_MAP, 2, _map(T_STRING, T_BOOL, [(_str("k"), b"\x01")])),
+    ))
+
+    def views(payload):
+        return _map(T_STRING, T_STRUCT, [(_str("v"), payload)])
+
+    return _struct(
+        _field(T_STRING, 1, _str("hand-1")), *x(_field(T_I32, 1, i32(5))),
+        _field(T_STRING, 2, _str("Alice pays.")),
+        _field(T_MAP, 3, views(labeling)), _field(T_MAP, 4, views(clustering)),
+        _field(T_MAP, 5, views(forest)), _field(T_MAP, 6, views(view)),
+        *x(unknown), _field(T_BOOL, 7, b"\x01"),
+    )
+
+
+def test_decoder_skips_fields_the_schema_does_not_hold():
+    """Wire-only fields, unknown field ids and known ids of the wrong
+    wire type are skipped: the blob decodes to the same dict as the blob
+    without them, and that dict re-encodes to the plain blob exactly."""
+    from curatorhadoopinterface_spark.thrift_codec import decode_thrift_record, encode_thrift_record
+
+    plain = _hand_built_record(extra=False)
+    rec = decode_thrift_record(plain)
+    assert decode_thrift_record(_hand_built_record(extra=True)) == rec
+    assert encode_thrift_record(rec) == plain
+    span = _span(0, 5, "Alice")
+    assert rec["parse_views"]["v"]["trees"] == [
+        {"top": 0, "score": 1.0, "nodes": [{"label": "S", "span": span, "children": {1: "A0"}}]}
+    ]
+    assert rec["cluster_views"]["v"] == {"clusters": [{"labels": [span]}], "source": None, "score": None}

@@ -124,9 +124,12 @@ def cmd_compact(args: argparse.Namespace) -> None:
     before = len(glob.glob(os.path.join(args.store, "*", "part-*")))
     df = spark.read.parquet(args.store)
     n_source = df.count()
-    part_cols = [c for c in df.columns if c.startswith("__")]
-    # the store layout partitions by the leading-hex bucket column; fall
-    # back to a plain single-dir rewrite when the layout is unpartitioned
+    # the partition column names the store's name=value subdirectories
+    # (RecordStore's id_bucket=, older __bucket= layouts); an
+    # unpartitioned store gets a plain single-dir rewrite
+    part_cols = sorted(
+        {d.split("=", 1)[0] for d in os.listdir(args.store) if "=" in d}
+    )
     key = part_cols[0] if part_cols else None
     staged = args.store.rstrip("/") + ".compacting"
     w = df.repartition(args.target_files, key) if key else df.coalesce(

@@ -169,21 +169,17 @@ _PAIRS_CTES = f"""{_SHINGLES_ORACLE},
 )
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-duplicate pairs with exact-Jaccard verify —
-    the DIAGNOSTIC pair tier; the PRODUCTION default is
-    dedup_minhash_classes (below). The pair dump is QUADRATIC in the
-    duplication factor by construction (every band bucket of an
-    n-duplicated class emits ~n^2/2 candidate pairs): GROWTH_RATIO_r8
-    measured this form DEAD at sf30/300x planted duplication (band-join
-    shuffle) while the class form stayed flat (0.84x at 3x data). Like
-    sim_knn_graph, the output self-announces the trap: every row
+    the DIAGNOSTIC pair dump, and the family's one pair-form
+    implementation (dedup_clusters and dedup_keep_best derive from
+    their class twins). The PRODUCTION default is dedup_minhash_classes:
+    the pair dump is QUADRATIC in the duplication factor (every band
+    bucket of an n-duplicated class emits ~n^2/2 candidate pairs;
+    GROWTH_RATIO_r8 measured it DEAD at sf30/300x planted duplication
+    while the class form stayed flat). Like sim_knn_graph, every row
     carries ``dup_factor_permille`` (corpus rows * 1000 / distinct
     exact-text classes, 1000 = fully deduplicated) — above ~2000,
-    switch to dedup_minhash_classes, which collapses exact classes
-    FIRST, runs LSH on one representative per class, and reports
-    cross-class + within-class pair counts without materializing them.
-
-    The dup-factor side is a broadcast 1-row aggregate crossed into the
-    pair relation — no added exchange on the pair side."""
+    switch to the class form. The dup-factor side is a broadcast 1-row
+    aggregate: no added exchange on the pair side."""
     dupf = _dup_factor(spark, sf_dir)
     return _minhash_pairs(spark, sf_dir).crossJoin(F.broadcast(dupf))
 
@@ -303,7 +299,10 @@ def dedup_minhash_classes(
     sf30 (SCALE.md r7). Joins: band self-join and verify pinned
     shuffle_hash (array-carrying relations mis-sized by the planner —
     the _minhash_core trap); class-size joins rep-keyed shuffled."""
-    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir, checkpoint)
+    classes, _, dup_reps, scored = _minhash_class_core(spark, sf_dir, checkpoint)
+    ver = scored.where(_near_dup()).select(
+        "rep_a", "rep_b", _jac_permille().alias("jac_permille")
+    )
     mem = classes.select("rep", "n_mem")
     cross = (
         ver.join(
@@ -327,40 +326,33 @@ def dedup_minhash_classes(
             F.expr("n_a * n_b").alias("n_doc_pairs"),
         )
     )
-    # within rows only for SHINGLED classes (see oracle comment): the
-    # semi join against the signature relation reuses doc_agg's exchange
-    within = (
-        classes.where(F.col("n_mem") >= 2)
-        .join(
-            doc_agg.select(F.col("doc_id").alias("rep")).hint("shuffle_hash"),
-            "rep",
-            "left_semi",
-        )
-        .select(
-            F.col("rep").alias("rep_a"),
-            F.col("rep").alias("rep_b"),
-            F.lit(1000).cast("long").alias("jac_permille"),
-            F.col("n_mem").alias("n_a"),
-            F.col("n_mem").alias("n_b"),
-            F.expr("n_mem * (n_mem - 1) div 2").alias("n_doc_pairs"),
-        )
+    # within rows only for SHINGLED classes (see oracle comment)
+    within = dup_reps.select(
+        F.col("rep").alias("rep_a"),
+        F.col("rep").alias("rep_b"),
+        F.lit(1000).cast("long").alias("jac_permille"),
+        F.col("n_mem").alias("n_a"),
+        F.col("n_mem").alias("n_b"),
+        F.expr("n_mem * (n_mem - 1) div 2").alias("n_doc_pairs"),
     )
     return cross.unionByName(within)
 
 
 def _minhash_class_core(
     spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Shared class-form MinHash pipeline: exact-dup classes collapse
-    first, signatures/bands/exact-Jaccard verify run over class
+    first, signatures/bands/shingle-overlap verify run over class
     representatives only. Returns ``(classes(ck, rep, n_mem),
-    doc_agg(doc_id, sig…, s), ver(rep_a, rep_b, jac_permille))`` —
-    consumed by dedup_minhash_classes (pair expansion) and
-    dedup_clusters_classes (component resolution).
+    doc_agg(doc_id, sig…, s), dup_reps(rep, n_mem), scored(rep_a,
+    rep_b, n_common, n_a, n_b))``: ``dup_reps`` are the multi-member
+    SHINGLED classes (a sub-3-word class has no pair in the pair form),
+    semi-joined to doc_agg; ``scored`` is the unfiltered rep-pair
+    overlap — each caller applies its own cut.
 
     ``doc_agg`` feeds ~5 consumers per caller (both band self-join
     sides through the posexplode, both verify-set lookups, the
-    shingled-class semi joins) — left lazy, each consumer re-derived
+    dup_reps semi join) — left lazy, each consumer re-derived
     the scan+shingle+signature chain (the dedup_minhash_recall
     disease). r9: localCheckpoint it eagerly; alternating same-session
     A/B at sf0.1: dedup_minhash_tuning 4.42 -> 3.56 s,
@@ -383,13 +375,18 @@ def _minhash_class_core(
     )
     if checkpoint:
         doc_agg = doc_agg.localCheckpoint(eager=True)
-    cands, sets = _minhash_core(doc_agg, ("rep_a", "rep_b"))
-    ver = (
-        _overlap(cands, sets, "rep_a", "rep_b")
-        .where(_near_dup())
-        .select("rep_a", "rep_b", _jac_permille().alias("jac_permille"))
+    dup_reps = (
+        classes.where(F.col("n_mem") >= 2)
+        .join(
+            doc_agg.select(F.col("doc_id").alias("rep")).hint("shuffle_hash"),
+            "rep",
+            "left_semi",
+        )
+        .select("rep", "n_mem")
     )
-    return classes, doc_agg, ver
+    cands, sets = _minhash_core(doc_agg, ("rep_a", "rep_b"))
+    scored = _overlap(cands, sets, "rep_a", "rep_b")
+    return classes, doc_agg, dup_reps, scored
 
 
 def _minhash_doc_agg_over(sh: DataFrame) -> DataFrame:
@@ -415,8 +412,8 @@ def _minhash_doc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every downstream reader (bands, verify-left, verify-right) hits
     the same exchange, which Spark reuses (ReusedExchange) instead of
     recomputing the corpus. Each minhash is an affine permutation of the
-    one shared md5. Shared by dedup_minhash/dedup_clusters and the
-    doc-level decontamination pass (curation.contamination_minhash)."""
+    one shared md5. Shared by dedup_minhash and the doc-level
+    decontamination pass (curation.contamination_minhash)."""
     return _minhash_doc_agg_over(_shingles(spark, sf_dir))
 
 
@@ -567,49 +564,16 @@ def _minhash_core(
 )
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware canonical selection — the production keep/drop
-    decision: near-dup clusters (MinHash LSH pairs -> connected
-    components) each keep their HIGHEST-QUALITY member (hashed linear
-    classifier score, text_quality_linear's model; ties -> lowest
-    doc_id), not the arbitrary min-id representative dedup_clusters
-    reports. This is how real pipelines dedup: among N copies of a page,
-    keep the cleanest extraction, drop the boilerplate-ridden ones.
+    decision: each near-dup cluster keeps its HIGHEST-QUALITY member
+    (hashed linear classifier score, text_quality_linear's model; ties
+    -> lowest doc_id), not the min-id representative dedup_clusters
+    reports: among N copies of a page, keep the cleanest extraction.
 
-    Plan: chains the three subsystems without re-reading the corpus for
-    each — ONE shingle scan feeds signatures+sets (shared exchange),
-    components iterate over the LSH-bounded edge list only, and the
-    score join touches just the clustered docs (near-dups are a tiny
-    fraction of the corpus). Cluster census is a per-cluster window +
-    one exchange. All scoring integer, rank-exact across engines.
-    """
-    from curatorhadoopinterface_spark.operators.textstats import _FEAT_W_SPARK
-
-    pairs = _minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
-    d = load_table(spark, sf_dir, "documents")
-    scored = d.select(
-        "doc_id",
-        F.expr(
-            "aggregate(transform(split(text, ' '),"
-            f" w -> cast({_FEAT_W_SPARK} as bigint)),"
-            " 0L, (acc, x) -> acc + x)"
-        ).alias("score"),
-    )
-    ranked = labels.join(scored, labels["node"] == scored["doc_id"]).select(
-        F.col("comp").alias("cluster_id"), "doc_id", "score"
-    )
-    # r9: the rank window + rk=1 filter is an argmax — max_by over the
-    # injective struct (score, -doc_id) picks the identical keeper
-    # (score DESC, doc_id ASC) in ONE aggregation, dropping the
-    # window's exchange + per-cluster sort; the keeper's score IS the
-    # cluster max since ties share the score.
-    return ranked.groupBy("cluster_id").agg(
-        F.expr("max_by(doc_id, struct(score, -doc_id))").alias(
-            "keeper_doc_id"
-        ),
-        F.max("score").alias("keeper_score"),
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.count(F.lit(1)) - 1).alias("n_dropped"),
-    )
+    Derived from the class twin, dedup_keep_best_classes: linear in
+    distinct content and strict-verifiable at sf10 (SCALE.md r8). This
+    query's oracle walks the PAIR graph, so it checks the class
+    implementation against the pair-form definition."""
+    return dedup_keep_best_classes(spark, sf_dir)
 
 
 _SIMHASH_BITS = 16
@@ -993,41 +957,23 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """,
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resolve verified MinHash near-dup PAIRS into duplicate CLUSTERS
-    (connected components) — the DIAGNOSTIC pair tier; the PRODUCTION
-    default is dedup_clusters_classes (this file, below), which
-    collapses exact-text classes first and propagates over class
-    representatives. This pair form materializes the verified-pair
-    relation, which is QUADRATIC in the duplication factor:
-    GROWTH_RATIO_r8 measured it DEAD at sf30/300x planted duplication
-    (>60 GB of band-join shuffle before the first propagation round,
-    ENOSPC in its own process) while the class form stayed flat (1.10x
-    at 3x data) and 17x faster absolute at sf10 — row-for-row identical
-    output (pytest-pinned, test_round8_quality.py). Like sim_knn_graph,
-    the output self-announces the trap: every row carries
-    ``dup_factor_permille`` (corpus rows * 1000 / distinct exact-text
-    classes, 1000 = fully deduplicated) — above ~2000, switch to
-    dedup_clusters_classes.
+    """Resolve MinHash near-dups into duplicate CLUSTERS (connected
+    components): keep `is_canonical` (min doc id per component), drop
+    the rest. Pair detection alone under-deletes — A~B and B~C must
+    collapse to ONE cluster even when A~C was never a candidate pair.
+    The reference dedups its record store by exact hash only
+    (CuratorHandler record lookup); this is the corpus-scale batch job.
 
-    Cluster resolution is the step that turns pairwise detection into
-    an actionable keep/drop decision: keep `is_canonical` (min doc id
-    per component), drop the rest. Pair detection alone under-deletes —
-    A~B and B~C must collapse to ONE cluster even when A~C was never a
-    candidate pair. Reference parity: the reference dedups at the
-    record-store level by exact hash only (CuratorHandler record
-    lookup); cluster resolution is the corpus-scale generalization its
-    users run as a batch job. The oracle replays the propagation as a
-    DuckDB recursive CTE (min reachable id == hash-to-min fixpoint)."""
-    pairs = _minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("comp").alias("cluster_id"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("comp"))
-        .alias("cluster_size"),
-        (F.col("node") == F.col("comp")).alias("is_canonical"),
-    ).crossJoin(F.broadcast(_dup_factor(spark, sf_dir)))
+    Derived from the class twin, dedup_clusters_classes (linear in
+    distinct content, strict-verifiable at sf10; SCALE.md r8), crossed
+    with the broadcast 1-row ``dup_factor_permille`` census (corpus
+    rows * 1000 / distinct exact-text classes). This query's oracle
+    replays the propagation over the PAIR graph as a DuckDB recursive
+    CTE, so it checks the class implementation against the pair-form
+    definition."""
+    return dedup_clusters_classes(spark, sf_dir).crossJoin(
+        F.broadcast(_dup_factor(spark, sf_dir))
+    )
 
 
 # ---- LSH band tuning report ------------------------------------------------
@@ -1143,22 +1089,12 @@ def dedup_minhash_tuning(
     duplication factor. At 100 TB you run exactly this to pick b/r
     before committing the full corpus pass.
     """
-    classes, doc_agg, _ver = _minhash_class_core(spark, sf_dir, checkpoint)
+    classes, doc_agg, dup_reps, _ = _minhash_class_core(spark, sf_dir, checkpoint)
     sets = doc_agg.select("doc_id", "s").hint("shuffle_hash")
     mem = classes.select("rep", "n_mem")
     # config-independent within-class pair count (shingled classes only)
-    within = (
-        classes.where(F.col("n_mem") >= 2)
-        .join(
-            doc_agg.select(F.col("doc_id").alias("rep")).hint("shuffle_hash"),
-            "rep",
-            "left_semi",
-        )
-        .agg(
-            F.coalesce(
-                F.sum(F.expr("n_mem * (n_mem - 1) div 2")), F.lit(0)
-            ).alias("n_w")
-        )
+    within = dup_reps.agg(
+        F.coalesce(F.sum(F.expr("n_mem * (n_mem - 1) div 2")), F.lit(0)).alias("n_w")
     )
     # r9 fusion: ONE band table carrying a ``cfg`` discriminator
     # replaces three independent per-config pipelines. The LSH
@@ -2254,18 +2190,16 @@ def dedup_containment_classes(
     broadcast (graph_triangles pattern)."""
     # the signature aggregate (rep_agg) feeds FIVE consumers (both band
     # self-join sides, both verify-set lookups, within_stats): the
-    # shared core checkpoints it eagerly (its lazy `ver` branch is
-    # unused here and costs nothing); the narrow classes relation is
+    # shared core checkpoints it eagerly and hands back the unfiltered
+    # rep-pair overlap counts; the narrow classes relation is
     # checkpointed for its three remaining consumers (mem x2,
     # within_stats).
-    classes, rep_agg, _ver = _minhash_class_core(spark, sf_dir, checkpoint)
+    classes, rep_agg, _, scored = _minhash_class_core(spark, sf_dir, checkpoint)
     if checkpoint:
         classes = classes.localCheckpoint(eager=True)
-    ccands, sets = _minhash_core(rep_agg, ("rep_a", "rep_b"))
     mem = classes.select("rep", "n_mem").hint("shuffle_hash")
-    scored = (
-        _overlap(ccands, sets, "rep_a", "rep_b")
-        .join(mem.alias("ma"), F.col("ma.rep") == F.col("rep_a"))
+    counts = (
+        scored.join(mem.alias("ma"), F.col("ma.rep") == F.col("rep_a"))
         .join(mem.alias("mb"), F.col("mb.rep") == F.col("rep_b"))
         .select(
             "n_common",
@@ -2283,7 +2217,7 @@ def dedup_containment_classes(
         F.col("n_common") * 2 < F.col("n_a") + F.col("n_b") - F.col("n_common")
     )
     pair_m = F.col("m_a") * F.col("m_b")
-    cross_stats = scored.agg(
+    cross_stats = counts.agg(
         F.coalesce(F.sum(pair_m), F.lit(0)).alias("cand_cross"),
         F.coalesce(F.sum(F.when(kept, pair_m).otherwise(0)), F.lit(0)).alias(
             "kept_cross"
@@ -2929,10 +2863,11 @@ def dedup_clusters_classes(
     propagation runs over class REPRESENTATIVES (edges = verified rep
     pairs + a self-loop per multi-member shingled class), and the
     per-document rows expand back through the doc->class->component
-    joins. Output is row-for-row IDENTICAL to dedup_clusters (pytest
-    pins it): component ids are min reachable doc ids because every
-    class representative IS its class's min doc id, and identical
-    texts always land in the same component via their class.
+    joins. dedup_clusters is this query plus its dup-factor column, and
+    its pair-form oracle checks this implementation: component ids are
+    min reachable doc ids because every class representative IS its
+    class's min doc id, and identical texts always land in the same
+    component via their class.
 
     Why: the r8 growth table caught dedup_clusters' pair
     materialization ENOSPC-ing at sf30 (the planted 300x duplication
@@ -2944,10 +2879,10 @@ def dedup_clusters_classes(
 
     Bonus at the 100x evidence rung: the DuckDB oracle's recursive CTE
     now walks the REP graph (tiny), so the class form is strict-
-    verifiable at sf10 where the pair form needed a tier-3 invariant
-    check (oracle-side >90 GB)."""
-    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir, checkpoint)
-    labels = _class_components(classes, doc_agg, ver)
+    verifiable at sf10, where dedup_clusters' pair-graph oracle needs
+    a tier-3 invariant check (oracle-side >90 GB)."""
+    classes, _, dup_reps, scored = _minhash_class_core(spark, sf_dir, checkpoint)
+    labels = _class_components(dup_reps, scored)
     cstat = (
         labels.join(classes, labels.node == classes.rep)
         .groupBy("comp")
@@ -2968,26 +2903,18 @@ def dedup_clusters_classes(
     )
 
 
-def _class_components(
-    classes: DataFrame, doc_agg: DataFrame, ver: DataFrame
-) -> DataFrame:
+def _class_components(dup_reps: DataFrame, scored: DataFrame) -> DataFrame:
     """Connected components over class REPRESENTATIVES: edges are the
     verified rep pairs plus one self-loop per multi-member shingled
     class (whose within-class pairs exist in the pair form). Returns
     (node=rep, comp=min reachable rep). Shared by
     dedup_clusters_classes and dedup_keep_best_classes."""
-    selfnodes = (
-        classes.where(F.col("n_mem") >= 2)
-        .join(
-            doc_agg.select(F.col("doc_id").alias("rep")).hint("shuffle_hash"),
-            "rep",
-            "left_semi",
-        )
-        .select(F.col("rep").alias("src"), F.col("rep").alias("dst"))
+    selfnodes = dup_reps.select(F.col("rep").alias("src"), F.col("rep").alias("dst"))
+    edges = (
+        scored.where(_near_dup())
+        .select(F.col("rep_a").alias("src"), F.col("rep_b").alias("dst"))
+        .unionByName(selfnodes)
     )
-    edges = ver.select(
-        F.col("rep_a").alias("src"), F.col("rep_b").alias("dst")
-    ).unionByName(selfnodes)
     return connected_components(edges)
 
 
@@ -3073,27 +3000,27 @@ def dedup_keep_best_classes(
     once per DISTINCT text (identical texts score identically, so the
     class's best member is its min doc id = the rep), and the
     per-cluster census expands by class arithmetic (n_docs = sum of
-    member counts). Row-for-row identical to dedup_keep_best (pytest
-    pins it on a 3x-duplicated corpus): the keeper is the rep of the
-    best-scoring class, with the (score DESC, doc_id ASC) tie-break
-    preserved because every class's lowest-id member IS its rep.
+    member counts). dedup_keep_best is this query, checked by its
+    pair-form oracle: the keeper is the rep of the best-scoring class,
+    with the (score DESC, doc_id ASC) tie-break preserved because every
+    class's lowest-id member IS its rep.
 
     Scale: same story as dedup_clusters_classes — the propagation
     graph and the scoring scan are linear in DISTINCT content, immune
     to the duplication factor that makes the pair form quadratic; and
     the oracle's recursive CTE walks the rep graph, so this form is
-    strict-verifiable at sf10 where dedup_keep_best needed a tier-3
-    invariant."""
+    strict-verifiable at sf10, where dedup_keep_best's pair-graph
+    oracle needs a tier-3 invariant check."""
     from curatorhadoopinterface_spark.operators.textstats import _FEAT_W_SPARK
 
-    classes, doc_agg, ver = _minhash_class_core(spark, sf_dir, checkpoint)
-    labels = _class_components(classes, doc_agg, ver)
+    classes, _, dup_reps, scored = _minhash_class_core(spark, sf_dir, checkpoint)
+    labels = _class_components(dup_reps, scored)
     docs = load_table(spark, sf_dir, "documents")
     reps = docs.join(
         classes.select(F.col("rep").alias("doc_id")).hint("shuffle_hash"),
         "doc_id",
     ).select(F.col("doc_id").alias("rep"), "text")
-    scored = reps.select(
+    quality = reps.select(
         "rep",
         F.expr(
             "aggregate(transform(split(text, ' '),"
@@ -3102,12 +3029,12 @@ def dedup_keep_best_classes(
         ).alias("score"),
     )
     ranked = (
-        labels.join(scored, labels.node == scored.rep)
+        labels.join(quality, labels.node == quality.rep)
         .join(classes.select("rep", "n_mem"), "rep")
         .select(F.col("comp").alias("cluster_id"), "rep", "score", "n_mem")
     )
-    # r9: argmax via max_by (see dedup_keep_best) — identical keeper
-    # (score DESC, rep ASC), one aggregation instead of window+agg.
+    # r9: argmax via max_by over the injective struct (score, -rep) —
+    # the rank window's keeper (score DESC, rep ASC) in one aggregation.
     return ranked.groupBy("cluster_id").agg(
         F.expr("max_by(rep, struct(score, -rep))").alias("keeper_doc_id"),
         F.max("score").alias("keeper_score"),

@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import os
 import stat
+from collections.abc import Callable
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -103,7 +105,7 @@ def get_spark(app_name: str = "curatorhadoopinterface-spark", cpus: int | None =
         # 2000 balances per-batch overhead for the scalar-frame UDFs.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         # events.parquet carries TIMESTAMP(NANOS); Spark has no nanos
-        # timestamp type, so read as long and convert in load_table.
+        # timestamp type, so read as long and convert (event_time).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
@@ -120,19 +122,20 @@ def get_spark(app_name: str = "curatorhadoopinterface-spark", cpus: int | None =
 # Session-scoped PLAN-HANDLE cache for load_table: every
 # spark.read.parquet call pays file-status resolution + parquet FOOTER
 # schema inference + several py4j round trips, and the declared
-# queries re-read the same ten fixture tables. Measured share with the
-# cache on (perfbench queries workload, traced, seed 1, 4-core host):
-# median 0.76 ms x 1.25 calls per op against a 1.14 s mean op, ~0.1% of
-# op time. The cache memoizes the lazy DataFrame HANDLE (an unexecuted
-# logical plan), NOT any data or result: every action on it still scans
-# parquet from disk. Each session's dict is keyed by path and holds
-# (mtime_ns, size, df), so a rewritten fixture (stress regeneration,
-# scratch stores) re-reads, re-infers and REPLACES its entry — one
-# entry per path, never one per version. Directory datasets bypass the
-# cache (a directory's own stat does not change when a part file is
-# rewritten). Entries live as long as the process (a cached DataFrame
-# holds its session, so not even a weak key could drop them); the bound
-# is sessions x distinct paths.
+# queries re-read the same ten fixture tables. A miss costs 92-112 ms
+# per call against 0.04 ms for a hit (sf0.01 lineitem, documents,
+# events, orders; median of 30 alternating calls, 4-core host;
+# OPTIMIZATION_r16.md): at ~1.25 calls per op, a perfbench `queries`
+# pass (8 ops) would pay ~1 s more without it. The cache memoizes the
+# lazy DataFrame HANDLE (an unexecuted logical plan), NOT any data or
+# result: every action on it still scans parquet from disk. Each
+# session's dict is keyed by path and holds (mtime_ns, size, df), so a
+# rewritten fixture (stress regeneration, scratch stores) re-reads,
+# re-infers and REPLACES its entry — one entry per path, never one per
+# version. Directory datasets bypass the cache (a directory's own stat
+# does not change when a part file is rewritten). Entries live as long
+# as the process (a cached DataFrame holds its session, so not even a
+# weak key could drop them); the bound is sessions x distinct paths.
 _TABLE_CACHE: dict[SparkSession, dict[str, tuple]] = {}
 
 
@@ -148,9 +151,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanos-since-epoch longs and truncated to microsecond timestamps —
     the same truncation DuckDB applies, so oracles agree.
     """
-    # set at runtime too so the driver's own (vanilla) session works
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     try:
         st = os.stat(path)
@@ -161,19 +161,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = per_session.get(path)
     if stamp is not None and hit is not None and hit[:2] == stamp:
         return hit[2]
-    df = spark.read.parquet(path)
-    import pyspark.sql.functions as F
-
-    for field in df.schema.fields:
-        if field.name == "ts" and field.dataType.simpleString() == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif field.name == "ts" and field.dataType.simpleString() == "timestamp_ntz":
-            # parquet written without isAdjustedToUTC (e.g. DuckDB COPY)
-            # reads as NTZ; cast to session-TZ (UTC) timestamp so event
-            # time works everywhere (watermarks require TIMESTAMP)
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    df = event_time(spark, lambda: spark.read.parquet(path))
     if stamp is not None:
         per_session[path] = (*stamp, df)
+    return df
+
+
+def event_time(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """The one event-time rule of batch and streaming reads: ``read()``
+    runs with ``nanosAsLong`` and a UTC session time zone (set at
+    runtime too, so a session not built by get_spark works), then a
+    ``ts`` column becomes a microsecond TIMESTAMP. TIMESTAMP(NANOS)
+    arrives as nanos-since-epoch longs and is truncated, as DuckDB
+    truncates; NTZ parquet (written without isAdjustedToUTC, e.g. by
+    DuckDB COPY) is cast, since watermarks and windows need
+    TIMESTAMP."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    df = read()
+    ts = dict(df.dtypes).get("ts")
+    if ts == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

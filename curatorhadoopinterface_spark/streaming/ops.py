@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from curatorhadoopinterface_spark.io import proc_scratch
 from curatorhadoopinterface_spark.operators import query
+from curatorhadoopinterface_spark.session import event_time
 
 _SINK_IDS = itertools.count()
 
@@ -113,26 +114,15 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events table (stream_file_source core).
 
     The schema comes from a batch peek (streaming file sources require an
-    explicit schema); TIMESTAMP(NANOS) arrives as long under
-    ``nanosAsLong`` and is truncated to microsecond timestamps exactly
-    like session.load_table, so streaming and batch plans agree.
+    explicit schema); ``ts`` follows session.event_time, the rule
+    session.load_table applies, so streaming and batch plans agree.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
+    return event_time(
+        spark,
+        lambda: spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
         .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        .parquet(sf_dir),
     )
-    ts_type = dict(src.dtypes).get("ts")
-    if ts_type == "bigint":
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        # NTZ parquet (no isAdjustedToUTC): cast to session-TZ timestamp —
-        # watermarks/windows require TIMESTAMP, not NTZ
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    return src
 
 
 def run_to_sink(df: DataFrame, output_mode: str, timeout_s: int = 300) -> DataFrame:

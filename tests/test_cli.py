@@ -97,3 +97,30 @@ def test_cli_compact_store(spark, tmp_path, capsys):
     # one file per bucket directory
     dirs = {f.rsplit("/", 2)[1] for f in after_files}
     assert len(after_files) == len(dirs)
+
+
+def test_cli_compact_keeps_record_store_buckets(spark, tmp_path, capsys):
+    """Compacting a RecordStore keeps its id_bucket layout, so a later
+    update that rewrites some buckets leaves the others readable."""
+    import glob
+
+    from curatorhadoopinterface_spark.io import records_from_texts
+    from curatorhadoopinterface_spark.plans.incremental import RecordStore
+
+    path = str(tmp_path / "store")
+    docs = records_from_texts(
+        spark, [f"Document {i} says topic {i % 7} matters." for i in range(40)]
+    )
+    store = RecordStore(spark, path)
+    store.provide_incremental(docs, "TOKEN")
+    main(["compact", "--store", path, "--target-files", "4"])
+    assert "compacted" in capsys.readouterr().out
+    store.provide_incremental(docs.limit(10), "POS")
+
+    back = spark.read.parquet(path)
+    assert back.select("identifier").distinct().count() == 40
+    assert back.count() == 40
+    dirs = glob.glob(f"{path}/id_bucket=*/")
+    assert dirs and not glob.glob(f"{path}/*.parquet")
+    for d in dirs:
+        assert len(glob.glob(f"{d}*.parquet")) == 1, d

@@ -87,27 +87,6 @@ CRITICAL = [
     "join_bucketed",
 ]
 
-# query builders that execute eager work (iteration/writes) unless told
-# to return the un-checkpointed lazy plan
-_LAZY_KWARG = {
-    "graph_pagerank",
-    "pack_sequences_hier",
-    "dedup_fuzzy_edit",
-    "dedup_minhash_recall",
-    "graph_triangles",
-    "dedup_method_agreement",
-    "dedup_minhash_classes",
-    "dedup_minhash_tuning",
-    "dedup_clusters_classes",
-    "dedup_keep_best_classes",
-    "text_ngram_novelty",
-    "graph_link_prediction",
-    "annotate_entity_pmi",
-    "sim_knn_classes",
-    "dedup_containment_classes",
-    "dedup_allpairs_prefix",
-}
-
 
 def test_audit_coverage_complete():
     import __spark_entry__ as entrymod
@@ -131,7 +110,6 @@ def test_plan_invariants(spark, name):
 
     qs = entrymod.queries()
     fn = qs[name]
-    df = fn(spark, SF_DIR, checkpoint=False) if name in _LAZY_KWARG else fn(spark, SF_DIR)
-    plan = plan_audit.plan_of(df)
+    plan = plan_audit.plan_of(plan_audit.lazy_query(fn, spark, SF_DIR))
     problems = plan_audit.audit(name, plan, plan_audit.AUDITS[name])
     assert not problems, f"{name}: {problems}"

@@ -20,6 +20,52 @@ def _write_docs(spark, tmp_path, rows):
     return sf
 
 
+def _tripled_corpus(spark, tmp_path):
+    """100 sf0.001 documents, each present 3x under fresh doc ids."""
+    from curatorhadoopinterface_spark.session import load_table
+
+    docs = load_table(spark, SF, "documents").limit(100)
+    tripled = docs
+    for k in (1, 2):
+        tripled = tripled.unionByName(
+            docs.withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000 * k))
+        )
+    sf = str(tmp_path)
+    tripled.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
+    return sf
+
+
+def _assert_matches_oracle(spark, name, sf):
+    """Declared dedup query ``name`` equals its DuckDB oracle over
+    ``sf``'s documents, as a canonical multiset (verify_local.canon).
+    Returns the Spark rows."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    from curatorhadoopinterface_spark.operators import ORACLE, QUERIES
+    from curatorhadoopinterface_spark.operators import dedup  # noqa: F401  (registers)
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from verify_local import canon
+
+    sdf = QUERIES[name](spark, sf)
+    rows = sdf.collect()
+    srows = [tuple(r) for r in rows]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM"
+        f" read_parquet('{sf}/documents.parquet/*.parquet')"
+    )
+    res = con.execute(ORACLE[name])
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert srows and canon(srows, sdf.columns) == canon(drows, dcols)
+    return rows
+
+
 def test_kendall_tau_sign_on_monotone_corpus(spark, tmp_path):
     """Docs engineered so length and lexical diversity move TOGETHER
     -> tau strongly positive; the mirrored corpus (diversity falls as
@@ -414,36 +460,15 @@ def test_scan_xml_roundtrip_escaping(spark, tmp_path):
 
 
 def test_clusters_class_form_equals_pair_form(spark, tmp_path):
-    """dedup_clusters_classes is row-for-row identical to the pair-form
-    dedup_clusters on a 3x-duplicated corpus — components, sizes, and
-    canonical flags all survive the class collapse + expansion."""
-    from curatorhadoopinterface_spark.operators.dedup import (
-        dedup_clusters,
-        dedup_clusters_classes,
-    )
-    from curatorhadoopinterface_spark.session import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(100)
-    tripled = docs
-    for k in (1, 2):
-        tripled = tripled.unionByName(
-            docs.withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000 * k))
-        )
-    sf = str(tmp_path)
-    tripled.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-
-    pair = {
-        (r.doc_id, r.cluster_id, r.cluster_size, r.is_canonical)
-        for r in dedup_clusters(spark, sf).collect()
-    }
-    cls = {
-        (r.doc_id, r.cluster_id, r.cluster_size, r.is_canonical)
-        for r in dedup_clusters_classes(spark, sf).collect()
-    }
-    assert pair == cls and len(pair) > 0
+    """dedup_clusters (derived from dedup_clusters_classes) equals its
+    pair-form DuckDB oracle on a 3x-duplicated corpus — components,
+    sizes, canonical flags and the dup factor all survive the class
+    collapse + expansion."""
+    sf = _tripled_corpus(spark, tmp_path)
+    rows = _assert_matches_oracle(spark, "dedup_clusters", sf)
     # the 3x duplication puts every doc of a shingled class in a cluster
     # of size >= 3
-    assert all(size >= 3 for _, _, size, _ in cls)
+    assert all(r.cluster_size >= 3 for r in rows)
 
 
 def test_ts_anomaly_residual_flags_planted_spike(spark, tmp_path):
@@ -524,30 +549,8 @@ def test_mp4_probe_box_walk_and_guards():
 
 
 def test_keep_best_class_form_equals_pair_form(spark, tmp_path):
-    """dedup_keep_best_classes is row-for-row identical to the
-    pair-form dedup_keep_best on a 3x-duplicated corpus: keeper,
-    score, and member counts all survive the class collapse."""
-    from curatorhadoopinterface_spark.operators.dedup import (
-        dedup_keep_best,
-        dedup_keep_best_classes,
-    )
-    from curatorhadoopinterface_spark.session import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(100)
-    tripled = docs
-    for k in (1, 2):
-        tripled = tripled.unionByName(
-            docs.withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000 * k))
-        )
-    sf = str(tmp_path)
-    tripled.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-
-    pair = {
-        (r.cluster_id, r.keeper_doc_id, r.keeper_score, r.n_docs, r.n_dropped)
-        for r in dedup_keep_best(spark, sf).collect()
-    }
-    cls = {
-        (r.cluster_id, r.keeper_doc_id, r.keeper_score, r.n_docs, r.n_dropped)
-        for r in dedup_keep_best_classes(spark, sf).collect()
-    }
-    assert pair == cls and len(pair) > 0
+    """dedup_keep_best (derived from dedup_keep_best_classes) equals its
+    pair-form DuckDB oracle on a 3x-duplicated corpus: keeper, score,
+    and member counts all survive the class collapse."""
+    sf = _tripled_corpus(spark, tmp_path)
+    _assert_matches_oracle(spark, "dedup_keep_best", sf)

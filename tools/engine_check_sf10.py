@@ -6,13 +6,17 @@ the four operators whose ORACLE formulation is structurally infeasible
 at 100x, with in-engine invariant checks in the A19 re-verification
 pattern (plans/verify.verify_records):
 
-- dedup_clusters: hash-to-min label fixpoint re-checked (one more
-  propagation step changes ZERO labels), every verified near-dup edge
-  connects same-label nodes, cluster_id == min member id, cluster_size
-  and is_canonical internally consistent.
-- dedup_keep_best: membership conservation (sum n_docs == clustered
-  nodes), n_dropped identity, and NO member outscores its keeper
-  (score recomputed independently and window-checked).
+- dedup_clusters: labels are recomputed in PAIR form (verified doc
+  pairs -> connected_components), and the query itself, derived from
+  its class twin, is cross-checked against them: hash-to-min fixpoint
+  (one more propagation step changes ZERO labels), every verified
+  near-dup edge connects same-label nodes, cluster_id == min member
+  id, and the query's (doc_id, cluster_id) rows, cluster_size and
+  is_canonical equal the pair-form components'.
+- dedup_keep_best (also derived from its class twin), against the
+  same pair-form labels: membership conservation (sum n_docs ==
+  clustered nodes), n_dropped identity, and NO member outscores its
+  keeper (score recomputed independently per document).
 - dedup_embed_cosine: zero pairs below the cosine threshold, pair
   orientation/distinctness, and pair count equal to the oracle-green
   dedup_embed_cosine_census (a cross-QUERY identity that transitively
@@ -82,12 +86,32 @@ def check_clusters_and_keep_best(spark, sf_dir: str) -> list[bool]:
         .filter(F.col("comp") != F.col("mn"))
         .count()
     )
+    # C4 the class implementation reproduces the pair-form components
+    cl = D.dedup_clusters(spark, sf_dir).localCheckpoint(eager=True)
+    got = cl.select("doc_id", "cluster_id")
+    want = labels.select(
+        F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
+    )
+    label_diff = got.exceptAll(want).count() + want.exceptAll(got).count()
+    sizes = want.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
+    bad_size = (
+        cl.join(sizes, "cluster_id")
+        .filter(
+            (F.col("cluster_size") != F.col("n"))
+            | (F.col("is_canonical") != (F.col("doc_id") == F.col("cluster_id")))
+        )
+        .count()
+    )
     clusters_ok = _tally(
         "dedup_clusters",
         [
             ("fixpoint_extra_iteration_moves_zero", moved == 0, f"{moved} movable nodes"),
             ("edges_intra_cluster", split_edges == 0, f"{split_edges} split edges"),
             ("cluster_id_is_min_member", bad_rep == 0, f"{bad_rep} bad reps"),
+            ("class_form_labels_equal_pair_form", label_diff == 0,
+             f"{label_diff} rows differ"),
+            ("cluster_size_and_canonical_match", bad_size == 0,
+             f"{bad_size} bad rows"),
         ],
     )
 

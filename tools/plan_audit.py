@@ -16,6 +16,7 @@ Usage: python tools/plan_audit.py [sf_dir]   (writes PLANS.md)
 
 from __future__ import annotations
 
+import inspect
 import io
 import re
 import sys
@@ -427,14 +428,12 @@ AUDITS: dict[str, dict] = {
     "dedup_simhash": {"partial": True, "prune": ["lang", "source", "n_chars"]},
     "dedup_ngram_jaccard": {"partial": True,
                             "prune": ["lang", "source", "n_chars"]},
-    # iterative label propagation converges BEFORE this final plan (the
-    # loop body localCheckpoints); the returned labeling pass is one
-    # exchange + window over the converged component table
-    # exchange budget: 1 window over the converged labels + 2 inside the
-    # global count-distinct of the 1-row dup-factor census (broadcast
-    # side, constant-width); the census crosses in as an intended BNLJ
-    "dedup_clusters": {"max_exchange": 4, "no_bnlj": False,
-                       "require": [r"Window"]},
+    # derived from dedup_clusters_classes: that query's spec, plus the
+    # 1-row dup-factor census crossed in as an intended BNLJ; exchange
+    # budget = the plan's count at sf0.01 (class groupBy, doc->class and
+    # component-size joins, 2 inside the census's global count-distinct)
+    "dedup_clusters": {"partial": True, "forbid": [r"CartesianProduct"],
+                       "no_bnlj": False, "max_exchange": 7},
     # embedding near-dup: candidate pairs come from an EQUI join on the
     # sign-bucket key (broadcast-hash here; the cosine bound is the
     # residual condition), never all-pairs
@@ -1205,7 +1204,7 @@ AUDITS["dedup_span_removal"] = {
 }
 # iterative hash-to-min propagation over CLASS reps: persists +
 # localCheckpoints per round like graph_pagerank — audited with
-# checkpoint-free plans via the same by-name exemption path
+# checkpoint-free plans (lazy_query)
 AUDITS["dedup_clusters_classes"] = {
     "partial": True,
     "forbid": [r"CartesianProduct"],
@@ -1275,6 +1274,16 @@ def coverage_gaps(registry_names) -> tuple[list[str], list[str]]:
     names = set(registry_names)
     covered = set(AUDITS) | set(EXEMPT)
     return sorted(names - covered), sorted((set(AUDITS) & set(EXEMPT)) | (covered - names))
+
+
+def lazy_query(qfn, spark, sf_dir: str):
+    """The query's DataFrame with its plan left lazy: a query that
+    persists or localCheckpoints eagerly takes a ``checkpoint``
+    parameter, and gets ``checkpoint=False`` so the audit sees the full
+    plan, not the post-checkpoint scan stub."""
+    if "checkpoint" in inspect.signature(qfn).parameters:
+        return qfn(spark, sf_dir, checkpoint=False)
+    return qfn(spark, sf_dir)
 
 
 def plan_of(df) -> str:
@@ -1359,21 +1368,7 @@ def main() -> None:
             continue
         if append_names and name not in append_names:
             continue
-        if name in ("graph_pagerank", "pack_sequences_hier",
-                    "dedup_fuzzy_edit", "dedup_minhash_recall",
-                    "graph_triangles", "graph_kcore",
-                    "graph_community_lpa", "dedup_method_agreement",
-                    "dedup_minhash_classes", "dedup_minhash_tuning",
-                    "dedup_clusters_classes", "dedup_keep_best_classes",
-                    "text_ngram_novelty", "graph_link_prediction",
-                    "annotate_entity_pmi", "sim_knn_classes",
-                    "dedup_containment_classes",
-                    "dedup_allpairs_prefix"):
-            # audit the full plan, not the post-checkpoint scan stub
-            df = qs[name](spark, sf_dir, checkpoint=False)
-        else:
-            df = qs[name](spark, sf_dir)
-        plan = plan_of(df)
+        plan = plan_of(lazy_query(qs[name], spark, sf_dir))
         problems = audit(name, plan, spec)
         status = "PASS" if not problems else "FAIL: " + "; ".join(problems)
         print(f"[{status.split(':')[0]}] {name}" + ("" if not problems else f" — {problems}"))

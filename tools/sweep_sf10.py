@@ -70,7 +70,8 @@ ENGINE_CHECK = {
         "DuckDB oracle replays label propagation as a recursive "
         "reachability CTE — quadratic rows per planted mega-cluster "
         "(>90 GB at 100x); engine check: extra iteration changes zero "
-        "labels, every edge connects same-label nodes",
+        "labels, every edge connects same-label nodes, the class-twin "
+        "implementation reproduces the pair-form labels",
     ),
     "dedup_keep_best": (
         "clusters",

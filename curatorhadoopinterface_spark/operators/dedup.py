@@ -185,8 +185,8 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dup_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-row ``dup_factor_permille`` relation: corpus rows * 1000 //
-    distinct exact-text classes (integer division on both engines —
+    """dedup_minhash's 1-row ``dup_factor_permille``: corpus rows * 1000
+    // distinct exact-text classes (integer division on both engines —
     bit-exact vs the oracle's ``//``). 1000 = fully deduplicated."""
     return load_table(spark, sf_dir, "documents").agg(
         F.expr(
@@ -303,28 +303,13 @@ def dedup_minhash_classes(
     ver = scored.where(_near_dup()).select(
         "rep_a", "rep_b", _jac_permille().alias("jac_permille")
     )
-    mem = classes.select("rep", "n_mem")
-    cross = (
-        ver.join(
-            mem.select(
-                F.col("rep").alias("rep_a"), F.col("n_mem").alias("n_a")
-            ).hint("shuffle_hash"),
-            "rep_a",
-        )
-        .join(
-            mem.select(
-                F.col("rep").alias("rep_b"), F.col("n_mem").alias("n_b")
-            ).hint("shuffle_hash"),
-            "rep_b",
-        )
-        .select(
-            "rep_a",
-            "rep_b",
-            "jac_permille",
-            "n_a",
-            "n_b",
-            F.expr("n_a * n_b").alias("n_doc_pairs"),
-        )
+    cross = _join_classes(ver, classes, n_mem=("n_a", "n_b")).select(
+        "rep_a",
+        "rep_b",
+        "jac_permille",
+        "n_a",
+        "n_b",
+        F.expr("n_a * n_b").alias("n_doc_pairs"),
     )
     # within rows only for SHINGLED classes (see oracle comment)
     within = dup_reps.select(
@@ -363,15 +348,9 @@ def _minhash_class_core(
     dedup_allpairs_prefix — the blocks stay small at any duplication.
     ``checkpoint=False`` keeps the plan fully lazy for plan audits."""
     docs = load_table(spark, sf_dir, "documents")
-    classes = docs.groupBy(F.md5("text").alias("ck")).agg(
-        F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n_mem")
-    )
-    reps = docs.join(
-        classes.select(F.col("rep").alias("doc_id")).hint("shuffle_hash"),
-        "doc_id",
-    ).select("doc_id", "text")
+    classes = _text_classes(docs)
     doc_agg = _minhash_doc_agg_over(
-        shingle_explode(ensure_min_partitions(reps))
+        shingle_explode(ensure_min_partitions(_rep_texts(docs, classes)))
     )
     if checkpoint:
         doc_agg = doc_agg.localCheckpoint(eager=True)
@@ -387,6 +366,40 @@ def _minhash_class_core(
     cands, sets = _minhash_core(doc_agg, ("rep_a", "rep_b"))
     scored = _overlap(cands, sets, "rep_a", "rep_b")
     return classes, doc_agg, dup_reps, scored
+
+
+def _text_classes(docs: DataFrame) -> DataFrame:
+    """Exact-duplicate classes ``(ck, rep, n_mem, mx)``: md5(text) key,
+    min doc id (the representative), member count and max doc id. A
+    lazy plan that never reads ``mx`` prunes it."""
+    return docs.groupBy(F.md5("text").alias("ck")).agg(
+        F.min("doc_id").alias("rep"),
+        F.count(F.lit(1)).alias("n_mem"),
+        F.max("doc_id").alias("mx"),
+    )
+
+
+def _rep_texts(docs: DataFrame, classes: DataFrame) -> DataFrame:
+    """``(doc_id, text)`` of each class representative."""
+    return docs.join(
+        classes.select(F.col("rep").alias("doc_id")).hint("shuffle_hash"),
+        "doc_id",
+    ).select("doc_id", "text")
+
+
+def _join_classes(pairs: DataFrame, classes: DataFrame, **cols) -> DataFrame:
+    """Joins class columns onto both sides of a ``(rep_a, rep_b)`` pair
+    relation. Each keyword names a ``classes`` column and its (a-side,
+    b-side) output names, e.g. ``n_mem=("n_a", "n_b")``. The joins are
+    rep-keyed and pinned shuffle_hash: classes scale with distinct
+    content, so they are never broadcast-size by assumption."""
+    for i, key in enumerate(("rep_a", "rep_b")):
+        side = classes.select(
+            F.col("rep").alias(key),
+            *[F.col(c).alias(names[i]) for c, names in cols.items()],
+        )
+        pairs = pairs.join(side.hint("shuffle_hash"), key)
+    return pairs
 
 
 def _minhash_doc_agg_over(sh: DataFrame) -> DataFrame:
@@ -967,13 +980,21 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Derived from the class twin, dedup_clusters_classes (linear in
     distinct content, strict-verifiable at sf10; SCALE.md r8), crossed
     with the broadcast 1-row ``dup_factor_permille`` census (corpus
-    rows * 1000 / distinct exact-text classes). This query's oracle
-    replays the propagation over the PAIR graph as a DuckDB recursive
-    CTE, so it checks the class implementation against the pair-form
-    definition."""
-    return dedup_clusters_classes(spark, sf_dir).crossJoin(
-        F.broadcast(_dup_factor(spark, sf_dir))
+    rows * 1000 / distinct exact-text classes), read off the twin's own
+    class relation: sum(n_mem) is the row count, and count(ck) skips
+    the NULL-text class as count(distinct md5(text)) does. This query's
+    oracle replays the propagation over the PAIR graph as a DuckDB
+    recursive CTE, so it checks the class implementation against the
+    pair-form definition."""
+    rows, classes = _cluster_rows(spark, sf_dir)
+    # count(ck) reads ``rep`` so the aggregate keeps cstat's (min,
+    # count) shape, and AQE reuses that exchange: no documents rescan
+    dupf = classes.agg(
+        F.expr("sum(n_mem) * 1000L div count(if(ck is null, null, rep))").alias(
+            "dup_factor_permille"
+        )
     )
+    return rows.crossJoin(F.broadcast(dupf))
 
 
 # ---- LSH band tuning report ------------------------------------------------
@@ -1091,7 +1112,6 @@ def dedup_minhash_tuning(
     """
     classes, doc_agg, dup_reps, _ = _minhash_class_core(spark, sf_dir, checkpoint)
     sets = doc_agg.select("doc_id", "s").hint("shuffle_hash")
-    mem = classes.select("rep", "n_mem")
     # config-independent within-class pair count (shingled classes only)
     within = dup_reps.agg(
         F.coalesce(F.sum(F.expr("n_mem * (n_mem - 1) div 2")), F.lit(0)).alias("n_w")
@@ -1120,26 +1140,14 @@ def dedup_minhash_tuning(
     cands = _band_pairs(
         bands, bands.hint("shuffle_hash"), ("rep_a", "rep_b"), by=("cfg",)
     )
+    ok = _overlap(cands, sets, "rep_a", "rep_b").select(
+        "cfg",
+        "rep_a",
+        "rep_b",
+        F.when(_near_dup(), 1).otherwise(0).alias("ok"),
+    )
     percfg = (
-        _overlap(cands, sets, "rep_a", "rep_b")
-        .select(
-            "cfg",
-            "rep_a",
-            "rep_b",
-            F.when(_near_dup(), 1).otherwise(0).alias("ok"),
-        )
-        .join(
-            mem.select(
-                F.col("rep").alias("rep_a"), F.col("n_mem").alias("n_a")
-            ).hint("shuffle_hash"),
-            "rep_a",
-        )
-        .join(
-            mem.select(
-                F.col("rep").alias("rep_b"), F.col("n_mem").alias("n_b")
-            ).hint("shuffle_hash"),
-            "rep_b",
-        )
+        _join_classes(ok, classes, n_mem=("n_a", "n_b"))
         .groupBy("cfg")
         .agg(
             F.sum(F.expr("n_a * n_b")).alias("n_c"),
@@ -1860,43 +1868,24 @@ def dedup_containment_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row census of dedup_containment — the sf10-sweep form (the
     dedup_embed_cosine_census precedent): at 100x the raw pair DUMP is
     tens of millions of rows and the strict compare measures result
-    canonicalization, not engine work, so the census twin carries the
-    scale rung while the dump stays value-exact at driver SFs.
+    canonicalization, not engine work, so the census carries the scale
+    rung while the dump stays value-exact at driver SFs.
 
     ``n_jaccard_blind_pairs`` counts kept pairs whose symmetric Jaccard
     is UNDER the 0.5 verify cut (integer cross-multiplied) — the
     quote-inside-a-long-doc population that containment exists to
     catch; if it reads zero the operator is redundant with
-    dedup_minhash on that corpus. All counts exact integers; same
-    bounded LSH candidate set, aggregates crossed as 1-row scalar
-    subqueries (graph_triangles pattern)."""
-    scored = _overlap(*_minhash_core(_minhash_doc_agg(spark, sf_dir)))
-    # r9: ONE aggregate pass instead of two branches crossed — the old
-    # scored.agg x kept.agg crossJoin re-executed the whole
-    # minhash-core + verify-join subtree once per branch (no exchange
-    # reuse across the differently-shaped aggregates). The kept-pair
-    # filter becomes a conditional inside each aggregate: count/
-    # distinct/sum over `when(kept, ...)` rows is exactly the old
-    # filtered aggregate (nulls are skipped), and n_candidates is the
-    # unconditional count of the same pass. Identical integers, half
-    # the executions.
-    kept_c = F.col("n_common") * CONTAIN_T_DEN >= CONTAIN_T_NUM * F.least(
-        "n_a", "n_b"
-    )
-    contained = F.when(
-        F.col("n_a") <= F.col("n_b"), F.col("doc_a")
-    ).otherwise(F.col("doc_b"))
-    blind = (
-        F.col("n_common") * 2 < F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
-    return scored.agg(
-        F.count(F.lit(1)).alias("n_candidates"),
-        F.count(F.when(kept_c, 1)).alias("n_pairs"),
-        F.countDistinct(F.when(kept_c, contained)).alias("n_docs_contained"),
-        F.count(F.when(kept_c & blind, 1)).alias("n_jaccard_blind_pairs"),
-        F.coalesce(
-            F.sum(F.when(kept_c, F.col("n_common"))), F.lit(0)
-        ).alias("sum_common"),
+    dedup_minhash on that corpus.
+
+    Derived from the class form (``_containment_class_stats``): no doc
+    pair is enumerated, so the census is linear in distinct content
+    (the enumerated form spilled >70 GB at sf30, SCALE.md r6), and its
+    pair-form oracle checks the class arithmetic. An empty corpus gives
+    0s, as in the oracle, not the class sums' NULL."""
+    cols = ("n_candidates", "n_pairs", "n_docs_contained",
+            "n_jaccard_blind_pairs", "sum_common")
+    return _containment_class_stats(spark, sf_dir).select(
+        *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in cols]
     )
 
 
@@ -2163,17 +2152,15 @@ def dedup_minhash_recall(
 def dedup_containment_classes(
     spark: SparkSession, sf_dir: str, checkpoint: bool = True
 ) -> DataFrame:
-    """Content-CLASS form of dedup_containment_census: exact-duplicate
-    classes (md5 of text) collapse first, LSH + containment verify runs
-    ONCE per class representative, and pair counts come from class
+    """Content-CLASS form of dedup_containment: exact-duplicate classes
+    (md5 of text) collapse first, LSH + containment verify runs ONCE
+    per class representative, and pair counts come from class
     arithmetic — C(n,2) within a class, n_a*n_b across a kept class
-    pair — so the statistics are IDENTICAL to the enumerated census
-    (cross-query identity pinned by pytest) without ever materializing
-    a pair. n_docs_contained is the one enumerated-only column (its
-    doc-id-level distinct needs the pair stream; it stays on the
-    census, value-exact through sf0.1).
+    pair — without ever materializing a doc pair. dedup_containment_census
+    is the same body (``_containment_class_stats``) plus
+    ``n_docs_contained``, so that query's pair-form oracle checks it.
 
-    Why this exists: the enumerated census is pair-QUADRATIC in
+    Why this exists: the enumerated census was pair-QUADRATIC in
     duplicate-class size by definition — at 30x the planted 300-copy
     clusters make 245M candidate pairs, each dragging two shingle-set
     payloads through the verify shuffle (measured: >70 GB of spill,
@@ -2188,34 +2175,46 @@ def dedup_containment_classes(
     member counts join rep-keyed (never broadcast — classes scale with
     the corpus); the report is 1-row scalar aggregates crossed
     broadcast (graph_triangles pattern)."""
+    return _containment_class_stats(spark, sf_dir, checkpoint).drop(
+        "n_docs_contained"
+    )
+
+
+def _containment_class_stats(
+    spark: SparkSession, sf_dir: str, checkpoint: bool = True
+) -> DataFrame:
+    """One row: ``n_classes`` and ``n_docs`` (shingled classes), the
+    census counts by class arithmetic (within-class sums are NULL over
+    an empty corpus, as in the class oracle) and ``n_docs_contained``.
+
+    The pair form contains ``doc_a`` if n_a <= n_b else ``doc_b`` of
+    each kept pair. Member x of a shingled class is thus contained iff
+    x < t, where t is the max of the class's own max doc id, the max id
+    of each equal-size kept partner class, and +inf if a kept partner
+    has a larger set. Doc ids are unique and at most the class max, so
+    a class contributes n_mem - 1, plus 1 iff t exceeds its own max:
+    iff it LOSES a kept class pair (smaller set, or an equal set with
+    the lower max id). Every kept class pair has one loser, so no
+    member join is needed: n_docs - n_classes + count(distinct loser)."""
     # the signature aggregate (rep_agg) feeds FIVE consumers (both band
     # self-join sides, both verify-set lookups, within_stats): the
     # shared core checkpoints it eagerly and hands back the unfiltered
     # rep-pair overlap counts; the narrow classes relation is
-    # checkpointed for its three remaining consumers (mem x2,
+    # checkpointed for its three remaining consumers (both class joins,
     # within_stats).
     classes, rep_agg, _, scored = _minhash_class_core(spark, sf_dir, checkpoint)
     if checkpoint:
         classes = classes.localCheckpoint(eager=True)
-    mem = classes.select("rep", "n_mem").hint("shuffle_hash")
-    counts = (
-        scored.join(mem.alias("ma"), F.col("ma.rep") == F.col("rep_a"))
-        .join(mem.alias("mb"), F.col("mb.rep") == F.col("rep_b"))
-        .select(
-            "n_common",
-            "n_a",
-            "n_b",
-            F.col("ma.n_mem").alias("m_a"),
-            F.col("mb.n_mem").alias("m_b"),
-        )
+    counts = _join_classes(
+        scored, classes, n_mem=("m_a", "m_b"), mx=("mx_a", "mx_b")
     )
-    kept = (
-        F.col("n_common") * CONTAIN_T_DEN
-        >= CONTAIN_T_NUM * F.least("n_a", "n_b")
-    )
-    blind = kept & (
-        F.col("n_common") * 2 < F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    kept = F.col("n_common") * CONTAIN_T_DEN >= CONTAIN_T_NUM * F.least(n_a, n_b)
+    blind = kept & (F.col("n_common") * 2 < n_a + n_b - F.col("n_common"))
+    loser = F.when(
+        (n_a < n_b) | ((n_a == n_b) & (F.col("mx_a") < F.col("mx_b"))),
+        F.col("rep_a"),
+    ).otherwise(F.col("rep_b"))
     pair_m = F.col("m_a") * F.col("m_b")
     cross_stats = counts.agg(
         F.coalesce(F.sum(pair_m), F.lit(0)).alias("cand_cross"),
@@ -2229,6 +2228,7 @@ def dedup_containment_classes(
             F.sum(F.when(kept, pair_m * F.col("n_common")).otherwise(0)),
             F.lit(0),
         ).alias("common_cross"),
+        F.countDistinct(F.when(kept, loser)).alias("n_losers"),
     )
     within_stats = (
         classes.join(
@@ -2253,6 +2253,9 @@ def dedup_containment_classes(
         (F.col("cand_within") + F.col("kept_cross")).alias("n_pairs"),
         F.col("blind_cross").alias("n_jaccard_blind_pairs"),
         (F.col("common_within") + F.col("common_cross")).alias("sum_common"),
+        (F.col("n_docs") - F.col("n_classes") + F.col("n_losers")).alias(
+            "n_docs_contained"
+        ),
     )
 
 
@@ -2373,23 +2376,17 @@ def dedup_allpairs_prefix(
     # pipeline a second time (23 parquet scans total before, zero
     # ReusedExchange anywhere).
     docs = load_table(spark, sf_dir, "documents")
-    classes = docs.groupBy(F.md5("text").alias("ck")).agg(
-        F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n_mem")
-    )
+    classes = _text_classes(docs)
     # r9: classes sits under EVERY lazy re-execution of the shingle
-    # subtree (both prefix sides + both set lookups) plus mem x2 and
-    # wth — ~7 scan+md5-aggregate runs. Narrow and distinct-content-
-    # bounded (the batch-16 keep shape, NOT the rejected corpus-wide
+    # subtree (both prefix sides + both set lookups) plus both class
+    # joins and wth — ~7 scan+md5-aggregate runs. Narrow and distinct-
+    # content-bounded (the batch-16 keep shape, NOT the rejected corpus-wide
     # ranked-shingle persist): eager checkpoint measured 5.41/5.50/5.49
     # lazy vs 5.06/5.09/5.35 checkpointed (alternating, min-of-3 x3).
     # checkpoint=False keeps the lazy plan for audits.
     if checkpoint:
         classes = classes.localCheckpoint(eager=True)
-    reps = docs.join(
-        classes.select(F.col("rep").alias("doc_id")).hint("shuffle_hash"),
-        "doc_id",
-    ).select("doc_id", "text")
-    sh = shingle_explode(ensure_min_partitions(reps))
+    sh = shingle_explode(ensure_min_partitions(_rep_texts(docs, classes)))
     # shingles are DISTINCT per doc (shingle_explode contract), so the
     # per-shingle row count IS the document frequency — same integers
     # as the groupBy form, one exchange instead of three subtrees.
@@ -2435,36 +2432,20 @@ def dedup_allpairs_prefix(
     ver = _overlap(cand, sets, "rep_a", "rep_b").select(
         "rep_a", "rep_b", _jac_permille().alias("jac_permille")
     )
-    # class sizes join rep-keyed and stay shuffled: |classes| scales
-    # with distinct content, never broadcast-size by assumption.
     # r9: the n_mem lookups now join EVERY candidate row (not just the
     # qualifying ones) so the report can aggregate the candidate census
     # and the qualifying-pair stats in ONE pass over ONE execution of
     # the verify pipeline — candidates are prefix-filter-bounded, so
     # the extra joined rows are the same order as before; the old
     # cand.agg() branch cost a full second run of the prefix self-join.
-    mem = classes.select("rep", "n_mem")
     qual = F.col("jac_permille") >= _AP_T_PERMILLE
     # INVARIANT (r9 advice): n_rep_candidates is counted from verm, not
     # cand — value-identical ONLY because every candidate rep_a/rep_b is
     # guaranteed present in sets and classes (1:1 inner joins; cand reps
     # come from the same prefix relation that feeds sets, and classes
-    # holds every rep). Filtering sets or mem would silently deflate
+    # holds every rep). Filtering sets or classes would silently deflate
     # the candidate census; keep those joins unfiltered.
-    verm = (
-        ver.join(
-            mem.select(
-                F.col("rep").alias("rep_a"), F.col("n_mem").alias("n_a")
-            ).hint("shuffle_hash"),
-            "rep_a",
-        )
-        .join(
-            mem.select(
-                F.col("rep").alias("rep_b"), F.col("n_mem").alias("n_b")
-            ).hint("shuffle_hash"),
-            "rep_b",
-        )
-    )
+    verm = _join_classes(ver, classes, n_mem=("n_a", "n_b"))
     agg = verm.agg(
         F.count(F.lit(1)).alias("n_rep_candidates"),
         F.count(F.when(qual, F.lit(1))).alias("n_rep_pairs"),
@@ -2881,6 +2862,13 @@ def dedup_clusters_classes(
     now walks the REP graph (tiny), so the class form is strict-
     verifiable at sf10, where dedup_clusters' pair-graph oracle needs
     a tier-3 invariant check (oracle-side >90 GB)."""
+    return _cluster_rows(spark, sf_dir, checkpoint)[0]
+
+
+def _cluster_rows(
+    spark: SparkSession, sf_dir: str, checkpoint: bool = True
+) -> tuple[DataFrame, DataFrame]:
+    """dedup_clusters_classes' rows and the classes they expand."""
     classes, _, dup_reps, scored = _minhash_class_core(spark, sf_dir, checkpoint)
     labels = _class_components(dup_reps, scored)
     cstat = (
@@ -2889,7 +2877,7 @@ def dedup_clusters_classes(
         .agg(F.sum("n_mem").alias("cluster_size"))
     )
     docs = load_table(spark, sf_dir, "documents")
-    return (
+    rows = (
         docs.select("doc_id", F.md5("text").alias("ck"))
         .join(classes.select("ck", "rep").hint("shuffle_hash"), "ck")
         .join(labels, F.col("rep") == labels.node)
@@ -2901,6 +2889,7 @@ def dedup_clusters_classes(
             (F.col("doc_id") == F.col("comp")).alias("is_canonical"),
         )
     )
+    return rows, classes
 
 
 def _class_components(dup_reps: DataFrame, scored: DataFrame) -> DataFrame:
@@ -3016,12 +3005,8 @@ def dedup_keep_best_classes(
     classes, _, dup_reps, scored = _minhash_class_core(spark, sf_dir, checkpoint)
     labels = _class_components(dup_reps, scored)
     docs = load_table(spark, sf_dir, "documents")
-    reps = docs.join(
-        classes.select(F.col("rep").alias("doc_id")).hint("shuffle_hash"),
-        "doc_id",
-    ).select(F.col("doc_id").alias("rep"), "text")
-    quality = reps.select(
-        "rep",
+    quality = _rep_texts(docs, classes).select(
+        F.col("doc_id").alias("rep"),
         F.expr(
             "aggregate(transform(split(text, ' '),"
             f" w -> cast({_FEAT_W_SPARK} as bigint)),"

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -44,3 +45,35 @@ def corpus(spark):
     from curatorhadoopinterface_spark.io import records_from_texts
 
     return records_from_texts(spark, SAMPLE_TEXTS)
+
+
+@pytest.fixture(scope="session")
+def assert_oracle(spark):
+    """``assert_oracle(name, sf)``: declared dedup query ``name`` equals
+    its DuckDB oracle over ``sf``'s documents, as a canonical multiset
+    (verify_local.canon). Returns the Spark rows."""
+    import duckdb
+
+    from curatorhadoopinterface_spark.operators import ORACLE, QUERIES
+    from curatorhadoopinterface_spark.operators import dedup  # noqa: F401  (registers)
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from verify_local import canon
+
+    def check(name: str, sf: str):
+        sdf = QUERIES[name](spark, sf)
+        rows = sdf.collect()
+        srows = [tuple(r) for r in rows]
+        path = f"{sf}/documents.parquet"
+        if os.path.isdir(path):  # a Spark-written fixture
+            path += "/*.parquet"
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        res = con.execute(ORACLE[name])
+        dcols = [d[0] for d in res.description]
+        drows = res.fetchall()
+        assert sorted(sdf.columns) == sorted(dcols)
+        assert srows and canon(srows, sdf.columns) == canon(drows, dcols)
+        return rows
+
+    return check

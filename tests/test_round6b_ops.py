@@ -211,22 +211,3 @@ def test_ares_key_offline_replay(spark):
         # is HALF_UP — they differ in the 9th decimal on ties; the RANK
         # key (asserted exactly above) is the pre-round double
         assert abs(r.ares_key - key(r.doc_id, w) / 1e9) <= 1e-9
-
-
-def test_containment_classes_identity_with_census(spark):
-    """The class-arithmetic form computes the SAME statistics as the
-    pair-enumerated census (its scale-rung reason for existing) — the
-    cross-query identity on the real sf0.001 fixture, column by
-    column for every shared column."""
-    from curatorhadoopinterface_spark.operators.dedup import (
-        dedup_containment_census,
-        dedup_containment_classes,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    census = dedup_containment_census(spark, sf).collect()[0]
-    classes = dedup_containment_classes(spark, sf).collect()[0]
-    assert classes.n_candidates == census.n_candidates
-    assert classes.n_pairs == census.n_pairs
-    assert classes.n_jaccard_blind_pairs == census.n_jaccard_blind_pairs
-    assert classes.sum_common == census.sum_common

@@ -35,37 +35,6 @@ def _tripled_corpus(spark, tmp_path):
     return sf
 
 
-def _assert_matches_oracle(spark, name, sf):
-    """Declared dedup query ``name`` equals its DuckDB oracle over
-    ``sf``'s documents, as a canonical multiset (verify_local.canon).
-    Returns the Spark rows."""
-    import sys
-    from pathlib import Path
-
-    import duckdb
-
-    from curatorhadoopinterface_spark.operators import ORACLE, QUERIES
-    from curatorhadoopinterface_spark.operators import dedup  # noqa: F401  (registers)
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from verify_local import canon
-
-    sdf = QUERIES[name](spark, sf)
-    rows = sdf.collect()
-    srows = [tuple(r) for r in rows]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM"
-        f" read_parquet('{sf}/documents.parquet/*.parquet')"
-    )
-    res = con.execute(ORACLE[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(dcols)
-    assert srows and canon(srows, sdf.columns) == canon(drows, dcols)
-    return rows
-
-
 def test_kendall_tau_sign_on_monotone_corpus(spark, tmp_path):
     """Docs engineered so length and lexical diversity move TOGETHER
     -> tau strongly positive; the mirrored corpus (diversity falls as
@@ -459,13 +428,13 @@ def test_scan_xml_roundtrip_escaping(spark, tmp_path):
     assert out["s2"].sum_text_len == len("plain text")
 
 
-def test_clusters_class_form_equals_pair_form(spark, tmp_path):
+def test_clusters_class_form_equals_pair_form(spark, tmp_path, assert_oracle):
     """dedup_clusters (derived from dedup_clusters_classes) equals its
     pair-form DuckDB oracle on a 3x-duplicated corpus — components,
     sizes, canonical flags and the dup factor all survive the class
     collapse + expansion."""
     sf = _tripled_corpus(spark, tmp_path)
-    rows = _assert_matches_oracle(spark, "dedup_clusters", sf)
+    rows = assert_oracle("dedup_clusters", sf)
     # the 3x duplication puts every doc of a shingled class in a cluster
     # of size >= 3
     assert all(r.cluster_size >= 3 for r in rows)
@@ -548,9 +517,9 @@ def test_mp4_probe_box_walk_and_guards():
         probe_mp4(make_mp4(2)[:-5])  # truncated final box
 
 
-def test_keep_best_class_form_equals_pair_form(spark, tmp_path):
+def test_keep_best_class_form_equals_pair_form(spark, tmp_path, assert_oracle):
     """dedup_keep_best (derived from dedup_keep_best_classes) equals its
     pair-form DuckDB oracle on a 3x-duplicated corpus: keeper, score,
     and member counts all survive the class collapse."""
     sf = _tripled_corpus(spark, tmp_path)
-    _assert_matches_oracle(spark, "dedup_keep_best", sf)
+    assert_oracle("dedup_keep_best", sf)

@@ -37,10 +37,12 @@ Usage: python -u tools/engine_check_sf10.py [sf_dir] [check ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pyspark.sql.functions as F  # noqa: E402
 

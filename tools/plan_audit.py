@@ -18,11 +18,13 @@ from __future__ import annotations
 
 import inspect
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # query -> invariants. "pushed": a PushedFilters entry must be non-empty;
 # "broadcast": >=1 BroadcastHashJoin; "no_bnlj": BroadcastNestedLoopJoin
@@ -738,11 +740,13 @@ AUDITS: dict[str, dict] = {
     "dedup_containment": {"partial": True,
                           "prune": ["lang", "source", "n_chars"],
                           "forbid": [r"CartesianProduct"]},
-    # census twin: same candidate machinery, 1-row scalar aggregates
-    # crossed via broadcast BNLJ (graph_triangles pattern)
+    # census: the class twin's body over its eager checkpoints (no
+    # parquet rescan); 1-row reports crossed via broadcast BNLJ
     "dedup_containment_census": {"no_bnlj": False, "partial": True,
-                                 "prune": ["lang", "source", "n_chars"],
-                                 "forbid": [r"CartesianProduct"]},
+                                 "require": [r"ShuffledHashJoin"],
+                                 "forbid": [r"CartesianProduct",
+                                            r"Scan parquet"],
+                                 "max_exchange": 14},
     # incremental near-dup: batch bands equi-join the store band index
     # (never batch x store); sig+set partial-aggregate once
     "dedup_incremental_minhash": {"partial": True,
@@ -1399,7 +1403,7 @@ def main() -> None:
         # Header boundary located by the first section marker (not a
         # fixed line count) and names re.escape'd so a header-format
         # change or a metacharacter in a name can't corrupt PLANS.md.
-        existing = open("/root/repo/PLANS.md").read()
+        existing = open(os.path.join(ROOT, "PLANS.md")).read()
         first = next(
             (i for i, ln in enumerate(lines) if ln.startswith("## ")),
             len(lines),
@@ -1412,10 +1416,10 @@ def main() -> None:
                 existing,
                 flags=re.S,
             )
-        with open("/root/repo/PLANS.md", "w") as f:
+        with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
             f.write(existing.rstrip("\n") + "\n\n" + body)
     else:
-        with open("/root/repo/PLANS.md", "w") as f:
+        with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
             f.write("\n".join(lines))
     print(f"\n{failures} failing audits -> PLANS.md")
 

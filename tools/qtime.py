@@ -22,6 +22,12 @@ run goes on.
 --fork          one process (one Spark session) per query: a long session
                 piles up shuffle files and localCheckpoint blocks across
                 queries, and at sf30 that filled the disk
+
+Rows from one session are not comparable across queries: a query's
+position in the run alone moves its time by ~25% (one query timed
+4.25 s, and the same function under another name 3.41 s two queries
+later). To compare queries, or a parent checkout against a change, use
+``--fork`` and alternate the two sides.
 """
 
 from __future__ import annotations

@@ -14,10 +14,12 @@ Usage: python tools/stress_pack_hier.py [n_rows]   (default 50M)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pyspark.sql.functions as F
 from pyspark.sql import Window

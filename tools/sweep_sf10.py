@@ -39,12 +39,14 @@ PASS|PASS-fingerprint|PASS-invariant|FAIL|EXCLUDED, "sec": s,
 from __future__ import annotations
 
 import json
+import os
 import re
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # tier-2: raw-dump queries -> aggregate-fingerprint verification
 FINGERPRINT = {
@@ -141,8 +143,6 @@ def _flush(
     (b) ``registry`` is given (full runs) and a merged name is no longer
     in the live registry — renamed/removed queries can't inflate the
     tally or ride into a ``complete: true`` stamp."""
-    import os
-
     merged: dict = {}
     if os.path.exists(out_path):
         try:
@@ -197,7 +197,7 @@ def _flush(
 
 
 def _run(cmd: list[str]) -> str:
-    r = subprocess.run(cmd, capture_output=True, text=True, cwd="/root/repo")
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=ROOT)
     text = (r.stdout + r.stderr).replace("\r", "\n")
     # drop progress-bar/log noise so FAIL `detail` tails carry the actual
     # error, not 300 bytes of spinner (r8 verdict, What's wrong #1)
@@ -240,8 +240,6 @@ def main() -> int:
     registry = set(all_names)
     done: set[str] = set()
     if resume:
-        import os
-
         if os.path.exists(out_path):
             try:
                 with open(out_path) as fh:
@@ -367,9 +365,7 @@ def main() -> int:
     # fixture); its invariants run at the sf1 contract boundary, the
     # other blocks at the sweep's own sf_dir (r9: previously the sweep
     # would have run semantic at sf10, contradicting its own reason)
-    import os as _os
-
-    semantic_dir = _os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1_seed42")
+    semantic_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1_seed42")
     blocks = sorted({b for b, _ in ec_names.values()})
     text = ""
     tally_ok = True

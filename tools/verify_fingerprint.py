@@ -32,11 +32,13 @@ Usage: python tools/verify_fingerprint.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pyspark.sql.functions as F  # noqa: E402
 

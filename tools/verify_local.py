@@ -18,11 +18,13 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def normalize(v):

@@ -15,10 +15,10 @@ import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, StructType
 
 from curatorhadoopinterface_spark.functions.hashing import record_identifier
-from curatorhadoopinterface_spark.schema import RECORD, SPAN
+from curatorhadoopinterface_spark.schema import RECORD, SPAN, decode_json
 
 
 def proc_scratch(name: str) -> str:
@@ -208,22 +208,25 @@ def read_thrift_records(spark: SparkSession, path: str, glob: str = "*.txt") -> 
     )
 
     def decode(batches):
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from curatorhadoopinterface_spark.thrift_codec import decode_thrift_record
 
-        for pdf in batches:
-            recs = [decode_thrift_record(bytes(b)) for b in pdf["content"]]
-            yield pd.DataFrame(recs)
+        schema = to_arrow_schema(RECORD)
+        for batch in batches:
+            recs = [decode_thrift_record(b) for b in batch.column("content").to_pylist()]
+            yield pa.RecordBatch.from_pylist(recs, schema=schema)
 
-    return src.mapInPandas(decode, RECORD)
+    return src.mapInArrow(decode, RECORD)
 
 
 def write_thrift_records(df: DataFrame, path: str) -> None:
     """The inverse: emit a reference-READABLE serialized corpus, one
     ``<identifier>.txt`` TBinaryProtocol blob per record, executor-side
-    (foreachPartition, no driver collect) — so a user can hand results
-    back to the reference stack (CuratorClient.java:299-339 resume).
+    (mapInArrow) — so a user can hand results back to the reference stack
+    (CuratorClient.java:299-339 resume). Records cross as JVM ``to_json``
+    text (``schema.decode_json``), so maps keep their stored entry order.
 
     Identifiers come from outside the program (a foreign Thrift or
     parquet corpus), so before anything is written one job over the
@@ -235,16 +238,21 @@ def write_thrift_records(df: DataFrame, path: str) -> None:
     for row in df.where(unsafe).select("identifier").limit(1).collect():
         raise ValueError(f"identifier {row[0]!r} does not name a file inside {path}")
     os.makedirs(path, exist_ok=True)
+    record = StructType([f for f in RECORD.fields if f.name in df.columns])
 
-    def write_partition(rows) -> None:
+    def write_batches(batches):
+        import pyarrow as pa
+
         from curatorhadoopinterface_spark.thrift_codec import encode_thrift_record
 
-        for row in rows:
-            rec = row.asDict(recursive=True)
-            with open(os.path.join(path, f"{rec['identifier']}.txt"), "wb") as fh:
-                fh.write(encode_thrift_record(rec))
+        for batch in batches:
+            for raw in batch.column(0).to_pylist():
+                rec = decode_json(raw, record)
+                with open(os.path.join(path, f"{rec['identifier']}.txt"), "wb") as fh:
+                    fh.write(encode_thrift_record(rec))
+            yield pa.RecordBatch.from_pydict({"n": [batch.num_rows]})
 
-    df.select(*[c for c in RECORD.fieldNames() if c in df.columns]).foreachPartition(write_partition)
+    df.select(F.to_json(F.struct(*record.fieldNames()))).mapInArrow(write_batches, "n long").collect()
 
 
 def roundtrip_check(spark: SparkSession, df: DataFrame, path: str) -> bool:

@@ -269,7 +269,7 @@ def incremental_provide_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the cache path is an identifier-keyed semi join plus
     left join against the bucketed store (SURVEY §1.4 record-store
     row); only rows whose views do not yet cover the request enter the
-    fused mapInPandas stage, so incremental cost tracks NEW data — the
+    fused mapInArrow stage, so incremental cost tracks NEW data — the
     entire point of the reference's architecture.
     """
     import os

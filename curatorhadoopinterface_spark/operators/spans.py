@@ -274,7 +274,7 @@ def _annotated_corpus(spark: SparkSession, sf_dir: str, target) -> DataFrame:
     """,
 )
 def annotate_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # end-to-end check of the TOKEN pandas_udf (mapInPandas) against the
+    # end-to-end check of the TOKEN annotation stage (mapInArrow) against the
     # same tokenization expressed in SQL.
     ann = _annotated_corpus(spark, sf_dir, "TOKEN")
     return ann.select(
@@ -773,7 +773,7 @@ def annotate_entity_pmi(
 ) -> DataFrame:
     """Annotation -> analytics COMPOSITION (the reference's job-chaining
     A11 exercised end-to-end): run the NER annotator (the real Arrow
-    mapInPandas stage, BIO spans merged), extract each span's SURFACE
+    mapInArrow stage, BIO spans merged), extract each span's SURFACE
     form from the raw text, and compute document-level pointwise mutual
     information between entity pairs — "which entities travel
     together", the knowledge-graph-edge-weight primitive. The oracle
@@ -798,7 +798,7 @@ def annotate_entity_pmi(
     )
     # r9: ents roots FOUR consumer branches (marginals, the doc count,
     # both sides of the per-doc pair self-join) and sits DOWNSTREAM of
-    # the Arrow NER mapInPandas stage — unpersisted, every branch
+    # the Arrow NER mapInArrow stage — unpersisted, every branch
     # re-ran the annotator over the corpus. Persist the
     # gazetteer-bounded (doc, surface) relation, eagerly checkpoint the
     # 20-row result, unpersist before return (the batch-5 pattern).

@@ -7,7 +7,7 @@ by document hash and RPC-ing every document to a local Curator
 
 Spark-first collapse: the dependency closure is computed once
 (plans/registry.dependency_closure), and all requested modes run in one
-``mapInPandas`` pass per ``provide()`` call — one Arrow batch boundary,
+``mapInArrow`` pass per ``provide()`` call — one Arrow batch boundary,
 no shuffle (annotation is embarrassingly per-row). Per-row memoization:
 views already present in a record's maps are reused, not recomputed
 (CuratorHandler.provide, :1029-1052). Stage fusion (A10) is therefore
@@ -42,11 +42,11 @@ from curatorhadoopinterface_spark.plans.registry import (
     forced_start_plan,
     invalidation_closure,
 )
-from curatorhadoopinterface_spark.schema import RECORD
+from curatorhadoopinterface_spark.schema import RECORD, decode_json
 from curatorhadoopinterface_spark.session import ensure_min_partitions
 
 if TYPE_CHECKING:
-    import pandas as pd
+    import pyarrow as pa
 
 VIEW_COLS: dict[str, MapType] = {
     c: RECORD[c].dataType for c in ("label_views", "cluster_views", "parse_views")
@@ -59,29 +59,6 @@ VIEW_FAMILY: dict[str, str] = {
     )
     for view, mode in VIEW_TO_MODE.items()
 }
-
-
-def _parse_views_json(raw: str | None, family: str) -> dict:
-    """Decode a to_json()'d view map back to plain dicts.
-
-    Existing view maps enter the UDF as JSON strings rather than Arrow
-    maps: pyarrow's map->pandas conversion segfaults on this depth of
-    nesting (a parse_views map down to each Node's int-keyed children), and
-    JSON round-trip is JVM-side + cheap relative to annotation. JSON
-    stringifies the int keys of Node.children, so restore them here.
-    """
-    import json
-
-    if not raw:
-        return {}
-    views = json.loads(raw)
-    if family == "parse_views":
-        for payload in views.values():
-            for tree in payload.get("trees") or []:
-                for node in tree.get("nodes") or []:
-                    if node.get("children"):
-                        node["children"] = {int(k): v for k, v in node["children"].items()}
-    return views
 
 
 def _request(
@@ -188,93 +165,61 @@ def provide(
     mode (default) propagates the exception so tests fail loud.
     """
     modes, drop_views = _request(target, force, force_start)
-    fields = [f for f in df.schema.fields if f.name not in VIEW_COLS]
-    passthrough = [f.name for f in fields]
-    # label/cluster views leave the worker as JSON strings and are parsed
-    # JVM-side by from_json (Jackson + codegen — measured ~1.7x faster
-    # than pyarrow's python-dict -> nested-map conversion). parse_views
-    # can't: from_json forbids non-string map keys (Node.children is
-    # map<int,string>), so that family alone takes the Arrow dict path.
+    passthrough = [c for c in df.columns if c not in VIEW_COLS]
+    stored = [c for c in VIEW_COLS if c in df.columns]
     out_schema = StructType(
-        fields
-        + [
-            StructField("__label_views_json", StringType(), True),
-            StructField("__cluster_views_json", StringType(), True),
-            StructField("parse_views", VIEW_COLS["parse_views"], True),
-        ]
+        [df.schema[c] for c in passthrough]
+        + [StructField(c, t, True) for c, t in VIEW_COLS.items()]
         + ([StructField("annotation_error", StringType(), True)] if best_effort else [])
     )
-    out_cols = [f.name for f in out_schema.fields]
-
-    # feed existing view maps to the worker as JSON strings (see
-    # _parse_views_json for why), everything else as-is.
-    json_cols = {c: f"__{c}_json" for c in VIEW_COLS if c in df.columns}
-    udf_input = df.select(
-        *passthrough, *[F.to_json(F.col(c)).alias(alias) for c, alias in json_cols.items()]
-    )
-
-    # annotation is CPU-bound in the Python worker: a small corpus that
+    # stored view maps enter the worker as JVM-side to_json text, read by
+    # schema.decode_json: 6-10x cheaper than pyarrow's to_pylist of these
+    # columns (OPTIMIZATION_r18.md). Views leave as Arrow arrays; every
+    # other column is passed through as is.
+    # Annotation is CPU-bound in the Python worker: a small corpus that
     # parquet packed into fewer splits than there are cores would leave
     # most executors idle (the 1-partition/1-core trap). Plan-side split
     # estimate, no job; no-op at 100 TB and over a spread checkpoint.
-    udf_input = ensure_min_partitions(udf_input)
+    udf_input = ensure_min_partitions(
+        df.select(*passthrough, *[F.to_json(c).alias(c) for c in stored])
+    )
 
-    def annotate_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def annotate_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         # worker-side import: annotator "model load" happens once per
         # worker process (module import), amortized over all batches.
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from curatorhadoopinterface_spark.annotators.light import annotate_record
 
-        import json
-
-        for pdf in batches:
-            n = len(pdf)
-            texts = pdf[text_col].tolist()
-            families = {
-                col: (pdf[alias].tolist() if alias in pdf.columns else [None] * n)
-                for col, alias in json_cols.items()
-            }
-            out_label, out_cluster, out_parse, out_err = [], [], [], []
-            for i in range(n):
+        schema = to_arrow_schema(out_schema)
+        for batch in batches:
+            texts = batch.column(text_col).to_pylist()
+            raws = [(VIEW_COLS[c], batch.column(c).to_pylist()) for c in stored]
+            rows: list[dict] = []
+            errors = []
+            for i, text in enumerate(texts):
                 views: dict = {}
-                for col in VIEW_COLS:
-                    if col in families:
-                        views.update(_parse_views_json(families[col][i], col))
+                for dt, col in raws:
+                    views.update(decode_json(col[i], dt) or {})
                 for v in drop_views:
                     views.pop(v, None)
-                if best_effort:
-                    try:
-                        annotate_record(texts[i], views, modes)
-                        out_err.append(None)
-                    except Exception as exc:  # noqa: BLE001 - budget policy
-                        out_err.append(f"{type(exc).__name__}: {exc}")
-                else:
-                    annotate_record(texts[i], views, modes)
-                out = {c: {} for c in VIEW_COLS}
+                try:
+                    annotate_record(text, views, modes)
+                    errors.append(None)
+                except Exception as exc:  # noqa: BLE001 - budget policy
+                    if not best_effort:
+                        raise
+                    errors.append(f"{type(exc).__name__}: {exc}")
+                rows.append({c: {} for c in VIEW_COLS})
                 for vname, payload in views.items():
-                    out[VIEW_FAMILY[vname]][vname] = payload
-                # always dump (even "{}") so from_json yields an empty
-                # map, not NULL — view-count exprs rely on map semantics
-                out_label.append(json.dumps(out["label_views"]))
-                out_cluster.append(json.dumps(out["cluster_views"]))
-                out_parse.append(out["parse_views"])
-            res = pdf[passthrough].copy()
-            res["__label_views_json"] = out_label
-            res["__cluster_views_json"] = out_cluster
-            res["parse_views"] = out_parse
-            if best_effort:
-                res["annotation_error"] = out_err
-            yield res[out_cols]
+                    rows[-1][VIEW_FAMILY[vname]][vname] = payload
+            arrays = [batch.column(c) for c in passthrough]
+            arrays += [pa.array([r[c] for r in rows], type=schema.field(c).type) for c in VIEW_COLS]
+            arrays += [pa.array(errors, pa.string())] if best_effort else []
+            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
-    annotated = udf_input.mapInPandas(annotate_batches, out_schema)
-    return annotated.select(
-        *passthrough,
-        F.from_json("__label_views_json", VIEW_COLS["label_views"]).alias("label_views"),
-        F.from_json("__cluster_views_json", VIEW_COLS["cluster_views"]).alias(
-            "cluster_views"
-        ),
-        "parse_views",
-        *(["annotation_error"] if best_effort else []),
-    )
+    return udf_input.mapInArrow(annotate_batches, out_schema)
 
 
 def annotate(df: DataFrame, mode: str, text_col: str = "raw_text") -> DataFrame:

@@ -6,8 +6,8 @@ Spark ``StructType``: one row per document, open-keyed MAP columns for the
 annotation view families. Span/Labeling/Clustering/Forest payloads follow
 the generated Thrift base classes (SURVEY.md section 1.2). This module is
 the one statement of the layout: the Thrift codec (thrift_codec.py), the
-Record readers and writers in io.py and provide()'s view columns all take
-their types from it.
+Record readers and writers in io.py, provide()'s view columns and the JVM
+JSON decode (``decode_json``) all take their types from it.
 
 Scale note: MapType view columns keep the reference's open keying, but
 nested maps defeat Parquet column pruning — the incremental layer promotes
@@ -17,9 +17,13 @@ hard part #4).
 
 from __future__ import annotations
 
+import functools
+import json
+
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     DoubleType,
     IntegerType,
     MapType,
@@ -137,3 +141,44 @@ MULTIRECORD = StructType(
         RECORD["parse_views"],
     ]
 )
+
+
+@functools.cache
+def _restorer(dt: DataType, doubles: bool):
+    """``fix(value) -> value`` that puts back what JSON lost at ``dt``:
+    int keys of IntegerType-keyed maps and, with ``doubles``, the
+    non-finite DoubleType values ``to_json`` quotes. Falsy where nothing
+    at or below ``dt`` needs it, so such a subtree is never walked.
+    ``fix`` is called on non-null values only."""
+    if isinstance(dt, DoubleType):
+        return float if doubles else None
+    if isinstance(dt, ArrayType):
+        f = _restorer(dt.elementType, doubles)
+        return f and (lambda v: [x if x is None else f(x) for x in v])
+    if isinstance(dt, MapType):
+        f, int_keys = _restorer(dt.valueType, doubles), isinstance(dt.keyType, IntegerType)
+        return (f or int_keys) and (
+            lambda v: {int(k) if int_keys else k: x if x is None or not f else f(x) for k, x in v.items()}
+        )
+    if isinstance(dt, StructType):
+        fs = [(n, f) for n in dt.fieldNames() if (f := _restorer(dt[n].dataType, doubles))]
+        def fix(v):
+            for n, f in fs:
+                if v.get(n) is not None:
+                    v[n] = f(v[n])
+            return v
+        return fs and fix
+    return None
+
+
+def decode_json(raw: str | None, dt: DataType):
+    """The value of Spark type ``dt`` whose JVM ``to_json`` text is ``raw``.
+
+    ``to_json`` writes map keys as strings and quotes non-finite doubles
+    (``"NaN"``, ``"Infinity"``, ``"-Infinity"``); both are restored where
+    ``dt`` declares an IntegerType key or a DoubleType. Text without a
+    quoted non-finite double walks only the paths to int-keyed maps."""
+    if raw is None:
+        return None
+    fix = _restorer(dt, '"NaN"' in raw or 'Infinity"' in raw)
+    return fix(json.loads(raw)) if fix else json.loads(raw)

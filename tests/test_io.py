@@ -1,6 +1,7 @@
 """IO: raw ingestion filters empty docs, serialization round-trip
 (A3/A5; CuratorClient.java:527-536, HadoopCuratorClient.java:83-104)."""
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
@@ -79,3 +80,49 @@ def test_load_table_rewritten_file_replaces_cache_entry(spark, tmp_path):
     pq.write_table(pa.table({"a": [1]}), str(ddir / "part-0.parquet"))
     assert load_table(spark, str(tmp_path), "d").count() == 1
     assert str(ddir) not in _TABLE_CACHE[spark]
+
+
+def test_write_thrift_records_writes_the_stored_record(spark, corpus, tmp_path):
+    """Each file is the Thrift encoding of its row with every map in the
+    entry order parquet stores, for an eleven-mode provide() output."""
+    import pyarrow.parquet as pq
+
+    from curatorhadoopinterface_spark.io import write_thrift_records
+    from curatorhadoopinterface_spark.plans.registry import MODES
+    from curatorhadoopinterface_spark.thrift_codec import encode_thrift_record
+
+    pq_dir, out = str(tmp_path / "pq"), tmp_path / "thrift"
+    write_corpus(provide(corpus, list(MODES)), pq_dir)
+    write_thrift_records(spark.read.parquet(pq_dir), str(out))
+    table = pq.read_table(pq_dir)
+    stored = [_as_dicts(rec, pa.struct(table.schema)) for rec in table.to_pylist()]
+    assert len(stored) == len(list(out.iterdir())) == corpus.count()
+    for rec in stored:
+        assert (out / f"{rec['identifier']}.txt").read_bytes() == encode_thrift_record(rec)
+
+
+def _as_dicts(v, t):
+    """A ``to_pylist`` value of Arrow type ``t`` with each map, a list of
+    (key, value) pairs there, as a dict in the same entry order."""
+    if v is None:
+        return None
+    if pa.types.is_map(t):
+        return {k: _as_dicts(x, t.item_type) for k, x in v}
+    if pa.types.is_struct(t):
+        return {f.name: _as_dicts(v[f.name], f.type) for f in t}
+    if pa.types.is_list(t):
+        return [_as_dicts(x, t.value_type) for x in v]
+    return v
+
+
+@pytest.mark.parametrize("case", ["read-no-matching-file", "write-empty-frame"])
+def test_thrift_paths_on_empty_inputs(spark, tmp_path, case):
+    from curatorhadoopinterface_spark.io import read_thrift_records, write_thrift_records
+
+    if case == "read-no-matching-file":
+        (tmp_path / "notes.bin").write_bytes(b"\x00")
+        assert read_thrift_records(spark, str(tmp_path)).count() == 0
+    else:
+        empty = spark.createDataFrame([], "identifier string, raw_text string, whitespaced boolean")
+        write_thrift_records(empty, str(tmp_path / "out"))
+        assert list((tmp_path / "out").iterdir()) == []

@@ -103,6 +103,15 @@ def test_critical_names_have_explicit_specs():
     assert not empty, f"critical queries with empty audit specs: {empty}"
 
 
+def test_append_replaces_a_section_where_it_stands():
+    doc = "# PLANS\n\nheader\n\n## a — PASS\n\nA\n\n## b — PASS\n\nB\n\n## c — PASS\n\nC\n"
+    fresh = "# regenerated header\n\n## b — FAIL: x\n\nB2\n"
+    assert plan_audit.splice_sections(doc, fresh) == doc.replace("## b — PASS\n\nB\n", "## b — FAIL: x\n\nB2\n")
+    # a new name is appended; an empty refresh changes nothing
+    assert plan_audit.splice_sections(doc, "## d — PASS\n\nD\n") == doc + "\n## d — PASS\n\nD\n"
+    assert plan_audit.splice_sections(doc, "") == doc
+
+
 @pytest.mark.planaudit
 @pytest.mark.parametrize("name", CRITICAL)
 def test_plan_invariants(spark, name):

@@ -2,6 +2,7 @@
 view identity with the Spark identifier expression."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from curatorhadoopinterface_spark.functions.hashing import record_identifier_py
 from curatorhadoopinterface_spark.plans.provide import provide
@@ -86,3 +87,85 @@ def test_complete_rows_keep_their_views_in_provide_shape(spark, corpus):
     for r in shaped.collect():
         assert r.label_views == direct[r.identifier].label_views
         assert r.cluster_views == {} and r.annotation_error is None
+
+
+def _span(start, ending, score):
+    return {"start": start, "ending": ending, "label": "w", "score": score, "source": None, "attributes": None}
+
+
+def _nonfinite_record():
+    nan, inf = float("nan"), float("inf")
+    return {
+        "identifier": "nonfinite",
+        "raw_text": "Alice pays Bob.",
+        "whitespaced": False,
+        "label_views": {"tokens": {"labels": [_span(0, 5, inf), _span(6, 10, -inf)], "source": "t", "score": nan}},
+        "cluster_views": {"coref": {"clusters": [{"labels": [_span(0, 5, nan)]}], "source": "c", "score": -inf}},
+        "parse_views": {
+            "charniak": {
+                "trees": [{"top": 0, "score": inf, "nodes": [
+                    {"label": "S", "span": _span(0, 15, nan), "children": {1: "", 2: "x"}},
+                    {"label": "NP", "span": _span(0, 5, -inf), "children": None},
+                    {"label": "VP", "span": _span(6, 15, 0.5), "children": None},
+                ]}],
+                "source": "p",
+            }
+        },
+        "views": {"semrel": {
+            "spans": [_span(0, 5, nan), _span(11, 14, inf)],
+            "relations": [{"start": 0, "ending": 1, "label": "pays", "score": -inf, "source": None}],
+            "source": "r", "score": nan,
+        }},
+    }
+
+
+def _canon(v):
+    """``v`` with every float as its repr, so NaN compares equal to NaN."""
+    if isinstance(v, dict):
+        return {k: _canon(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_canon(x) for x in v]
+    return repr(v) if isinstance(v, float) else v
+
+
+def test_non_finite_scores_survive_provide_and_thrift_write(spark, tmp_path):
+    """NaN and ±Infinity scores in stored views pass through a memoized
+    provide() unchanged, and the general views family survives
+    write_thrift_records -> decode."""
+    from curatorhadoopinterface_spark.io import write_thrift_records
+    from curatorhadoopinterface_spark.schema import RECORD
+    from curatorhadoopinterface_spark.thrift_codec import decode_thrift_record
+
+    rec = _nonfinite_record()
+    df = spark.createDataFrame([rec], RECORD)
+    views = ["label_views", "cluster_views", "parse_views", "views"]
+    out = provide(df, "TOKEN").select(*[F.to_json(c).alias(c) for c in views]).collect()[0]
+    assert out == df.select(*[F.to_json(c).alias(c) for c in views]).collect()[0]
+    assert '"NaN"' in out.parse_views and '"-Infinity"' in out.label_views
+
+    write_thrift_records(df, str(tmp_path))
+    back = decode_thrift_record((tmp_path / "nonfinite.txt").read_bytes())
+    assert _canon(back) == _canon(rec)
+
+
+@pytest.mark.parametrize(
+    "texts, best_effort",
+    [([], False), ([], True), ([""], False), (["   "], False), ([None], True)],
+    ids=["empty-strict", "empty-best-effort", "empty-text", "blank-text", "null-text-best-effort"],
+)
+def test_degenerate_inputs(spark, texts, best_effort):
+    """The worker boundary on degenerate inputs: no rows, empty and blank
+    texts (every view, possibly with no spans), a NULL text (empty views
+    and the error, under best_effort)."""
+    from curatorhadoopinterface_spark.plans.registry import MODES
+
+    df = spark.createDataFrame([(f"d{i}", t, False) for i, t in enumerate(texts)],
+                               "identifier string, raw_text string, whitespaced boolean")
+    rows = provide(df, list(MODES), best_effort=best_effort).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        if r.raw_text is None:
+            assert (r.label_views, r.cluster_views, r.parse_views) == ({}, {}, {})
+            assert r.annotation_error.startswith("TypeError")
+        else:
+            assert (len(r.label_views), len(r.cluster_views), len(r.parse_views)) == (6, 1, 5)

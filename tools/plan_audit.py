@@ -454,7 +454,7 @@ AUDITS: dict[str, dict] = {
     "agg_groupby": {"partial": True, "prune": ["l_comment", "l_partkey"]},
     # annotation surface: the per-doc stage must be ONE Arrow-batched
     # python node, not row-at-a-time (A7/A10 fusion)
-    "annotate_token_count": {"require": [r"MapInPandas|ArrowEvalPython"]},
+    "annotate_token_count": {"require": [r"MapInArrow|MapInPandas|ArrowEvalPython"]},
     "mm_decode_features": {"require": [r"MapInPandas|ArrowEvalPython"]},
     # one partition exchange serves the ranking window
     "win_rank": {"max_exchange": 1, "prune": ["c_name", "c_comment"]},
@@ -1336,6 +1336,24 @@ def audit(name: str, plan: str, spec: dict) -> list[str]:
     return problems
 
 
+def splice_sections(doc: str, fresh: str) -> str:
+    """``doc`` (PLANS.md) with each ``## name — …`` section of ``fresh``
+    put where ``doc``'s section of that name stands, and appended at the
+    end only when ``doc`` has none; ``doc``'s header and every other
+    section are kept as they are."""
+
+    def sections(text: str) -> tuple[str, dict[str, str]]:
+        head, *secs = re.split(r"(?m)^(?=## )", text)
+        return head, {
+            s.split(" — ", 1)[0]: s if s.endswith("\n\n") else s.rstrip("\n") + "\n\n"
+            for s in secs
+        }
+
+    head, old = sections(doc)
+    # a dict update keeps a replaced key where it stood
+    return (head + "".join({**old, **sections(fresh)[1]}.values())).rstrip("\n") + "\n"
+
+
 def main() -> None:
     # usage: plan_audit.py [sf_dir] [--append name ...]
     #   no names: full regeneration of PLANS.md (~20 min)
@@ -1389,7 +1407,7 @@ def main() -> None:
                 r"Scan parquet|PushedFilters|ReadSchema|BroadcastHashJoin|"
                 r"SortMergeJoin|ShuffledHashJoin|CartesianProduct|"
                 r"BroadcastNestedLoopJoin|HashAggregate|partial_|Exchange|"
-                r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|Window\b",
+                r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|Window\b",
                 ln,
             )
         ]
@@ -1398,29 +1416,11 @@ def main() -> None:
         lines.append("```")
         lines.append("")
         del scans
+    text = "\n".join(lines)
     if append_names:
-        # replace-or-append the audited sections in the existing file.
-        # Header boundary located by the first section marker (not a
-        # fixed line count) and names re.escape'd so a header-format
-        # change or a metacharacter in a name can't corrupt PLANS.md.
-        existing = open(os.path.join(ROOT, "PLANS.md")).read()
-        first = next(
-            (i for i, ln in enumerate(lines) if ln.startswith("## ")),
-            len(lines),
-        )
-        body = "\n".join(lines[first:])
-        for nm in append_names:
-            existing = re.sub(
-                rf"## {re.escape(nm)} — .*?(?=\n## |\Z)",
-                "",
-                existing,
-                flags=re.S,
-            )
-        with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
-            f.write(existing.rstrip("\n") + "\n\n" + body)
-    else:
-        with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
-            f.write("\n".join(lines))
+        text = splice_sections(open(os.path.join(ROOT, "PLANS.md")).read(), text)
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+        f.write(text)
     print(f"\n{failures} failing audits -> PLANS.md")
 
 

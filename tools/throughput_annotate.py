@@ -2,7 +2,7 @@
 docs/sec for the fused lightweight pipeline over the documents corpus —
 the engine's analogue of the reference's per-document reduce granularity
 (DirectoryInputFormat.java:17-19 one-task-per-doc; the engine instead
-streams Arrow batches through ONE mapInPandas stage).
+streams Arrow batches through ONE mapInArrow stage).
 
 Measures (best of N):
   - TOKEN→POS→NER (the reference's in-process trio, JobHandler stage
@@ -59,7 +59,7 @@ def main() -> None:
     print(f"sf_dir={sf_dir} docs={n_docs} chars={n_chars} runs={n_runs} (best)")
     print("| pipeline | docs | sec | docs/sec | MB/sec |")
     print("|---|---|---|---|---|")
-    timed("TOKEN->POS->NER (fused mapInPandas)", lambda: provide(docs, ["POS", "NER"]))
+    timed("TOKEN->POS->NER (fused mapInArrow)", lambda: provide(docs, ["POS", "NER"]))
     timed(
         "all 10 modes (one pass)",
         lambda: provide(

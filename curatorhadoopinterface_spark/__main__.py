@@ -114,51 +114,60 @@ def cmd_verify(args: argparse.Namespace) -> None:
 def cmd_compact(args: argparse.Namespace) -> None:
     """Record-store maintenance: rewrite every hash bucket to one
     size-packed file (the store_compaction op as a CLI — streaming
-    upserts and incremental runs leave per-batch small files behind)."""
+    upserts and incremental runs leave per-batch small files behind).
+    A RecordStore (``id_bucket=`` directories) is folded by
+    ``RecordStore.compact``, its update deltas included, one file per
+    bucket; other layouts are rewritten to ``--target-files`` files."""
     import glob
     import os
+    import shutil
 
+    from curatorhadoopinterface_spark.plans.incremental import RecordStore
     from curatorhadoopinterface_spark.session import get_spark
 
     spark = get_spark("cli-compact")
-    before = len(glob.glob(os.path.join(args.store, "*", "part-*")))
-    df = spark.read.parquet(args.store)
-    n_source = df.count()
+    store = args.store.rstrip("/")
+    staged = store + ".compacting"
+
+    def n_files(path: str) -> int:
+        return len(glob.glob(os.path.join(path, "**", "part-*"), recursive=True))
+
+    before = n_files(store)
     # the partition column names the store's name=value subdirectories
     # (RecordStore's id_bucket=, older __bucket= layouts); an
     # unpartitioned store gets a plain single-dir rewrite
     part_cols = sorted(
-        {d.split("=", 1)[0] for d in os.listdir(args.store) if "=" in d}
+        {d.split("=", 1)[0] for d in os.listdir(store) if "=" in d}
     )
     key = part_cols[0] if part_cols else None
-    staged = args.store.rstrip("/") + ".compacting"
-    w = df.repartition(args.target_files, key) if key else df.coalesce(
-        args.target_files
-    )
-    writer = w.write.mode("overwrite")
-    if key:
-        writer = writer.partitionBy(key)
-    writer.parquet(staged)
+    if key == "id_bucket":
+        source = RecordStore(spark, store)
+        n_source = source.load().count()
+        source.compact(staged)
+        n_staged = RecordStore(spark, staged).load().count()
+    else:
+        df = spark.read.parquet(store)
+        n_source = df.count()
+        w = df.repartition(args.target_files, key) if key else df.coalesce(args.target_files)
+        writer = w.write.mode("overwrite")
+        if key:
+            writer = writer.partitionBy(key)
+        writer.parquet(staged)
+        n_staged = spark.read.parquet(staged).count()
     # safety: never install a short staged write as truth, and never have
     # a moment where the canonical path is missing — validate row count,
     # swap via rename-aside, delete the old copy only after the swap.
-    n_staged = spark.read.parquet(staged).count()
     if n_staged != n_source:
         raise SystemExit(
             f"compaction aborted: staged store has {n_staged} rows, "
             f"source has {n_source}; staged copy left at {staged}"
         )
-    import shutil
-
-    old = args.store.rstrip("/") + ".old"
+    old = store + ".old"
     shutil.rmtree(old, ignore_errors=True)
-    os.rename(args.store, old)
-    os.rename(staged, args.store)
+    os.rename(store, old)
+    os.rename(staged, store)
     shutil.rmtree(old)
-    after = len(glob.glob(os.path.join(args.store, "*", "part-*"))) or len(
-        glob.glob(os.path.join(args.store, "part-*"))
-    )
-    print(f"compacted {args.store}: {before} -> {after} files")
+    print(f"compacted {store}: {before} -> {n_files(store)} files")
 
 
 def cmd_queries(_: argparse.Namespace) -> None:
@@ -212,7 +221,13 @@ def main(argv: list[str] | None = None) -> None:
         "compact", help="rewrite record-store buckets to size-packed files"
     )
     pc.add_argument("--store", required=True, help="record-store parquet dir")
-    pc.add_argument("--target-files", type=int, default=16)
+    pc.add_argument(
+        "--target-files",
+        type=int,
+        default=16,
+        help="files to write for a store that is not a RecordStore "
+        "(a RecordStore gets one file per bucket)",
+    )
     pc.set_defaults(fn=cmd_compact)
 
     args = p.parse_args(argv)

@@ -15,32 +15,51 @@ Reference semantics being reproduced:
 All staleness/cascade logic is pure JVM column expressions generated
 from the static mode registry — no Python round-trip.
 
-Scale: the store is Parquet partitioned by the first hex char of the
-SHA-1 identifier (16 uniform buckets; raise to 2 chars = 256 at real
-scale), one file per bucket. An update loads the store once: the
-batch's stored copies join onto the batch with their view count, so
-hits, misses and the merge decision come from one scan. That lookup is
+Scale: the store is a base plus a log of deltas (the log-structured
+merge of O'Neil et al., *The Log-Structured Merge-Tree*, 1996). The base
+is Parquet partitioned by the first hex char of the SHA-1 identifier (16
+uniform buckets; raise to 2 chars = 256 at real scale), one file per
+bucket. An update appends its winners, and only them, as one file under
+``_deltas/seq=N/``: it never reads or rewrites stored rows, so its write
+costs O(batch), not O(store). Spark's reads of the store root skip the
+``_`` directory, so the store lists the root and ``_deltas``
+recursively, without partition inference: base and deltas are one scan,
+each row's seq taken from its file's path. Reads merge on read: the
+newest copy of each identifier wins, base rows counting as seq 0. An
+update looks up only its batch's identifiers, so that resolution runs
+over batch-sized rows; the lookup joins every stored copy onto the
+batch and keeps the newest in the join's own partitioning, so hits,
+misses and the merge decision come from one scan and one join. It is
 checkpointed once; rows whose views already cover the request (cache
 hits) skip the Python worker, and only the rest go through
-``provide``. The merge rewrites only the buckets that hold a winner, in
-place, by a dynamic partition overwrite; a batch with no winner (all
-cache hits) runs no worker and writes nothing. This is the non-ACID but
-deterministic batch equivalent of the reference's DB upsert.
+``provide``. A batch with no winner (all cache hits) runs no worker and
+writes nothing. ``compact(path)`` folds the deltas into a new store,
+one file per bucket, for the caller to swap in (the CLI ``compact``);
+it is the only write that rewrites stored rows. Deltas are not folded
+on their own: a read costs more with each update since the last fold.
+This is the non-ACID but deterministic batch equivalent of the
+reference's DB upsert.
 """
 
 from __future__ import annotations
 
-import operator
-from functools import reduce
-
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql.types import StructType
 
 from curatorhadoopinterface_spark.plans.provide import VIEW_COLS, as_provided, complete_col, provide
 from curatorhadoopinterface_spark.plans.registry import MODES, VIEW_TO_MODE, invalidation_closure
 
 _BUCKET_COL = "id_bucket"
+#: the delta log's directory under the store root, and its partition
+#: column (the update sequence number)
+_DELTAS = "_deltas"
+_SEQ_COL = "seq"
+#: a row's seq, from the path of the file it was read from
+_SEQ_SQL = (
+    f"coalesce(cast(nullif(regexp_extract(_metadata.file_path, '/{_DELTAS}/{_SEQ_COL}=([0-9]+)/', 1), '')"
+    " as int), 0)"
+)
 
 
 def _sql_map(pairs: dict[str, str]) -> str:
@@ -125,7 +144,7 @@ def view_count_col(df: DataFrame) -> Column:
 def _columns(schema: StructType) -> set[tuple[str, str]]:
     """(name, type) of each stored column, nullability aside: parquet
     reads every column back as nullable, and resolves columns by name."""
-    return {(f.name, f.dataType.simpleString()) for f in schema.fields if f.name != _BUCKET_COL}
+    return {(f.name, f.dataType.simpleString()) for f in schema.fields}
 
 
 def _wins(records: DataFrame, force: bool) -> Column:
@@ -134,74 +153,133 @@ def _wins(records: DataFrame, force: bool) -> Column:
     return F.lit(force) | (view_count_col(records) > F.col("__n_old"))
 
 
-def _winner_buckets(records: DataFrame, force: bool) -> Column:
-    """The aggregate over ``records`` that ``_merge`` needs: the set of
-    the winners' bucket chars (at most 16)."""
-    win = _wins(records, force)
-    return F.collect_set(F.when(win, F.substring("identifier", 1, 1))).alias("buckets")
+def _newest(df: DataFrame) -> DataFrame:
+    """The row of each identifier with the highest ``seq``: a record's
+    newest copy, base rows counting as seq 0 (``seq`` is dropped)."""
+    rank = F.row_number().over(Window.partitionBy("identifier").orderBy(F.desc(_SEQ_COL)))
+    return df.withColumn("__rank", rank).where("__rank = 1").drop("__rank", _SEQ_COL)
 
 
 class RecordStore:
     """Content-hash-keyed Parquet archive of annotated Records (the
-    Curator archive, A21), with hash-bucket partitioning."""
+    Curator archive, A21): a hash-bucketed base plus an append-only log
+    of update deltas, resolved on read."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        #: the store's schema (bucket column included) as this handle
-        #: last read or wrote it, and the data files it held then; the
-        #: schema is None until the first read and after a write that
-        #: changed the columns
-        self._schema: StructType | None = None
-        self._files_seen: frozenset = frozenset()
+        #: the store's data files as this handle last read or wrote them,
+        #: and their merged schema; None until the first read and after
+        #: a write that changed the columns
+        self._seen: tuple[frozenset, StructType] | None = None
+
+    def _glob(self, pattern: str) -> list:
+        """Hadoop FileStatus of each path under the store matching
+        ``pattern``: no Spark job."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.path}/{pattern}")
+        return list(path.getFileSystem(self.spark._jsc.hadoopConfiguration()).globStatus(path) or [])
 
     def _files(self) -> frozenset:
-        """(path, mtime, size) of each data file in the store: one glob,
-        no Spark job. Spark names every file it writes uniquely, so a
-        rewrite by any handle or process changes this set."""
-        glob = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.path}/*/*.parquet")
-        fs = glob.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return frozenset(
-            (s.getPath().toString(), s.getModificationTime(), s.getLen())
-            for s in fs.globStatus(glob) or []
-        )
+        """(path, mtime, size) of each data file, base and deltas. Spark
+        names every file it writes uniquely, so a write by any handle or
+        process changes this set."""
+        out = self._glob("*/*.parquet") + self._glob(f"{_DELTAS}/{_SEQ_COL}=*/*.parquet")
+        return frozenset((s.getPath().toString(), s.getModificationTime(), s.getLen()) for s in out)
+
+    def _next_seq(self) -> int:
+        """1 + the highest seq directory under ``_deltas``. Directories
+        are counted, not data files, so a seq a failed write left with no
+        data file is skipped, not picked again."""
+        seqs = [s.getPath().getName()[len(_SEQ_COL) + 1 :] for s in self._glob(f"{_DELTAS}/{_SEQ_COL}=*")]
+        return 1 + max((int(n) for n in seqs if n.isdigit()), default=0)
+
+    def _read(self, files: frozenset, deltas: bool | None = None) -> DataFrame | None:
+        """The rows of the store's data files ``files`` (only the delta
+        files, or only the base files, when ``deltas`` says so), each
+        with its ``seq``: its delta's number, 0 for a base row (a
+        base-only read has no ``seq``). None when there is no such file.
+        The root and ``_deltas`` are listed recursively without
+        partition inference (the root's listing
+        skips ``_deltas``), so base and deltas are one scan with one
+        plan shape whether or not the store holds deltas. While the
+        store holds the files this handle last saw, the read reuses
+        their schema and skips parquet schema inference (a job per
+        read). Otherwise, as after another handle's write, inference
+        merges every file's footer, so a column that only some files
+        carry is not lost."""
+        held = {f"/{_DELTAS}/" in p for p, _, _ in files}
+        roots = {False: self.path, True: f"{self.path}/{_DELTAS}"}
+        paths = [roots[d] for d in sorted(held) if deltas in (None, d)]
+        if not paths:
+            return None
+        if self._seen is None or self._seen[0] != files:
+            merged = self.spark.read.options(recursiveFileLookup="true", mergeSchema="true")
+            self._seen = (files, merged.parquet(*(roots[d] for d in sorted(held))).schema)
+        df = self.spark.read.option("recursiveFileLookup", "true").schema(self._seen[1]).parquet(*paths)
+        return df if deltas is False else df.withColumn(_SEQ_COL, F.expr(_SEQ_SQL))
+
+    def _copies(self, files: frozenset, ids: DataFrame) -> DataFrame | None:
+        """Every stored copy of ``ids``' identifiers with its ``seq``. An
+        update joins these onto its batch, which is hash-partitioned by
+        identifier, and keeps the newest per row with ``_newest`` in that
+        partitioning: resolution runs over batch-sized rows and adds no
+        exchange to the lookup."""
+        copies = self._read(files)
+        return None if copies is None else copies.join(ids, "identifier", "left_semi")
 
     def load(self) -> DataFrame | None:
-        """The stored records. While the store holds the files this
-        handle last saw, the read reuses their schema and skips parquet
-        schema inference (a job per load). Otherwise, as after another
-        handle's write, inference merges every file's footer, so a
-        column that only some buckets carry is not lost."""
+        """The stored records, newest copy of each, or None for an empty
+        store. Base rows whose identifier has a delta copy drop out by an
+        anti-join against the deltas' identifiers, which the planner
+        broadcasts while they are small, so no base row crosses an
+        exchange; only delta rows are shuffled, to rank each identifier's
+        copies. A store with no delta file reads as its base."""
         files = self._files()
-        reader = self.spark.read
-        if self._schema is not None and files == self._files_seen:
-            reader = reader.schema(self._schema)
-        else:
-            reader = reader.option("mergeSchema", "true")
-        try:
-            df = reader.parquet(self.path)
-        except Exception:
-            return None
-        self._schema, self._files_seen = df.schema, files
-        return df.drop(_BUCKET_COL)
-
-    def _write(self, df: DataFrame, overwrite_mode: str) -> None:
-        """Write ``df`` one file per bucket: each bucket's rows shuffle
-        to one writer task. The known schema survives a write with the
-        same columns; the files it is valid for are listed again."""
-        keep = self._schema is not None and _columns(self._schema) == _columns(df.schema)
-        df.withColumn(_BUCKET_COL, F.substring("identifier", 1, 1)).repartition(
-            _BUCKET_COL
-        ).write.mode("overwrite").option("partitionOverwriteMode", overwrite_mode).partitionBy(
-            _BUCKET_COL
-        ).parquet(self.path)
-        if keep:
-            self._files_seen = self._files()
-        else:
-            self._schema = None
+        base, deltas = self._read(files, deltas=False), self._read(files, deltas=True)
+        if deltas is None:
+            return base
+        latest = _newest(deltas)
+        if base is None:
+            return latest
+        return base.join(deltas.select("identifier"), "identifier", "left_anti").unionByName(latest)
 
     def write_full(self, df: DataFrame) -> None:
-        self._write(df, "static")
+        """Replace the whole store, its deltas included, by ``df``, one
+        file per bucket: each bucket's rows shuffle to one writer task.
+        The known schema survives a write with the same columns; the
+        files it is valid for are listed again."""
+        seen, self._seen = self._seen, None
+        df.withColumn(_BUCKET_COL, F.substring("identifier", 1, 1)).repartition(
+            _BUCKET_COL
+        ).write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
+            _BUCKET_COL
+        ).parquet(self.path)
+        if seen is not None and _columns(seen[1]) == _columns(df.schema):
+            self._seen = (self._files(), seen[1])
+
+    def compact(self, path: str) -> None:
+        """Write the store's resolved records to ``path`` as a new store,
+        one file per bucket, and leave this one as it is: the fold of the
+        deltas into the base, and the only write that rewrites stored
+        rows. The caller swaps the new store in (the CLI ``compact``)."""
+        resolved = self.load()
+        if resolved is None:
+            return
+        # Scoped heap guard for the rewrite: annotated Records are WIDE
+        # (every token a span struct), and the default 4096-row
+        # vectorized reader batch x 32 concurrent local tasks
+        # intermittently heap-OOMs an 8g JVM at sf10 (500k records).
+        # 512-row batches bound the in-flight columnar buffers ~8x;
+        # restored after the rewrite so narrow scans elsewhere keep the
+        # default. On a real cluster each executor holds a slice and
+        # the default is fine — this is the local[32] single-JVM knob.
+        bs_key = "spark.sql.parquet.columnarReaderBatchSize"
+        bs_old = self.spark.conf.get(bs_key, "4096")
+        self.spark.conf.set(bs_key, "512")
+        try:
+            RecordStore(self.spark, path).write_full(resolved)
+        finally:
+            self.spark.conf.set(bs_key, bs_old)
 
     def _dedup(self, records: DataFrame) -> DataFrame:
         """One row per identifier. AQE does not coalesce an explicit
@@ -211,57 +289,44 @@ class RecordStore:
 
     def upsert(self, records: DataFrame, force: bool = False) -> None:
         """A18: replace a stored record only if the new copy has MORE
-        views; insert unseen records.
+        views; insert unseen records. The winners are appended to the
+        store as one delta (``_merge``); no stored row is rewritten.
 
         ``force=True`` (the forceUpdate path): a freshly recomputed record
         has the SAME view count as its cached copy, so the count rule
         would keep the stale one — prefer the new copy whenever present.
         """
         records = self._dedup(records)
-        stored = self.load()
-        if stored is None:
+        files, seq = self._files(), self._next_seq()
+        copies = self._copies(files, records.select("identifier"))
+        if copies is None:
             self.write_full(records)
             return
-        n_old = stored.select("identifier", view_count_col(stored).alias("__n_old"))
-        records = records.join(n_old, "identifier", "left").select(
-            *records.columns, F.coalesce("__n_old", F.lit(-1)).alias("__n_old")
-        )
-        buckets = records.agg(_winner_buckets(records, force)).first()["buckets"]
-        self._merge(records, stored, force, buckets)
+        n_old = copies.select("identifier", _SEQ_COL, view_count_col(copies).alias("__n_old"))
+        looked_up = _newest(records.join(n_old, "identifier", "left"))
+        records = looked_up.select(*records.columns, F.coalesce("__n_old", F.lit(-1)).alias("__n_old"))
+        self._merge(records, force, files, seq)
 
-    def _merge(self, records: DataFrame, stored: DataFrame, force: bool, buckets: list[str]) -> None:
+    def _merge(self, records: DataFrame, force: bool, files: frozenset, seq: int) -> DataFrame:
         """Store the winners of ``records``, which carry their stored
-        copy's view count as ``__n_old`` (-1 when unseen). ``buckets``
-        is ``_winner_buckets`` over ``records``; ``provide_incremental``
-        gathers it in its annotate job.
-
-        Only buckets holding a winner are rewritten, as their old rows
-        minus the winners plus the winners. The overwrite reads the files
-        it replaces: the commit protocol stages task output and swaps the
-        partitions at job commit, after every task has read.
-        """
-        if not buckets:
-            return
-        winners = records.where(_wins(records, force)).drop("__n_old")
-        # startswith pushes down to the parquet reader, which skips the
-        # untouched buckets' row groups on their min/max statistics
-        touched = reduce(operator.or_, [F.col("identifier").startswith(b) for b in sorted(buckets)])
-        kept = stored.where(touched).join(winners.select("identifier"), "identifier", "left_anti")
-        # Scoped heap guard for the write: annotated Records are WIDE
-        # (every token a span struct), and the default 4096-row
-        # vectorized reader batch x 32 concurrent local tasks
-        # intermittently heap-OOMs an 8g JVM at sf10 (500k records).
-        # 512-row batches bound the in-flight columnar buffers ~8x;
-        # restored after the merge so narrow scans elsewhere keep the
-        # default. On a real cluster each executor holds a slice and
-        # the default is fine — this is the local[32] single-JVM knob.
-        bs_key = "spark.sql.parquet.columnarReaderBatchSize"
-        bs_old = self.spark.conf.get(bs_key, "4096")
-        self.spark.conf.set(bs_key, "512")
-        try:
-            self._write(winners.unionByName(kept, allowMissingColumns=True), "dynamic")
-        finally:
-            self.spark.conf.set(bs_key, bs_old)
+        copy's view count as ``__n_old`` (-1 when unseen), and return
+        ``records`` checkpointed. The checkpoint job counts the winners.
+        When there are any, they are written as one file of delta
+        ``seq``, taken by ``_next_seq`` when the update's lookup listed
+        ``files``. The write fails if that seq exists, so two writers
+        that pick the same one never mix their files. Stored rows are
+        neither read nor rewritten: the newer copy wins on read."""
+        wins = _wins(records, force)
+        stats = Observation()
+        records = records.observe(stats, F.count_if(wins).alias("winners")).localCheckpoint(eager=True)
+        if not stats.get["winners"]:
+            return records
+        seen, self._seen = self._seen, None
+        winners = records.where(wins).drop("__n_old")
+        winners.coalesce(1).write.mode("errorifexists").parquet(f"{self.path}/{_DELTAS}/{_SEQ_COL}={seq}")
+        if seen is not None and seen[0] == files and _columns(seen[1]) == _columns(winners.schema):
+            self._seen = (self._files(), seen[1])
+        return records
 
     def provide_incremental(
         self,
@@ -288,31 +353,34 @@ class RecordStore:
         """
         kw = dict(force=force, force_start=force_start, best_effort=best_effort)
         batch = self._dedup(new_records)
-        stored = self.load()
-        if stored is None:
+        files, seq = self._files(), self._next_seq()
+        # every stored copy of the batch's identifiers
+        copies = self._copies(files, new_records.select("identifier"))
+        if copies is None:
             annotated = provide(batch, target, **kw)
             self.write_full(annotated)
             return annotated
-        # the batch's stored copies (the semi-join streams the store),
         # with the raw copy's view count and stale views invalidated
-        copies = stored.join(new_records.select("identifier"), "identifier", "left_semi")
         old = remove_stale_views(copies.withColumn("__n_old", view_count_col(copies)))
-        hit = F.col("s.identifier").isNotNull()
 
-        def pick(c: str) -> Column:
+        def pick(c: str) -> str:
             """Hits take the stored value, misses the batch value; NULL
             where the column is missing on that side."""
-            s = F.col(f"s.{c}") if c in stored.columns else F.lit(None)
-            b = F.col(f"b.{c}") if c in batch.columns else F.lit(None)
-            return F.when(hit, s).otherwise(b).alias(c)
+            s = f"s.`{c}`" if c in copies.columns else "NULL"
+            b = f"b.`{c}`" if c in batch.columns else "NULL"
+            return f"IF(s.identifier IS NOT NULL, {s}, {b}) AS `{c}`"
 
-        names = batch.columns + [c for c in stored.columns if c not in batch.columns]
-        fused = batch.alias("b").join(
-            old.alias("s"), F.col("b.identifier") == F.col("s.identifier"), "left"
-        ).select(
-            "b.identifier",
-            *[pick(c) for c in names if c != "identifier"],
-            F.coalesce("s.__n_old", F.lit(-1)).alias("__n_old"),
+        # one SQL text parsed JVM-side, as in _stale_views_sql; each
+        # batch row keeps its newest stored copy
+        names = batch.columns + [c for c in copies.columns if c not in (*batch.columns, _SEQ_COL)]
+        joined = batch.alias("b").join(old.alias("s"), F.col("b.identifier") == F.col("s.identifier"), "left")
+        fused = _newest(
+            joined.selectExpr(
+                "b.identifier",
+                *[pick(c) for c in names if c != "identifier"],
+                "coalesce(s.__n_old, -1) AS __n_old",
+                f"s.{_SEQ_COL}",
+            )
         )
         forced = force or force_start is not None
         if forced:
@@ -341,10 +409,4 @@ class RecordStore:
             if counts["todo"] > 0:
                 todo = looked_up.where(~F.col("__complete")).drop("__complete")
                 annotated = provide(todo, target, **kw).unionByName(annotated)
-        # the winners' buckets ride the annotate job
-        stats = Observation()
-        annotated = annotated.observe(stats, _winner_buckets(annotated, forced)).localCheckpoint(
-            eager=True
-        )
-        self._merge(annotated, stored, forced, stats.get["buckets"])
-        return annotated.drop("__n_old")
+        return self._merge(annotated, forced, files, seq).drop("__n_old")

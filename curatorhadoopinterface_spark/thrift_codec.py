@@ -223,7 +223,7 @@ def _walkers(dt):
         fields[head] = (f.name, r)
         always = not f.nullable or t == T_LIST or f.name in _WIRE_MAPS
         zero = [] if t == T_LIST else {} if t == T_MAP else _ZERO.get(t)
-        spec.append((f.name, head, w, always, zero, t == T_MAP))
+        spec.append((f.name, head, w, always, zero))
     lists = [f.name for f in dt.fields if isinstance(f.dataType, ArrayType)]
     bools = [f.name for f in dt.fields if isinstance(f.dataType, BooleanType)]
     wire_maps = [n for n in names if n in _WIRE_MAPS]
@@ -246,9 +246,9 @@ def _walkers(dt):
         return out, o + 1
 
     def write_struct(buf, v):
-        for name, head, w, always, zero, is_map in spec:
+        for name, head, w, always, zero in spec:
             x = v.get(name)
-            if x is None or (is_map and not x):
+            if x is None:
                 if not always:
                     continue
                 x = zero

@@ -124,3 +124,37 @@ def test_cli_compact_keeps_record_store_buckets(spark, tmp_path, capsys):
     assert dirs and not glob.glob(f"{path}/*.parquet")
     for d in dirs:
         assert len(glob.glob(f"{d}*.parquet")) == 1, d
+
+
+def test_cli_compact_folds_record_store_deltas(spark, tmp_path, capsys):
+    """The CLI compaction of a RecordStore keeps every update since the
+    last fold: the resolved store is unchanged, no delta is left, and
+    each bucket holds one file."""
+    import glob
+    import os
+
+    from curatorhadoopinterface_spark.io import records_from_texts
+    from curatorhadoopinterface_spark.plans.incremental import RecordStore
+
+    path = str(tmp_path / "store")
+    docs = records_from_texts(
+        spark, [f"Document {i} says topic {i % 7} matters." for i in range(40)]
+    )
+    store = RecordStore(spark, path)
+    store.provide_incremental(docs.limit(20), "TOKEN")
+    store.provide_incremental(docs, "TOKEN")
+    store.provide_incremental(docs.limit(10), "POS")
+    assert os.path.isdir(f"{path}/_deltas")
+
+    def rows():
+        return sorted(str(sorted(r.asDict(recursive=True).items())) for r in store.load().collect())
+
+    before = rows()
+    main(["compact", "--store", path, "--target-files", "4"])
+    assert "compacted" in capsys.readouterr().out
+    assert rows() == before and len(before) == 40
+    assert not os.path.exists(f"{path}/_deltas")
+    dirs = glob.glob(f"{path}/id_bucket=*/")
+    assert dirs
+    for d in dirs:
+        assert len(glob.glob(f"{d}*.parquet")) == 1, d

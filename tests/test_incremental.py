@@ -129,7 +129,8 @@ def _store_files(path):
     for base, _, files in os.walk(path):
         for f in files:
             p = os.path.join(base, f)
-            out[os.path.relpath(p, path)] = os.stat(p).st_mtime_ns
+            st = os.stat(p)
+            out[os.path.relpath(p, path)] = (st.st_mtime_ns, st.st_size)
     return out
 
 
@@ -328,3 +329,116 @@ def test_empty_batch_update_returns_nothing_and_writes_nothing(spark, corpus, st
     assert store.provide_incremental(corpus.limit(0), "POS").count() == 0
     assert store.provide_incremental(corpus.limit(0), "POS", force=True).count() == 0
     assert _store_files(store_path) == before
+
+
+def _bucket_files(path):
+    import glob
+
+    return {d: glob.glob(f"{d}/*.parquet") for d in glob.glob(f"{path}/id_bucket=*")}
+
+
+def _rows(df):
+    return sorted(
+        (r.identifier, str(sorted(r.asDict(recursive=True).items()))) for r in df.collect()
+    )
+
+
+def test_updates_append_deltas_and_the_newest_copy_wins(spark, corpus, store_path):
+    """An update appends its winners under _deltas/seq=N and leaves the
+    base files as they were; a later, richer copy of a record wins on
+    read; compact(path) folds the deltas into a new store, one file per
+    bucket, and leaves the store as it is."""
+    import os
+
+    store = RecordStore(spark, store_path)
+    store.write_full(provide(corpus, "TOKEN"))
+    base = _bucket_files(store_path)
+    new = records_from_texts(spark, ["A brand new document arrives.", "And one more."])
+    store.provide_incremental(new, "TOKEN")
+    store.provide_incremental(corpus.unionByName(new, allowMissingColumns=True), "POS")
+    assert sorted(os.listdir(f"{store_path}/_deltas")) == ["seq=1", "seq=2"]
+    assert _bucket_files(store_path) == base
+    loaded = store.load()
+    n = corpus.count() + 2
+    assert loaded.count() == loaded.select("identifier").distinct().count() == n
+    assert all("pos" in r.label_views for r in loaded.collect())
+    before = _rows(loaded)
+    folded = store_path + "_folded"
+    store.compact(folded)
+    assert not os.path.exists(f"{folded}/_deltas")
+    assert all(len(files) == 1 for files in _bucket_files(folded).values())
+    assert _rows(RecordStore(spark, folded).load()) == before
+    assert sorted(os.listdir(f"{store_path}/_deltas")) == ["seq=1", "seq=2"]
+    assert _rows(store.load()) == before
+
+
+def test_an_update_skips_a_seq_a_failed_write_left(spark, corpus, store_path):
+    """A delta write that died leaves its seq directory with no data
+    file; the next update takes the seq after it and still appends."""
+    import os
+
+    store = RecordStore(spark, store_path)
+    store.write_full(provide(corpus, "TOKEN"))
+    store.provide_incremental(records_from_texts(spark, ["A first new document."]), "TOKEN")
+    os.makedirs(f"{store_path}/_deltas/seq=2/_temporary/0")
+    new = records_from_texts(spark, ["A second new document."])
+    store.provide_incremental(new, "TOKEN")
+    assert sorted(os.listdir(f"{store_path}/_deltas")) == ["seq=1", "seq=2", "seq=3"]
+    (ident,) = [r.identifier for r in new.collect()]
+    assert store.load().where(F.col("identifier") == ident).count() == 1
+    assert store.load().count() == corpus.count() + 2
+
+
+def test_write_full_clears_the_deltas(spark, corpus, store_path):
+    import os
+
+    store = RecordStore(spark, store_path)
+    store.write_full(provide(corpus.limit(1), "TOKEN"))
+    store.provide_incremental(corpus, "TOKEN")
+    store.provide_incremental(corpus, "POS")
+    assert os.path.isdir(f"{store_path}/_deltas")
+    df = provide(corpus.limit(2), "TOKEN").localCheckpoint(eager=True)
+    store.write_full(df)
+    assert not os.path.exists(f"{store_path}/_deltas")
+    assert _rows(store.load()) == _rows(df)
+
+
+def test_another_handles_append_invalidates_the_cached_schema(spark, corpus, store_path):
+    """A handle's cached schema is checked against the delta files too:
+    another handle's append with a new column is read back."""
+    a = RecordStore(spark, store_path)
+    a.write_full(provide(corpus, "TOKEN"))
+    a.provide_incremental(records_from_texts(spark, ["One new document."]), "TOKEN")
+    assert "lang" not in a.load().columns
+    one = provide(corpus.limit(1), "POS").withColumn("lang", F.lit("en"))
+    RecordStore(spark, store_path).upsert(one)
+    langs = {r.identifier: r.lang for r in a.load().collect()}
+    (ident,) = [r.identifier for r in one.collect()]
+    assert langs.pop(ident) == "en"
+    assert len(langs) == corpus.count() and set(langs.values()) == {None}
+
+
+def test_update_bytes_do_not_grow_with_the_store(spark, tmp_path):
+    """A 40-document miss update writes about the same bytes into a
+    160-record and a 1,600-record store: only the batch's winners."""
+    import random
+    import string
+
+    rng = random.Random(7)
+    words = ["".join(rng.choices(string.ascii_lowercase, k=rng.randint(2, 9))) for _ in range(500)]
+
+    def texts(n):
+        return [" ".join(rng.choices(words, k=rng.randint(20, 60))).capitalize() + "." for _ in range(n)]
+
+    stored = texts(1600)
+    batch = records_from_texts(spark, texts(40))
+    written = []
+    for n in (160, 1600):
+        path = str(tmp_path / f"store{n}")
+        store = RecordStore(spark, path)
+        store.write_full(provide(records_from_texts(spark, stored[:n]), "POS"))
+        before = _store_files(path)
+        store.provide_incremental(batch, "POS")
+        after = _store_files(path)
+        written.append(sum(v[1] for p, v in after.items() if before.get(p) != v))
+    assert 0 < written[1] <= 1.5 * written[0], written

@@ -136,10 +136,10 @@ _CLUSTERS = st.lists(st.builds(lambda spans: {"labels": spans}, _SPANS), max_siz
 
 _NODES = st.lists(
     st.builds(
-        lambda label, span, children: {"label": label, "span": span, "children": children or None},
+        lambda label, span, children: {"label": label, "span": span, "children": children},
         st.one_of(st.none(), TEXTS),
         st.one_of(st.none(), _SPAN),
-        st.dictionaries(st.integers(0, 9), TEXTS, max_size=3),
+        st.one_of(st.none(), st.dictionaries(st.integers(0, 9), TEXTS, max_size=3)),
     ),
     max_size=4,
 )

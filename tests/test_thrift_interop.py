@@ -317,6 +317,31 @@ def test_general_views_survive_codec_and_spark_roundtrip(spark, tmp_path):
     assert back == rec
 
 
+def test_empty_optional_maps_survive_codec_and_spark_roundtrip(spark, tmp_path):
+    """``Span.attributes = {}`` and ``Node.children = {}`` are written
+    as empty maps: they read back as {}, through the codec and through
+    ``write_thrift_records``."""
+    import copy
+
+    from curatorhadoopinterface_spark.io import write_thrift_records
+    from curatorhadoopinterface_spark.schema import RECORD
+    from curatorhadoopinterface_spark.thrift_codec import (
+        decode_thrift_record,
+        encode_thrift_record,
+    )
+
+    rec = copy.deepcopy(_GOLDEN_RECORD)
+    rec["label_views"]["tokens"]["labels"][1]["attributes"] = {}
+    rec["parse_views"]["parse"]["trees"][0]["nodes"][1]["children"] = {}
+    back = decode_thrift_record(encode_thrift_record(rec))
+    assert back["label_views"]["tokens"]["labels"][1]["attributes"] == {}
+    assert back["parse_views"]["parse"]["trees"][0]["nodes"][1]["children"] == {}
+    assert back == rec
+
+    write_thrift_records(spark.createDataFrame([rec], RECORD), str(tmp_path / "out"))
+    assert decode_thrift_record((tmp_path / "out" / "golden-1.txt").read_bytes()) == rec
+
+
 def test_golden_wire_bytes():
     """The encoder's bytes are pinned: SHA-256 of one Record that fills
     all four view families and of the MultiRecord fixture."""
@@ -334,13 +359,14 @@ def test_golden_wire_bytes():
         "8fd3afa82245bb35a214f679c3114cda730393bc5a9bed314b8a5df30c5a17d9"
     )
     assert decode_thrift_record(blob) == _GOLDEN_RECORD
-    # an empty optional map is not written ({} encodes like None), and a
-    # None list is written empty
+    # a None list is written empty; an empty optional map is written
+    # (it reads back as {}, not as None)
     empties = copy.deepcopy(_GOLDEN_RECORD)
     empties["label_views"]["empty"]["labels"] = None
+    assert encode_thrift_record(empties) == blob
     empties["label_views"]["tokens"]["labels"][1]["attributes"] = {}
     empties["parse_views"]["parse"]["trees"][0]["nodes"][1]["children"] = {}
-    assert encode_thrift_record(empties) == blob
+    assert encode_thrift_record(empties) != blob
     assert hashlib.sha256(encode_thrift_multirecord(_MULTIRECORD)).hexdigest() == (
         "12a8696b0efa03b2f78b5f2ebaeab9da20c52334b7b12452a27e8bfabe0ac5e8"
     )
